@@ -337,12 +337,8 @@ def _bench_streaming(spark, sf_dir: str) -> dict:
         )
         n = msgs.count()
         msgs.repartition(64).write.parquet(src)
-        # DEFAULT topology (run_all = single-pass: one source scan per
-        # trigger feeding all five tables + side output) is the headline.
-        # The five-query compatibility topology (run_all_multi_query) is
-        # NOT benched: it pays 5x source scans by construction and is
-        # compat-only (watermarked state bounding) — see COVERAGE.md; its
-        # replay-idempotence stays pytest-covered.
+        # run_all: one source scan per trigger feeding all five tables
+        # + side output into the parquet stores
         runs: list[dict] = []
         for i in range(2):
             out = os.path.join(tmp, f"out{i}")
@@ -397,13 +393,14 @@ def _bench_streaming(spark, sf_dir: str) -> dict:
 def _isolated_merge_floor(spark, src: str, out_dir: str) -> dict:
     """Re-run ONE representative trigger's table merges one-at-a-time
     against the finished stores — no thread pool, no sibling merges
-    sharing the 32 cores — and report each table's isolated merge wall.
-    Runs pipeline.merge_once, the SAME unit the contended sink runs per
-    table, with the batch and the shared emote-occurrence extraction
-    persisted AND materialized up front (in the contended sink they are
-    computed once per trigger and shared), so the measured span is
-    agg + totals-union + journaled additive merge — the identical code
-    path merge_breakdown times.
+    sharing the cores — and report each table's isolated merge wall.
+    The trigger is prepared by pipeline.prepare_trigger and each table
+    merged by pipeline.merge_once, the SAME units the contended sink
+    runs, with the batch and the shared emote-occurrence extraction
+    materialized up front (in the contended sink they are computed
+    once per trigger and shared), so the measured span is agg +
+    totals-union + journaled additive merge — the identical code path
+    merge_breakdown times.
 
     Caveat (by construction): the floor merges into the FINISHED
     stores, while the contended p50 averages mid-run merges against
@@ -413,10 +410,7 @@ def _isolated_merge_floor(spark, src: str, out_dir: str) -> dict:
     future table's store grows materially across the run, read the
     ratio against store_bytes_final before attributing it to the
     scheduler."""
-    from pyspark.sql import functions as F
-
     from twitch_chat_analyser_spark import dims
-    from twitch_chat_analyser_spark.operators import aggregations as agg
     from twitch_chat_analyser_spark.streaming import pipeline as sp
 
     files = sorted(
@@ -424,61 +418,24 @@ def _isolated_merge_floor(spark, src: str, out_dir: str) -> dict:
         for f in os.listdir(src)
         if f.endswith(".parquet")
     )[:8]  # one trigger's worth (maxFilesPerTrigger=8 of 64)
-    batch_df = spark.read.parquet(*files).persist()
-    batch_df.count()
-    span = batch_df.agg(
-        F.min(F.unix_millis("ts")).alias("min_ms"),
-        F.max(F.unix_millis("ts")).alias("max_ms"),
-    ).first()
-    hint = [0] + list(range(
-        int(span["min_ms"] // sp.DAY_MS),
-        int(span["max_ms"] // sp.DAY_MS) + 2,
-    ))
-    emotes = dims.emotes_df(spark)
-    occ = agg.emote_occurrences(batch_df, emotes).persist()
-    occ.count()
-    shared = {
-        "emote_stats": lambda: agg.emote_stats_from_occurrences(occ),
-        "user_emote_stats": (
-            lambda: agg.user_emote_stats_from_occurrences(occ)
-        ),
-    }
+    pipelines = sp.default_pipelines(spark)
+    trig = sp.prepare_trigger(
+        spark.read.parquet(*files), out_dir, pipelines, dims.emotes_df(spark)
+    )
+    trig.occurrences.count()
     floor: dict[str, float] = {}
     # same trigger-sized shuffle parallelism as the contended sink, so
     # the isolated/contended comparison isolates CONTENTION only
-    pipelines = sp.default_pipelines(spark)
-    store_b = max(
-        (
-            sp._store_bytes(os.path.join(out_dir, p.name))
-            for p in pipelines
-        ),
-        default=0,
-    )
-    any_bucketed = any(
-        os.path.isdir(os.path.join(out_dir, p.name))
-        and any(
-            e.startswith("bucket=")
-            for e in os.listdir(os.path.join(out_dir, p.name))
-        )
-        for p in pipelines
-    )
     old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(sp.trigger_shuffle_partitions(spark, batch_df.count(), store_b)),
-    )
+    spark.conf.set("spark.sql.shuffle.partitions", str(trig.shuffle_partitions))
     try:
         for i, p in enumerate(pipelines):
             t0 = time.time()
-            sp.merge_once(
-                spark, out_dir, p, batch_df, shared,
-                hint if any_bucketed else None, 10_000 + i,
-            )
+            sp.merge_once(spark, out_dir, p, trig, 10_000 + i)
             floor[p.name] = round(time.time() - t0, 3)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-        occ.unpersist()
-        batch_df.unpersist()
+        trig.release()
     return floor
 
 
@@ -550,12 +507,14 @@ def _sqlite_wal_connect(db: str, timeout: float):
 
 
 def _bench_streaming_jdbc(spark, sf_dir: str) -> dict:
-    """Write-path throughput THROUGH the SQL upsert sink: one streaming
-    query, each micro-batch fanned into all five fact aggregations and
-    written by JdbcSink's executor-side foreachPartition writer into a
-    SQLite database (qmark paramstyle; additive mode with the replay
-    ledger — the full exactly-once discipline the reference's
-    XAPostgresSink applies per batch)."""
+    """Write-path throughput THROUGH the SQL upsert sink: ``run_all``
+    with one JdbcSink per fact table as its writer, so each micro-batch
+    is fanned into all five fact aggregations plus their ``timestamp =
+    0`` totals and written by JdbcSink's executor-side foreachPartition
+    writer into a SQLite database (qmark paramstyle; the replay ledger
+    — the full exactly-once discipline the reference's XAPostgresSink
+    applies per batch). The side output lands as parquet, as on the
+    parquet twin."""
     import functools
     import shutil
     import sqlite3
@@ -583,12 +542,6 @@ def _bench_streaming_jdbc(spark, sf_dir: str) -> dict:
         # which jdbc_upsert_breakdown now makes visible per table).
         base.repartition(16).write.parquet(src)
 
-        from twitch_chat_analyser_spark import dims
-        from twitch_chat_analyser_spark.operators import aggregations as agg
-
-        emotes = dims.emotes_df(spark)
-        pipelines = sp.default_pipelines(spark)
-
         def one_run(i: int) -> dict:
             db = os.path.join(tmp, f"facts{i}.db")
             conn = sqlite3.connect(db)
@@ -603,10 +556,8 @@ def _bench_streaming_jdbc(spark, sf_dir: str) -> dict:
             factory = functools.partial(_sqlite_wal_connect, db, 30.0)
             sc = spark.sparkContext
             accs = {
-                p.name: (
-                    sc.accumulator(0), sc.accumulator(0), sc.accumulator(0)
-                )
-                for p in pipelines
+                t: (sc.accumulator(0), sc.accumulator(0), sc.accumulator(0))
+                for t in sj.FACT_TABLES
             }
             # executemany batch + writer partitions per table: tunable
             # like the reference's DB batch size (README.md:99-101 —
@@ -620,120 +571,49 @@ def _bench_streaming_jdbc(spark, sf_dir: str) -> dict:
             # there — deployment knobs, not constants.
             batch_rows = int(os.environ.get("SPARK_GRAFT_JDBC_BATCH", "8000"))
             n_parts = int(os.environ.get("SPARK_GRAFT_JDBC_PARTS", "2"))
-            sinks = {
-                p.name: sj.JdbcSink(
+            writer = {
+                t: sj.JdbcSink(
                     dsn="unused",
-                    table=p.name,
-                    mode="additive",
+                    table=t,
                     batch_size=batch_rows,
                     connection_factory=factory,
                     num_partitions=n_parts,
                     paramstyle="qmark",
-                    rows_acc=accs[p.name][0],
-                    txn_acc=accs[p.name][1],
-                    skip_acc=accs[p.name][2],
+                    rows_acc=a[0],
+                    txn_acc=a[1],
+                    skip_acc=a[2],
                 )
-                for p in pipelines
+                for t, a in accs.items()
             }
             # per-(batch, table) upsert wall time — the instrumentation
             # the parquet path's merge_breakdown already has (VERDICT r8
             # #2): a p50 regression names its slow table instead of
             # guessing at SQLite locks vs executemany vs transform cost
-            breakdown: list[dict] = []
-
-            def sink(batch_df, batch_id: int) -> None:
-                from concurrent.futures import ThreadPoolExecutor
-
-                batch_df.persist()
-                n_rows = batch_df.count()
-                # ONE emote extraction per trigger shared by both emote
-                # tables — same topology as the parquet single-pass sink
-                # (run_all_single_pass); without it the twin double-ran
-                # the largest repeated work item and its p50 measured it
-                occ = agg.emote_occurrences(batch_df, emotes).persist()
-                shared = {
-                    "emote_stats": (
-                        lambda: agg.emote_stats_from_occurrences(occ)
-                    ),
-                    "user_emote_stats": (
-                        lambda: agg.user_emote_stats_from_occurrences(occ)
-                    ),
-                }
-
-                def write_one(p) -> None:
-                    # one FAIR pool per table (like the parquet sink's
-                    # merge_one — the default pool is internally FIFO)
-                    spark.sparkContext.setLocalProperty(
-                        "spark.scheduler.pool", f"jdbc-{p.name}"
-                    )
-                    # no eager localCheckpoint: the stats feed exactly
-                    # one consumer (the upsert), so checkpointing first
-                    # ran every aggregation TWICE per trigger
-                    t0 = time.time()
-                    build = shared.get(
-                        p.name, lambda: p.transform(batch_df)
-                    )
-                    sinks[p.name](build(), batch_id)
-                    breakdown.append({
-                        "batch_id": batch_id,
-                        "table": p.name,
-                        "sec": round(time.time() - t0, 3),
-                    })
-
-                old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-                try:
-                    # trigger-sized shuffles, like run_all_single_pass
-                    spark.conf.set(
-                        "spark.sql.shuffle.partitions",
-                        str(sp.trigger_shuffle_partitions(spark, n_rows)),
-                    )
-                    # concurrent like the parquet single-pass topology:
-                    # Spark-side transforms overlap; SQLite's single-
-                    # writer lock serializes only the commit sections
-                    with ThreadPoolExecutor(
-                        max_workers=len(pipelines)
-                    ) as ex:
-                        for f in [
-                            ex.submit(write_one, p) for p in pipelines
-                        ]:
-                            f.result()
-                finally:
-                    spark.conf.set(
-                        "spark.sql.shuffle.partitions", old_parts
-                    )
-                    occ.unpersist()
-                    batch_df.unpersist()
-
+            events: list[dict] = []
             t0 = time.time()
-            q = (
-                spark.readStream.schema(
-                    "ts timestamp, channel string, username string, "
-                    "message string"
-                )
-                .option("maxFilesPerTrigger", 4)
-                .parquet(src)
-                .writeStream.foreachBatch(sink)
-                .option(
-                    "checkpointLocation", os.path.join(tmp, f"ckpt{i}")
-                )
-                .trigger(availableNow=True)
-                .start()
+            prog = sp.run_all(
+                spark, src, os.path.join(tmp, f"out{i}"),
+                os.path.join(tmp, f"ckpt{i}"), max_files_per_trigger=4,
+                merge_metrics=events, writer=writer,
             )
-            q.awaitTermination()
             wall = time.time() - t0
-            pcts = _percentiles(_trigger_durations([q.recentProgress]))
+            pcts = _percentiles(_trigger_durations(prog))
             # steady-state latency: batch 0 pays one-time JVM JIT/
             # codegen + SQLite page-cache warm-up; the budget the
             # reference's 5 s flush interval implies is about the
             # RECURRING trigger, so report the p50 with the warm-up
             # batch excluded alongside the all-batches number
-            steady = _percentiles(_steady_durations([q.recentProgress]))
+            steady = _percentiles(_steady_durations(prog))
             return {
                 "jdbc_wall_sec": round(wall, 3),
                 "jdbc_msgs_per_sec": round(n / wall, 1),
                 "jdbc_trigger_p50_ms": pcts.get("p50_ms"),
                 "jdbc_trigger_p50_steady_ms": steady.get("p50_ms"),
-                "jdbc_upsert_breakdown": breakdown,
+                "jdbc_upsert_breakdown": [
+                    {"batch_id": e["batch_id"], "table": e["table"],
+                     "sec": e["merge_sec"]}
+                    for e in events if e["step"] == "merge"
+                ],
                 "jdbc_tables": {
                     name: {
                         "rows_upserted": a[0].value,

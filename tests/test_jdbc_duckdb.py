@@ -1,12 +1,12 @@
 """Postgres ON CONFLICT dialect, pinned two ways (VERDICT r8 #6):
 
 1. Golden-string matrix: the EXACT DML the Postgres path would issue —
-   every fact table x both merge modes x both paramstyles — asserted
-   against literal strings, so a dialect regression is a visible diff,
-   not a runtime surprise on a live server.
+   every fact table x both paramstyles — asserted against literal
+   strings, so a dialect regression is a visible diff, not a runtime
+   surprise on a live server.
 2. A SECOND live engine: DuckDB shares Postgres's ``ON CONFLICT``
    dialect (conflict target, ``EXCLUDED``, table-qualified SET), so
-   every generated statement — DDL, both upsert modes, the ledger
+   every generated statement — DDL, the additive upsert, the ledger
    claim — executes for real against a second engine besides SQLite,
    including through ``PyformatOverQmarkConnection`` (the exact
    pyformat SQL psycopg2 would receive).
@@ -26,34 +26,29 @@ duckdb = pytest.importorskip("duckdb")
 from twitch_chat_analyser_spark.streaming import jdbc as sj  # noqa: E402
 
 GOLDEN_UPSERTS = {
-    ("channel_stats", "additive", "pyformat"): (
+    ("channel_stats", "pyformat"): (
         "INSERT INTO channel_stats(channel, timestamp, messages) "
         "VALUES (%s, %s, %s) ON CONFLICT(channel, timestamp) DO UPDATE "
         "SET messages = channel_stats.messages + EXCLUDED.messages"
     ),
-    ("channel_stats", "set", "pyformat"): (
-        "INSERT INTO channel_stats(channel, timestamp, messages) "
-        "VALUES (%s, %s, %s) ON CONFLICT(channel, timestamp) DO UPDATE "
-        "SET messages = EXCLUDED.messages"
-    ),
-    ("channel_stats", "additive", "qmark"): (
+    ("channel_stats", "qmark"): (
         "INSERT INTO channel_stats(channel, timestamp, messages) "
         "VALUES (?, ?, ?) ON CONFLICT(channel, timestamp) DO UPDATE "
         "SET messages = channel_stats.messages + EXCLUDED.messages"
     ),
-    ("user_stats", "additive", "pyformat"): (
+    ("user_stats", "pyformat"): (
         "INSERT INTO user_stats(channel, username, timestamp, messages) "
         "VALUES (%s, %s, %s, %s) "
         "ON CONFLICT(channel, username, timestamp) DO UPDATE "
         "SET messages = user_stats.messages + EXCLUDED.messages"
     ),
-    ("emote_stats", "additive", "pyformat"): (
+    ("emote_stats", "pyformat"): (
         "INSERT INTO emote_stats(channel, emote, timestamp, occurrences) "
         "VALUES (%s, %s, %s, %s) "
         "ON CONFLICT(channel, emote, timestamp) DO UPDATE "
         "SET occurrences = emote_stats.occurrences + EXCLUDED.occurrences"
     ),
-    ("user_emote_stats", "additive", "pyformat"): (
+    ("user_emote_stats", "pyformat"): (
         "INSERT INTO user_emote_stats"
         "(channel, emote, username, timestamp, occurrences) "
         "VALUES (%s, %s, %s, %s, %s) "
@@ -61,7 +56,7 @@ GOLDEN_UPSERTS = {
         "SET occurrences = "
         "user_emote_stats.occurrences + EXCLUDED.occurrences"
     ),
-    ("phrase_stats", "additive", "pyformat"): (
+    ("phrase_stats", "pyformat"): (
         "INSERT INTO phrase_stats(channel, phrase_name, timestamp, matches) "
         "VALUES (%s, %s, %s, %s) "
         "ON CONFLICT(channel, phrase_name, timestamp) DO UPDATE "
@@ -84,21 +79,20 @@ GOLDEN_LEDGER = {
 
 
 def test_generated_dml_matches_golden_strings():
-    for (table, mode, style), want in GOLDEN_UPSERTS.items():
-        assert sj.upsert_sql(table, mode, style) == want, (table, mode, style)
+    for (table, style), want in GOLDEN_UPSERTS.items():
+        assert sj.upsert_sql(table, style) == want, (table, style)
     for style, want in GOLDEN_LEDGER.items():
         assert sj.ledger_claim_sql(style) == want
     # the two paramstyles differ ONLY by placeholder token, for every
-    # table x mode — no statement shape drifts between engines
+    # table — no statement shape drifts between engines
     for table in sj.FACT_TABLES:
-        for mode in ("additive", "set"):
-            py = sj.upsert_sql(table, mode, "pyformat")
-            qm = sj.upsert_sql(table, mode, "qmark")
-            assert py.replace("%s", "?") == qm
+        py = sj.upsert_sql(table, "pyformat")
+        qm = sj.upsert_sql(table, "qmark")
+        assert py.replace("%s", "?") == qm
 
 
 def test_every_statement_executes_on_duckdb():
-    """DDL + both merge modes + the ledger claim, live on DuckDB."""
+    """DDL + the additive upsert + the ledger claim, live on DuckDB."""
     conn = duckdb.connect()
     cur = conn.cursor()
     for table in sj.FACT_TABLES:
@@ -109,16 +103,11 @@ def test_every_statement_executes_on_duckdb():
         row = tuple(
             "x" if t.startswith("VARCHAR") else 3 for _, t in cols
         )
-        add = sj.upsert_sql(table, "additive", "qmark")
+        add = sj.upsert_sql(table, "qmark")
         cur.execute(add, row)
         cur.execute(add, row)  # accumulates
         got = cur.execute(f"SELECT * FROM {table}").fetchall()
         assert len(got) == 1 and got[0][-1] == 6, table
-        st = sj.upsert_sql(table, "set", "qmark")
-        cur.execute(st, row)  # overwrites back to 3
-        cur.execute(st, row)  # idempotent
-        got = cur.execute(f"SELECT * FROM {table}").fetchall()
-        assert len(got) == 1 and got[0][-1] == 3, table
 
     claim = sj.ledger_claim_sql("qmark")
     cur.execute(claim, ("channel_stats", 7, 0, 4))
@@ -137,7 +126,7 @@ def test_pyformat_sql_runs_on_duckdb_through_the_adapter():
     conn = sj.PyformatOverQmarkConnection(duckdb.connect)
     cur = conn.cursor()
     cur.execute(sj.create_table_sql("channel_stats"))
-    sql = sj.upsert_sql("channel_stats", "additive", "pyformat")
+    sql = sj.upsert_sql("channel_stats", "pyformat")
     cur.executemany(sql, [("a", 0, 2), ("a", 100, 2)])
     cur.executemany(sql, [("a", 0, 5)])
     conn.commit()

@@ -30,23 +30,12 @@ def test_all_five_tables_have_ddl_and_upserts():
 
 def test_additive_upsert_matches_reference_semantics():
     # ChannelStatsAggregation.java:45-50: cnt = table.cnt + EXCLUDED.cnt
-    sql = jdbc.upsert_sql("channel_stats", mode="additive")
+    sql = jdbc.upsert_sql("channel_stats")
     assert sql == (
         "INSERT INTO channel_stats(channel, timestamp, messages) "
         "VALUES (%s, %s, %s) ON CONFLICT(channel, timestamp) "
         "DO UPDATE SET messages = channel_stats.messages + EXCLUDED.messages"
     )
-
-
-def test_set_mode_for_update_mode_cumulative_emission():
-    sql = jdbc.upsert_sql("user_emote_stats", mode="set")
-    assert sql.endswith("DO UPDATE SET occurrences = EXCLUDED.occurrences")
-    assert "ON CONFLICT(channel, emote, username, timestamp)" in sql
-
-
-def test_unknown_mode_rejected():
-    with pytest.raises(ValueError):
-        jdbc.upsert_sql("channel_stats", mode="replace")
 
 
 def test_sink_without_driver_raises_not_implemented(spark):
@@ -148,7 +137,6 @@ def test_sink_writes_executor_side_per_partition(spark, tmp_path):
     sink = jdbc.JdbcSink(
         dsn="unused",
         table="channel_stats",
-        mode="additive",
         batch_size=3,
         connection_factory=_recording_factory(out_dir),
         num_partitions=4,  # pinned replay-stable write parallelism
@@ -177,7 +165,7 @@ def test_sink_writes_executor_side_per_partition(spark, tmp_path):
         assert claim["params"][:2] == ["channel_stats", 7]
         claimed_pids.add(claim["params"][2])
         for s in rec["stmts"]:
-            assert s["sql"] == jdbc.upsert_sql("channel_stats", "additive")
+            assert s["sql"] == jdbc.upsert_sql("channel_stats")
             # executemany chunks respect batch_size
             assert len(s["rows"]) <= 3
             seen.extend(tuple(r) for r in s["rows"])
@@ -199,8 +187,7 @@ def test_additive_partition_assignment_is_replay_stable(spark, tmp_path):
         sink = jdbc.JdbcSink(
             dsn="unused",
             table="channel_stats",
-            mode="additive",
-            connection_factory=_recording_factory(out_dir),
+                connection_factory=_recording_factory(out_dir),
             num_partitions=8,
         )
         sink(df, batch_id=3)
@@ -230,7 +217,6 @@ def test_sink_replay_skips_applied_partitions(spark, tmp_path):
     sink = jdbc.JdbcSink(
         dsn="unused",
         table="channel_stats",
-        mode="additive",
         connection_factory=_recording_factory(out_dir, claim_rowcount=0),
     )
     df = spark.createDataFrame(
@@ -247,29 +233,3 @@ def test_sink_replay_skips_applied_partitions(spark, tmp_path):
         with open(os.path.join(out_dir, f)) as fh:
             rec = json.load(fh)
         assert rec["stmts"] == []  # no upserts reached the store
-
-
-def test_set_mode_skips_the_ledger(spark, tmp_path):
-    """SET-merge replays are naturally idempotent — no ledger claim."""
-    out_dir = str(tmp_path / "writes")
-    os.makedirs(out_dir, exist_ok=True)
-
-    sink = jdbc.JdbcSink(
-        dsn="unused",
-        table="channel_stats",
-        mode="set",
-        connection_factory=_recording_factory(out_dir),
-    )
-    df = spark.createDataFrame(
-        [("c", 0, 1)], "channel string, timestamp long, messages long"
-    ).coalesce(1)
-    sink(df, batch_id=1)
-
-    import json
-
-    files = sorted(os.listdir(out_dir))
-    assert len(files) == 1
-    with open(os.path.join(out_dir, files[0])) as fh:
-        rec = json.load(fh)
-    assert rec["claims"] == []
-    assert rec["stmts"][0]["sql"] == jdbc.upsert_sql("channel_stats", "set")

@@ -51,11 +51,10 @@ def _read(path: str, sql: str) -> list[tuple]:
         conn.close()
 
 
-def _sink(path: str, mode: str) -> jdbc.JdbcSink:
+def _sink(path: str, table: str = "channel_stats") -> jdbc.JdbcSink:
     return jdbc.JdbcSink(
         dsn="unused",
-        table="channel_stats",
-        mode=mode,
+        table=table,
         batch_size=3,
         connection_factory=_factory(path),
         num_partitions=4,
@@ -84,7 +83,7 @@ def test_additive_sink_applies_replays_skip(spark, tmp_path):
     ``v = v + EXCLUDED.v`` merge."""
     db = str(tmp_path / "facts.db")
     _setup_db(db)
-    sink = _sink(db, "additive")
+    sink = _sink(db)
 
     deltas = [("a", 0, 5), ("a", 1000, 2), ("b", 0, 7)]
     df = spark.createDataFrame(deltas, SCHEMA).repartition(3)
@@ -116,7 +115,7 @@ def test_task_retry_skips_committed_partition(tmp_path):
     write = functools.partial(
         jdbc._write_partition,
         connection_factory=_factory(db),
-        sql=jdbc.upsert_sql("channel_stats", "additive", "qmark"),
+        sql=jdbc.upsert_sql("channel_stats", "qmark"),
         names=["channel", "timestamp", "messages"],
         batch_size=100,
         ledger_key=("channel_stats", 9),
@@ -133,7 +132,7 @@ def test_task_retry_skips_committed_partition(tmp_path):
         jdbc._write_partition(
             iter(rows),
             connection_factory=_factory(db),
-            sql=jdbc.upsert_sql("channel_stats", "additive", "qmark"),
+            sql=jdbc.upsert_sql("channel_stats", "qmark"),
             names=["channel", "timestamp", "messages"],
             batch_size=100,
             ledger_key=("channel_stats", 10),
@@ -153,7 +152,7 @@ def test_partition_count_change_mid_batch_fails_loudly(tmp_path):
         jdbc._write_partition(
             iter(rows),
             connection_factory=_factory(db),
-            sql=jdbc.upsert_sql("channel_stats", "additive", "qmark"),
+            sql=jdbc.upsert_sql("channel_stats", "qmark"),
             names=["channel", "timestamp", "messages"],
             batch_size=100,
             ledger_key=("channel_stats", 3),
@@ -179,7 +178,7 @@ def test_rolled_back_checkpoint_against_stale_ledger_fails_loudly(
     max (the normal crash-replay of the in-flight batch) passes."""
     db = str(tmp_path / "stale.db")
     _setup_db(db)
-    sink = _sink(db, "additive")
+    sink = _sink(db)
     df = spark.createDataFrame([("a", 0, 5)], SCHEMA)
     sink(df, batch_id=0)
     sink(df, batch_id=1)
@@ -218,7 +217,7 @@ def test_legacy_ledger_schema_detected_and_migrated(spark, tmp_path):
     finally:
         conn.close()
 
-    sink = _sink(db, "additive")
+    sink = _sink(db)
     df = spark.createDataFrame([("a", 0, 5)], SCHEMA)
     with pytest.raises(RuntimeError, match="n_parts"):
         sink(df, batch_id=0)
@@ -243,7 +242,7 @@ def test_ledger_is_pruned_to_recent_batches(spark, tmp_path):
     rows per trigger forever) — the preflight drops them."""
     db = str(tmp_path / "prune.db")
     _setup_db(db)
-    sink = _sink(db, "additive")
+    sink = _sink(db)
     df = spark.createDataFrame([("a", 0, 1)], SCHEMA)
     for b in range(4):
         sink(df, batch_id=b)
@@ -255,25 +254,6 @@ def test_ledger_is_pruned_to_recent_batches(spark, tmp_path):
     }
     assert batches == {2, 3}
     assert _read(db, "SELECT * FROM channel_stats") == [("a", 0, 4)]
-
-
-def test_set_mode_sink_is_naturally_idempotent(spark, tmp_path):
-    """SET-merge (update-mode cumulative emission): replays and
-    re-emissions converge to the last value, no ledger involved."""
-    db = str(tmp_path / "set.db")
-    _setup_db(db)
-    sink = _sink(db, "set")
-
-    df1 = spark.createDataFrame([("a", 0, 5), ("b", 0, 1)], SCHEMA)
-    sink(df1, batch_id=0)
-    sink(df1, batch_id=0)  # replay: same values land, idempotent
-    df2 = spark.createDataFrame([("a", 0, 9)], SCHEMA)  # newer cumulative
-    sink(df2, batch_id=1)
-    assert _read(db, "SELECT * FROM channel_stats") == [
-        ("a", 0, 9),
-        ("b", 0, 1),
-    ]
-    assert _read(db, f"SELECT * FROM {jdbc.LEDGER_TABLE}") == []
 
 
 def test_claim_rowcount_contract_on_sqlite(tmp_path):
@@ -299,10 +279,9 @@ def test_claim_rowcount_contract_on_sqlite(tmp_path):
 
 def test_pyformat_and_qmark_generate_identical_sql_modulo_placeholder():
     for table in jdbc.FACT_TABLES:
-        for mode in ("additive", "set"):
-            pg = jdbc.upsert_sql(table, mode, "pyformat")
-            lite = jdbc.upsert_sql(table, mode, "qmark")
-            assert pg.replace("%s", "?") == lite
+        pg = jdbc.upsert_sql(table, "pyformat")
+        lite = jdbc.upsert_sql(table, "qmark")
+        assert pg.replace("%s", "?") == lite
     assert jdbc.ledger_claim_sql("pyformat").replace("%s", "?") == (
         jdbc.ledger_claim_sql("qmark")
     )
@@ -310,77 +289,49 @@ def test_pyformat_and_qmark_generate_identical_sql_modulo_placeholder():
 
 def test_unknown_paramstyle_rejected():
     with pytest.raises(KeyError):
-        jdbc.upsert_sql("channel_stats", "additive", "numeric")
+        jdbc.upsert_sql("channel_stats", "numeric")
 
 
 def test_streaming_pipeline_lands_in_sqlite_exactly_once(spark, tmp_path):
-    """The reference's full write topology against a real store: a
-    Structured Streaming query emits per-batch deltas through the
-    ledger-guarded additive JdbcSink into SQLite; the accumulated table
-    equals the batch aggregation of all messages, and a checkpoint
-    RESUME over appended files adds only the new data."""
-    from pyspark.sql import functions as F
+    """The reference's full write topology against a real store:
+    ``run_all`` with one ledger-guarded JdbcSink per fact table as its
+    writer. Every table, ``timestamp = 0`` totals included, equals the
+    batch aggregation of all messages (the side output lands as
+    parquet); a checkpoint RESUME over an appended file — one carrying
+    a late event — adds only the new data, and a restart with no new
+    data leaves every table unchanged."""
+    from test_streaming import BATCH_1, BATCH_2, _mk_messages
+    from test_streaming_single_pass import _expected_tables
 
-    from twitch_chat_analyser_spark.operators import aggregations as agg
-    from twitch_chat_analyser_spark.streaming.pipeline import (
-        read_message_stream,
-    )
+    from twitch_chat_analyser_spark.streaming import pipeline as sp
 
     db = str(tmp_path / "facts.db")
     _setup_db(db)
-    src = str(tmp_path / "src")
-    ckpt = str(tmp_path / "ckpt")
-    schema = "ts string, channel string, username string, message string"
+    src, out, ckpt = (str(tmp_path / d) for d in ("src", "out", "ckpt"))
+    writer = {t: _sink(db, t) for t in jdbc.FACT_TABLES}
 
-    def messages(lo, hi):
-        rows = [
-            (f"2024-01-0{1 + i % 5} 0{i % 9}:00:00", f"ch{i % 3}", f"u{i}", "hi")
-            for i in range(lo, hi)
-        ]
-        return spark.createDataFrame(rows, schema).withColumn(
-            "ts", F.col("ts").cast("timestamp")
+    def tables():
+        got = {t: _read(db, f"SELECT * FROM {t}") for t in jdbc.FACT_TABLES}
+        got["messages_matching_phrase"] = sorted(
+            tuple(r) for r in sp.read_matched_messages(spark, out).collect()
         )
+        return got
 
-    sink = _sink(db, "additive")
+    _mk_messages(spark, BATCH_1).coalesce(1).write.mode("append").parquet(src)
+    sp.run_all(spark, src, out, ckpt, writer=writer)
+    assert tables() == _expected_tables(spark, BATCH_1)
 
-    def batch_sink(batch_df, batch_id):
-        sink(agg.channel_stats(batch_df), batch_id)
+    _mk_messages(spark, BATCH_2).coalesce(1).write.mode("append").parquet(src)
+    sp.run_all(spark, src, out, ckpt, writer=writer)
+    expected = _expected_tables(spark, BATCH_1 + BATCH_2)
+    assert tables() == expected
 
-    def run_stream():
-        q = (
-            read_message_stream(spark, src, max_files_per_trigger=2)
-            .writeStream.outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .foreachBatch(batch_sink)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    first = messages(0, 60)
-    first.repartition(4).write.parquet(src)
-    run_stream()
-
-    def expect(df):
-        return sorted(
-            (r["channel"], r["timestamp"], r["messages"])
-            for r in agg.channel_stats(df).collect()
-        )
-
-    assert _read(db, "SELECT * FROM channel_stats") == expect(first)
-
-    # checkpoint resume: append new files, rerun -> only new data lands
-    second = messages(60, 90)
-    second.repartition(2).write.mode("append").parquet(src)
-    run_stream()
-    assert _read(db, "SELECT * FROM channel_stats") == expect(
-        first.unionByName(second)
-    )
-    # ledger rows exist for every (batch, partition) the stream claimed
-    n_batches = _read(
-        db, f"SELECT count(DISTINCT batch_id) FROM {jdbc.LEDGER_TABLE}"
-    )[0][0]
-    assert n_batches >= 2
+    sp.run_all(spark, src, out, ckpt, writer=writer)
+    assert tables() == expected
+    # every table claimed its (batch, partition) ledger rows
+    assert _read(
+        db, f"SELECT DISTINCT table_name FROM {jdbc.LEDGER_TABLE}"
+    ) == sorted((t,) for t in jdbc.FACT_TABLES)
 
 
 # ---------------------------------------------------------------------------
@@ -405,7 +356,7 @@ def test_pyformat_write_partition_with_ledger_and_replay(tmp_path):
     write = functools.partial(
         jdbc._write_partition,
         connection_factory=functools.partial(jdbc.PyformatOverQmarkConnection, _factory(db)),
-        sql=jdbc.upsert_sql("channel_stats", "additive", "pyformat"),
+        sql=jdbc.upsert_sql("channel_stats", "pyformat"),
         names=["channel", "timestamp", "messages"],
         batch_size=1,  # exercise multiple executemany flushes
         ledger_key=("channel_stats", 4),
@@ -437,7 +388,6 @@ def test_pyformat_sink_end_to_end_through_spark(spark, tmp_path):
     sink = jdbc.JdbcSink(
         dsn="unused",
         table="channel_stats",
-        mode="additive",
         batch_size=3,
         connection_factory=functools.partial(jdbc.PyformatOverQmarkConnection, _factory(db)),
         num_partitions=4,

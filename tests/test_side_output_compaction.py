@@ -31,9 +31,9 @@ def _batch_dirs(out):
 def test_compaction_preserves_rows_and_bounds_directories(spark, tmp_path):
     src, out, ckpt = _dirs(tmp_path)
     _mk_messages(spark, BATCH_1).coalesce(1).write.mode("append").parquet(src)
-    sp.run_all_single_pass(spark, src, out, ckpt)
+    sp.run_all(spark, src, out, ckpt)
     _mk_messages(spark, BATCH_2).coalesce(1).write.mode("append").parquet(src)
-    sp.run_all_single_pass(spark, src, out, ckpt)
+    sp.run_all(spark, src, out, ckpt)
     want = _expected_tables(spark, BATCH_1 + BATCH_2)[
         "messages_matching_phrase"
     ]
@@ -55,7 +55,7 @@ def test_compaction_preserves_rows_and_bounds_directories(spark, tmp_path):
 
     # a post-compaction trigger appends normally and folds next cycle
     _mk_messages(spark, BATCH_1).coalesce(1).write.mode("append").parquet(src)
-    sp.run_all_single_pass(spark, src, out, ckpt)
+    sp.run_all(spark, src, out, ckpt)
     want2 = _expected_tables(spark, BATCH_1 + BATCH_2 + BATCH_1)[
         "messages_matching_phrase"
     ]
@@ -77,9 +77,9 @@ def test_folded_originals_deferred_and_reader_grace(spark, tmp_path):
     plan afterwards instead of failing mid-action with FileNotFound."""
     src, out, ckpt = _dirs(tmp_path)
     _mk_messages(spark, BATCH_1).coalesce(1).write.mode("append").parquet(src)
-    sp.run_all_single_pass(spark, src, out, ckpt)
+    sp.run_all(spark, src, out, ckpt)
     _mk_messages(spark, BATCH_2).coalesce(1).write.mode("append").parquet(src)
-    sp.run_all_single_pass(spark, src, out, ckpt)
+    sp.run_all(spark, src, out, ckpt)
     want = _matched_rows(spark, out)
 
     # a concurrent reader: plan built (paths listed) BEFORE compaction
@@ -122,7 +122,7 @@ def test_segment_merge_is_amortized_and_crash_safe(
 
     def feed(rows):
         _mk_messages(spark, rows).coalesce(1).write.mode("append").parquet(src)
-        sp.run_all_single_pass(spark, src, out, ckpt)
+        sp.run_all(spark, src, out, ckpt)
 
     feed(BATCH_1)
     feed(BATCH_2)
@@ -165,9 +165,9 @@ def test_legacy_marker_and_undead_supersession(spark, tmp_path, monkeypatch):
     exclusion survives its superseder's removal."""
     src, out, ckpt = _dirs(tmp_path)
     _mk_messages(spark, BATCH_1).coalesce(1).write.mode("append").parquet(src)
-    sp.run_all_single_pass(spark, src, out, ckpt)
+    sp.run_all(spark, src, out, ckpt)
     _mk_messages(spark, BATCH_2).coalesce(1).write.mode("append").parquet(src)
-    sp.run_all_single_pass(spark, src, out, ckpt)
+    sp.run_all(spark, src, out, ckpt)
     want = _matched_rows(spark, out)
 
     # (a) hand-build a LEGACY-format segment: fold batch 0's rows into
@@ -195,10 +195,10 @@ def test_legacy_marker_and_undead_supersession(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(sp.shutil, "rmtree", stubborn_rmtree)
     _mk_messages(spark, BATCH_1).coalesce(1).write.mode("append").parquet(src)
-    sp.run_all_single_pass(spark, src, out, ckpt)
+    sp.run_all(spark, src, out, ckpt)
     assert sp.compact_matched_messages(spark, out, keep_last=1) == 1  # -2
     _mk_messages(spark, BATCH_2).coalesce(1).write.mode("append").parquet(src)
-    sp.run_all_single_pass(spark, src, out, ckpt)
+    sp.run_all(spark, src, out, ckpt)
     assert sp.compact_matched_messages(spark, out, keep_last=1) == 1  # -3
     # one more cycle's gc (deferred deletion, ADVICE r9): removes -2
     # while -1's deletion keeps silently failing
@@ -225,9 +225,9 @@ def test_crash_at_publish_rename_replays_clean(spark, tmp_path, monkeypatch):
 
     src, out, ckpt = _dirs(tmp_path)
     _mk_messages(spark, BATCH_1).coalesce(1).write.mode("append").parquet(src)
-    sp.run_all_single_pass(spark, src, out, ckpt)
+    sp.run_all(spark, src, out, ckpt)
     _mk_messages(spark, BATCH_2).coalesce(1).write.mode("append").parquet(src)
-    sp.run_all_single_pass(spark, src, out, ckpt)
+    sp.run_all(spark, src, out, ckpt)
     want = _matched_rows(spark, out)
 
     real_rename = _os.rename

@@ -1,19 +1,14 @@
-"""Streaming semantics tests (SURVEY.md §5.3) for the MULTI-QUERY
-compatibility topology (update-mode agg + SET-merge sink per fact
-table): batch/stream equivalence, replay idempotence (exactly-once
-parity with the reference's XAPostgresSink), and late-data upsert into
-old window buckets. The default single-pass topology is covered in
-test_streaming_single_pass.py."""
+"""Shared streaming fixtures: two small message batches (the second
+carrying a late event), a message-DataFrame builder, and store
+readers. The write path itself is tested in
+test_streaming_single_pass.py, test_streaming_delta.py and
+test_jdbc_sqlite.py."""
 
 from __future__ import annotations
 
 import datetime as dt
 import os
 
-import pytest
-
-from twitch_chat_analyser_spark import dims
-from twitch_chat_analyser_spark.operators import aggregations as agg
 from twitch_chat_analyser_spark.streaming import pipeline as sp
 
 EPOCH = dt.datetime(2024, 1, 1, 0, 0, 0, tzinfo=dt.timezone.utc)
@@ -41,138 +36,10 @@ BATCH_2 = [
 
 
 def _table(spark, out_dir, name):
-    # reads flat (SET-merge) and bucketed (additive day-partitioned)
-    # store layouts alike; the physical bucket column is dropped
-    from twitch_chat_analyser_spark.streaming import pipeline as _sp
-
-    return _sp.read_table(spark, os.path.join(out_dir, name))
+    # reads flat and bucketed (day-partitioned) store layouts alike;
+    # the physical bucket column is dropped
+    return sp.read_table(spark, os.path.join(out_dir, name))
 
 
 def _sorted_rows(df):
     return sorted(tuple(r) for r in df.collect())
-
-
-@pytest.fixture()
-def dirs(tmp_path):
-    return (
-        str(tmp_path / "src"),
-        str(tmp_path / "out"),
-        str(tmp_path / "ckpt"),
-    )
-
-
-def test_stream_equals_batch_and_replay_is_idempotent(spark, dirs):
-    src, out, ckpt = dirs
-    _mk_messages(spark, BATCH_1).coalesce(1).write.mode("append").parquet(src)
-    sp.run_all_multi_query(spark, src, out, ckpt)
-
-    batch_expected = _sorted_rows(
-        agg.channel_stats(
-            _mk_messages(spark, BATCH_1).withColumn(
-                "timestamp", __import__("pyspark").sql.functions.unix_millis("ts")
-            )
-        )
-    )
-    got = _sorted_rows(_table(spark, out, "channel_stats"))
-    assert got == batch_expected
-
-    # replay with same checkpoint and no new data -> tables unchanged
-    sp.run_all_multi_query(spark, src, out, ckpt)
-    assert _sorted_rows(_table(spark, out, "channel_stats")) == batch_expected
-
-
-def test_late_data_updates_old_bucket(spark, dirs):
-    src, out, ckpt = dirs
-    _mk_messages(spark, BATCH_1).coalesce(1).write.mode("append").parquet(src)
-    sp.run_all_multi_query(spark, src, out, ckpt)
-
-    # second file: new window for click + a LATE view event (ts before
-    # everything already processed) -> must update the OLD bucket
-    _mk_messages(spark, BATCH_2).coalesce(1).write.mode("append").parquet(src)
-    sp.run_all_multi_query(spark, src, out, ckpt)
-
-    import pyspark.sql.functions as F
-
-    all_msgs = _mk_messages(spark, BATCH_1 + BATCH_2).withColumn(
-        "timestamp", F.unix_millis("ts")
-    )
-    for name, fn in [
-        ("channel_stats", agg.channel_stats),
-        ("user_stats", agg.user_stats),
-    ]:
-        assert _sorted_rows(_table(spark, out, name)) == _sorted_rows(
-            fn(all_msgs)
-        ), name
-
-    W = 900_000
-    base = 1_704_067_200_000
-    cs = {
-        (r["channel"], r["timestamp"]): r["messages"]
-        for r in _table(spark, out, "channel_stats").collect()
-    }
-    # late event incremented the first view bucket (would be 1 without it...
-    # 950s event is bucket 2) — late row lands at bucket 1
-    assert cs[("view", base + W)] == 1  # the late event created/updated this
-    assert cs[("view", base + 2 * W)] == 1
-
-
-def test_all_five_tables_plus_side_output(spark, dirs):
-    src, out, ckpt = dirs
-    _mk_messages(spark, BATCH_1).coalesce(1).write.mode("append").parquet(src)
-    sp.run_all_multi_query(spark, src, out, ckpt)
-    q = sp.matched_messages_side_output(
-        spark, sp.read_message_stream(spark, src), out, ckpt
-    )
-    q.awaitTermination()
-
-    import pyspark.sql.functions as F
-
-    msgs = _mk_messages(spark, BATCH_1).withColumn(
-        "timestamp", F.unix_millis("ts")
-    )
-    emotes = dims.emotes_df(spark)
-    phrases = dims.phrases_df(spark)
-    expect = {
-        "channel_stats": agg.channel_stats(msgs),
-        "user_stats": agg.user_stats(msgs),
-        "emote_stats": agg.emote_stats(msgs, emotes),
-        "user_emote_stats": agg.user_emote_stats(msgs, emotes),
-        "phrase_stats": agg.phrase_stats(msgs, phrases),
-        "messages_matching_phrase": agg.messages_matching_phrase(msgs, phrases),
-    }
-    for name, df in expect.items():
-        assert _sorted_rows(_table(spark, out, name)) == _sorted_rows(df), name
-
-
-def test_sliding_window_streams_and_matches_batch(spark, dirs):
-    """channel_stats_sliding runs under the same update-mode streaming
-    harness as the tumbling aggregations (window(span, slide) carries
-    the event-time tag the same way) and converges to the batch answer
-    across incremental files."""
-    src, out, ckpt = dirs
-    _mk_messages(spark, BATCH_1).coalesce(1).write.mode("append").parquet(src)
-    pipe = sp.Pipeline(
-        "channel_stats_sliding",
-        agg.channel_stats_sliding,
-        ["channel", "timestamp"],
-    )
-    q = sp.start_pipeline(
-        spark, sp.read_message_stream(spark, src), pipe, out, ckpt
-    )
-    q.awaitTermination()
-    _mk_messages(spark, BATCH_2).coalesce(1).write.mode("append").parquet(src)
-    q = sp.start_pipeline(
-        spark, sp.read_message_stream(spark, src), pipe, out, ckpt
-    )
-    q.awaitTermination()
-
-    import pyspark.sql.functions as F
-
-    batch = agg.channel_stats_sliding(
-        _mk_messages(spark, BATCH_1 + BATCH_2).withColumn(
-            "timestamp", F.unix_millis("ts")
-        )
-    )
-    assert _sorted_rows(_table(spark, out, "channel_stats_sliding")) == (
-        _sorted_rows(batch)
-    )

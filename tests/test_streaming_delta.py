@@ -1,6 +1,6 @@
-"""Additive-delta streaming mode (reference-exact state bounding):
-per-batch deltas + sentinel timestamp=0 totals accumulated in the SINK,
-zero Spark streaming state, batch-id-journaled exactly-once."""
+"""Additive-delta exactly-once: per-batch deltas + sentinel timestamp=0
+totals accumulated in the SINK, zero Spark streaming state, and a
+batch-id journal that turns a replayed batch into a no-op."""
 
 from __future__ import annotations
 
@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 from twitch_chat_analyser_spark.operators import aggregations as agg
 from twitch_chat_analyser_spark.streaming import pipeline as sp
 
-from test_streaming import BATCH_1, BATCH_2, _mk_messages, _sorted_rows, _table
+from test_streaming import BATCH_1, _mk_messages, _sorted_rows, _table
 
 
 @pytest.fixture()
@@ -20,61 +20,14 @@ def dirs(tmp_path):
     return (str(tmp_path / "src"), str(tmp_path / "out"), str(tmp_path / "ckpt"))
 
 
-def _run_delta(spark, src, out, ckpt):
-    q = sp.start_delta_pipeline(
-        spark,
-        sp.read_message_stream(spark, src, max_files_per_trigger=1),
-        sp.Pipeline("channel_stats", agg.channel_stats, ["channel", "timestamp"]),
-        out,
-        ckpt,
-    )
-    q.awaitTermination()
-    return q
-
-
-def _expected(spark, rows):
-    msgs = _mk_messages(spark, rows).withColumn("timestamp", F.unix_millis("ts"))
-    stats = agg.channel_stats(msgs)
-    return _sorted_rows(
-        stats.unionByName(
-            stats.groupBy("channel")
-            .agg(F.sum("messages").alias("messages"))
-            .withColumn("timestamp", F.lit(0).cast("long"))
-            .select("channel", "timestamp", "messages")
-        )
-    )
-
-
-def test_delta_pipeline_accumulates_in_sink_with_totals(spark, dirs):
-    src, out, ckpt = dirs
-    _mk_messages(spark, BATCH_1).coalesce(1).write.mode("append").parquet(src)
-    q = _run_delta(spark, src, out, ckpt)
-
-    # the whole point: NO stateful operator in the streaming plan
-    progress = q.recentProgress
-    assert progress and all(not p["stateOperators"] for p in progress)
-
-    assert _sorted_rows(_table(spark, out, "channel_stats")) == _expected(
-        spark, BATCH_1
-    )
-
-    # late + new data arrives -> deltas ADD into existing buckets and
-    # the timestamp=0 sentinel rows keep the running totals
-    _mk_messages(spark, BATCH_2).coalesce(1).write.mode("append").parquet(src)
-    _run_delta(spark, src, out, ckpt)
-    assert _sorted_rows(_table(spark, out, "channel_stats")) == _expected(
-        spark, BATCH_1 + BATCH_2
-    )
-
-
 def test_delta_replay_is_exactly_once(spark, dirs):
     src, out, ckpt = dirs
     _mk_messages(spark, BATCH_1).coalesce(1).write.mode("append").parquet(src)
-    _run_delta(spark, src, out, ckpt)
+    sp.run_all(spark, src, out, ckpt, max_files_per_trigger=1)
     expected = _sorted_rows(_table(spark, out, "channel_stats"))
 
     # restart from the same checkpoint with no new data: nothing re-adds
-    _run_delta(spark, src, out, ckpt)
+    sp.run_all(spark, src, out, ckpt, max_files_per_trigger=1)
     assert _sorted_rows(_table(spark, out, "channel_stats")) == expected
 
     # simulate a sink-side replay of an already-applied batch id: the
@@ -91,42 +44,3 @@ def test_delta_replay_is_exactly_once(spark, dirs):
         spark, target, deltas, ["channel", "timestamp"], "messages", applied[0]
     )
     assert _sorted_rows(_table(spark, out, "channel_stats")) == expected
-
-
-def test_watermark_opt_in_drops_too_late_data(spark, dirs):
-    """D2 opt-in (SURVEY §7.6 item 4): with a watermark, state is
-    bounded and events later than the watermark are DROPPED instead of
-    landing in their old bucket (the no-watermark default keeps
-    reference parity: unbounded lateness)."""
-    src, out, ckpt = dirs
-    base = 1_704_067_200_000
-    W = 900_000
-    # batch 1: two events in bucket 1 + one far-future event that pushes
-    # the watermark (10h - 30min) way past bucket 1
-    _mk_messages(
-        spark,
-        [(0, "click", "u1", "a"), (10_000, "click", "u2", "b"),
-         (36_000_000, "click", "u3", "c")],
-    ).coalesce(1).write.mode("append").parquet(src)
-    pipe = sp.Pipeline("channel_stats", agg.channel_stats, ["channel", "timestamp"])
-    q = sp.start_pipeline(spark, sp.read_message_stream(spark, src), pipe,
-                          out, ckpt, watermark="30 minutes")
-    q.awaitTermination()
-    table = {
-        (r["channel"], r["timestamp"]): r["messages"]
-        for r in _table(spark, out, "channel_stats").collect()
-    }
-    assert table[("click", base + W)] == 2
-
-    # batch 2: a LATE event for bucket 1 (beyond watermark) -> dropped
-    _mk_messages(spark, [(20_000, "click", "u9", "late")]).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    q = sp.start_pipeline(spark, sp.read_message_stream(spark, src), pipe,
-                          out, ckpt, watermark="30 minutes")
-    q.awaitTermination()
-    table = {
-        (r["channel"], r["timestamp"]): r["messages"]
-        for r in _table(spark, out, "channel_stats").collect()
-    }
-    assert table[("click", base + W)] == 2  # unchanged: late row dropped

@@ -68,14 +68,14 @@ def _actual_tables(spark, out_dir):
 def test_single_pass_all_tables_with_totals_and_side_output(spark, dirs):
     src, out, ckpt = dirs
     _mk_messages(spark, BATCH_1).coalesce(1).write.mode("append").parquet(src)
-    sp.run_all_single_pass(spark, src, out, ckpt)
+    sp.run_all(spark, src, out, ckpt)
     assert _actual_tables(spark, out) == _expected_tables(spark, BATCH_1)
 
 
-def test_run_all_default_is_single_pass(spark, dirs):
-    """run_all (the default topology) produces the single-pass output —
-    totals sentinels, side output and all — and reports progress with
-    the in-plan ingest metrics."""
+def test_run_all_reports_progress_and_ingest_metrics(spark, dirs):
+    """run_all produces the single-pass output — totals sentinels, side
+    output and all — and reports progress with the in-plan ingest
+    metrics."""
     from twitch_chat_analyser_spark.streaming.observability import (
         ObservedMetricsListener,
     )
@@ -99,19 +99,23 @@ def test_run_all_default_is_single_pass(spark, dirs):
 def test_single_pass_late_data_accumulates_and_replay_is_idempotent(spark, dirs):
     src, out, ckpt = dirs
     _mk_messages(spark, BATCH_1).coalesce(1).write.mode("append").parquet(src)
-    sp.run_all_single_pass(spark, src, out, ckpt)
+    progress = sp.run_all(spark, src, out, ckpt)[0]
 
     # second file includes a LATE event -> adds into its old bucket and
     # the timestamp=0 sentinel keeps the running total
     _mk_messages(spark, BATCH_2).coalesce(1).write.mode("append").parquet(src)
-    sp.run_all_single_pass(spark, src, out, ckpt)
+    progress += sp.run_all(spark, src, out, ckpt)[0]
     expected = _expected_tables(spark, BATCH_1 + BATCH_2)
     assert _actual_tables(spark, out) == expected
 
     # restart from the same checkpoint with no new data: all tables and
     # the side output unchanged (exactly-once across every sink)
-    sp.run_all_single_pass(spark, src, out, ckpt)
+    sp.run_all(spark, src, out, ckpt)
     assert _actual_tables(spark, out) == expected
+
+    # the accumulation lives in the stores: NO stateful operator in
+    # the streaming plan, so there is no state to bound or watermark
+    assert progress and all(not p["stateOperators"] for p in progress)
 
 
 def test_single_pass_empty_batch_is_a_cheap_no_op(spark, dirs):
@@ -132,17 +136,17 @@ def test_single_pass_empty_batch_is_a_cheap_no_op(spark, dirs):
 
     # 1) brand-new out_dir, 0-row first batch -> no stores published
     _mk_messages(spark, []).coalesce(1).write.mode("append").parquet(src)
-    sp.run_all_single_pass(spark, src, out, ckpt)
+    sp.run_all(spark, src, out, ckpt)
     assert not os.path.isdir(out) or not os.listdir(out)
 
     # 2) a real batch lands, then another empty one: store files keep
     # their identity (no whole-store rewrite for zero rows)
     _mk_messages(spark, BATCH_1).coalesce(1).write.mode("append").parquet(src)
-    sp.run_all_single_pass(spark, src, out, ckpt)
+    sp.run_all(spark, src, out, ckpt)
     before = _tree(out)
     assert before
     _mk_messages(spark, []).coalesce(1).write.mode("append").parquet(src)
-    sp.run_all_single_pass(spark, src, out, ckpt)
+    sp.run_all(spark, src, out, ckpt)
     assert _tree(out) == before
     assert _actual_tables(spark, out) == _expected_tables(spark, BATCH_1)
 
@@ -166,7 +170,7 @@ def test_single_pass_builds_emote_occurrences_once_per_trigger(
     monkeypatch.setattr(agg, "emote_occurrences", counting)
     src, out, ckpt = dirs
     _mk_messages(spark, BATCH_1).coalesce(1).write.mode("append").parquet(src)
-    sp.run_all_single_pass(spark, src, out, ckpt)
+    sp.run_all(spark, src, out, ckpt)
     assert calls["n"] == 1  # one batch -> one extraction, shared by both
     assert _actual_tables(spark, out) == _expected_tables(spark, BATCH_1)
 
@@ -175,13 +179,13 @@ def test_single_pass_bucketed_phase_end_to_end(spark, dirs, monkeypatch):
     """The sink's bucketed phase — span aggregation pricing the
     day-bucket hint, five concurrent bucketed merges, late-data
     accumulation, replay idempotence — exercised END-TO-END through
-    run_all_single_pass (the unit tests cover additive_merge alone;
+    run_all (the unit tests cover additive_merge alone;
     this pins the sink wiring)."""
     monkeypatch.setattr(sp, "FLAT_STORE_MAX_BYTES", 0)
     src, out, ckpt = dirs
     metrics: list = []
     _mk_messages(spark, BATCH_1).coalesce(1).write.mode("append").parquet(src)
-    sp.run_all_single_pass(spark, src, out, ckpt, merge_metrics=metrics)
+    sp.run_all(spark, src, out, ckpt, merge_metrics=metrics)
     # threshold 0: every store goes bucketed from the first merge
     assert {m["layout"] for m in metrics if m.get("step") == "merge"} == {
         "bucketed"
@@ -189,12 +193,12 @@ def test_single_pass_bucketed_phase_end_to_end(spark, dirs, monkeypatch):
     # second trigger (with a LATE event) sees bucketed stores -> the
     # span job prices the shared day-bucket hint
     _mk_messages(spark, BATCH_2).coalesce(1).write.mode("append").parquet(src)
-    sp.run_all_single_pass(spark, src, out, ckpt, merge_metrics=metrics)
+    sp.run_all(spark, src, out, ckpt, merge_metrics=metrics)
     assert any(m.get("step") == "span_agg" for m in metrics)
     expected = _expected_tables(spark, BATCH_1 + BATCH_2)
     assert _actual_tables(spark, out) == expected
     # replay from the same checkpoint: per-bucket journals suppress
-    sp.run_all_single_pass(spark, src, out, ckpt, merge_metrics=metrics)
+    sp.run_all(spark, src, out, ckpt, merge_metrics=metrics)
     assert _actual_tables(spark, out) == expected
 
 
@@ -239,7 +243,7 @@ def test_sink_conf_changes_cannot_leak_into_the_user_session(spark, dirs):
     before = spark.conf.get("spark.sql.shuffle.partitions")
     sp.trigger_shuffle_partitions, saved = probe, sp.trigger_shuffle_partitions
     try:
-        sp.run_all_single_pass(spark, src, out, ckpt)
+        sp.run_all(spark, src, out, ckpt)
     finally:
         sp.trigger_shuffle_partitions = saved
     assert seen["distinct_session"], (
@@ -262,7 +266,7 @@ def test_store_journals_record_the_checkpoint_identity(spark, dirs):
 
     src, out, ckpt = dirs
     _mk_messages(spark, BATCH_1).coalesce(1).write.mode("append").parquet(src)
-    sp.run_all_single_pass(spark, src, out, ckpt)
+    sp.run_all(spark, src, out, ckpt)
     with open(os.path.join(ckpt, "single_pass", "metadata")) as fh:
         qid = _json.load(fh)["id"]
     j = os.path.join(out, "channel_stats", "_applied_batches.json")

@@ -1,8 +1,11 @@
-"""Dump .explain("formatted") for the r14 optimization targets into
-plans/r14/<query>_<tag>.txt (tag = before/after). Reuses dump_plans'
-id-stabilizer so before/after diffs show structure, not counter churn.
+"""Dump .explain("formatted") for a round's optimization targets into
+plans/<round>/<query>_<tag>.txt (tag = before/after). Reuses
+dump_plans' id-stabilizer so before/after diffs show structure, not
+counter churn.
 
-Usage: python tools/dump_r14_plans.py <tag> [query ...]
+Usage: SPARK_GRAFT_SF_DIR=<scale-factor dir> \
+       python tools/dump_round_plans.py <round> <tag> <query> [query ...]
+e.g.   ... tools/dump_round_plans.py r15 before dedup_simhash
 """
 from __future__ import annotations
 
@@ -13,37 +16,21 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from dump_plans import stabilize  # noqa: E402  (same tools dir)
 
-DEFAULT_TARGETS = [
-    "text_nb_quality",
-    "curation_scoreboard",
-    "bm25_retrieval",
-    "retrieval_hybrid_rrf",
-    "channel_cooccurrence_jaccard",
-    "sketch_kmv_overlap",
-    "b20_emotes_per_channel_json",
-    "dedup_simhash",
-    "embedding_pca_projection",
-    "ann_knn_graph",
-    "dedup_kcore_membership",
-    "bloom_ngram_membership",
-    "text_bigram_lm",
-    "corpus_datacard",
-]
-
 
 def main() -> None:
-    tag = sys.argv[1] if len(sys.argv) > 1 else "before"
-    targets = sys.argv[2:] or DEFAULT_TARGETS
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    if len(sys.argv) < 4 or "SPARK_GRAFT_SF_DIR" not in os.environ:
+        sys.exit(__doc__)
+    rnd, tag, targets = sys.argv[1], sys.argv[2], sys.argv[3:]
+    sf_dir = os.environ["SPARK_GRAFT_SF_DIR"]
 
     from twitch_chat_analyser_spark import registry
     from twitch_chat_analyser_spark.session import get_spark
 
-    spark = get_spark("r14-plans")
+    spark = get_spark(f"{rnd}-plans")
     qs = registry.queries()
     outdir = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "plans", "r14",
+        "plans", rnd,
     )
     os.makedirs(outdir, exist_ok=True)
     for name in targets:

@@ -1,22 +1,19 @@
 """JDBC serving-store sink (A12/A13 production variant): DDL + upsert
 SQL generation and a foreachBatch writer for a Postgres-compatible
-store.
+store — the second per-table writer of ``streaming.pipeline.run_all``
+(the default being the journaled parquet store).
 
 The reference creates its own tables at job start
 (ChannelStatsAggregation.java:36-42 etc.) and writes every stats row as
 two physical rows — the window delta and the ``timestamp=0`` running
-total — through one batched ``INSERT ... ON CONFLICT DO UPDATE``
-prepared statement (ChannelStatsAggregation.java:45-63). This module
-generates byte-compatible DDL/DML for both merge disciplines:
-
-- ``additive``: ``SET v = t.v + EXCLUDED.v`` — pair with per-batch
-  delta emission (``streaming.pipeline.start_delta_pipeline``); needs
-  replay idempotence (the reference needs XA 2PC for the same reason),
-  provided by a (table, batch, partition) ledger row claimed in the
-  same transaction as the partition's upserts (``ledger_table_sql``).
-- ``set``: ``SET v = EXCLUDED.v`` — pair with update-mode cumulative
-  emission (``streaming.pipeline.start_pipeline``); naturally
-  idempotent, no transaction coordination needed (design D3).
+total — through one batched ``INSERT ... ON CONFLICT DO UPDATE SET v =
+t.v + EXCLUDED.v`` prepared statement (ChannelStatsAggregation.java:
+45-63). ``run_all`` emits exactly those per-batch deltas and totals;
+this module generates byte-compatible DDL/DML for that one additive
+discipline. Additive upserts are not idempotent, so replays need a
+guard (the reference needs XA 2PC for the same reason): a (table,
+batch, partition) ledger row claimed in the same transaction as the
+partition's upserts (``ledger_table_sql``).
 
 No Postgres driver ships in this container, so the psycopg2 default is
 import-gated; the SQL generation is pure and unit-tested, and the full
@@ -101,26 +98,19 @@ def create_table_sql(table: str) -> str:
 # (tests/test_jdbc_sqlite.py) since no Postgres driver ships here.
 PARAM_PLACEHOLDERS = {"pyformat": "%s", "qmark": "?"}
 
-_EMPTY = object()  # empty-partition peek sentinel
 
-
-def upsert_sql(table: str, mode: str = "additive", paramstyle: str = "pyformat") -> str:
-    """One-row upsert statement (the reference batches two value tuples
-    per stats row — delta + total — through the same statement;
-    ChannelStatsAggregation.java:45-50)."""
+def upsert_sql(table: str, paramstyle: str = "pyformat") -> str:
+    """One-row additive upsert statement (the reference batches two
+    value tuples per stats row — delta + total — through the same
+    statement; ChannelStatsAggregation.java:45-50)."""
     cols, pk = FACT_TABLES[table]
     names = [c for c, _ in cols]
-    value_col = names[-1]
+    v = names[-1]
     placeholders = ", ".join([PARAM_PLACEHOLDERS[paramstyle]] * len(names))
-    if mode == "additive":
-        action = f"{value_col} = {table}.{value_col} + EXCLUDED.{value_col}"
-    elif mode == "set":
-        action = f"{value_col} = EXCLUDED.{value_col}"
-    else:
-        raise ValueError(f"unknown merge mode: {mode}")
     return (
         f"INSERT INTO {table}({', '.join(names)}) VALUES ({placeholders}) "
-        f"ON CONFLICT({', '.join(pk)}) DO UPDATE SET {action}"
+        f"ON CONFLICT({', '.join(pk)}) DO UPDATE SET "
+        f"{v} = {table}.{v} + EXCLUDED.{v}"
     )
 
 
@@ -257,7 +247,7 @@ def _write_partition(
     sql: str,
     names: list[str],
     batch_size: int,
-    ledger_key: tuple[str, int] | None = None,
+    ledger_key: tuple[str, int],
     paramstyle: str = "pyformat",
     n_parts: int = 0,
     partition_id: int | None = None,
@@ -271,91 +261,77 @@ def _write_partition(
     AbstractStatsAggregation.java:154), one commit per partition —
     partition-atomic like the reference's per-flush transaction.
 
-    With ``ledger_key`` (table, batch_id) the partition's ledger marker
+    The partition's ledger marker for ``ledger_key`` (table, batch_id)
     is claimed INSIDE the same transaction as its upserts: a Spark task
     retry after a successful commit — or a whole foreachBatch replay —
     finds the marker already present (claim affects 0 rows) and skips,
     so the non-idempotent additive upsert is applied exactly once per
     (batch, partition). This is the partition-granular version of the
     atomicity the reference buys with XA 2PC (XAPostgresSink.java:
-    122-175); the SET-merge discipline doesn't need it (replays are
-    naturally idempotent).
+    122-175). An empty partition still claims its marker, so a
+    committed batch always shows num_partitions rows.
 
     VALID ONLY IF row->partition assignment is reproducible across
     replays — which the caller guarantees by hash-repartitioning the
     batch on the table's key with a PINNED partition count (JdbcSink
     does this; session shuffle settings and AQE coalescing must never
     decide these partition ids)."""
-    if ledger_key is None:
-        # SET-merge partitions follow the upstream shuffle (often many
-        # and mostly empty on small triggers): peek before paying a
-        # connection + commit for an empty partition. The ledger path
-        # must NOT skip — empty pinned partitions still claim their
-        # marker so a committed batch always shows num_partitions rows.
-        import itertools
-
-        rows = iter(rows)
-        first = next(rows, _EMPTY)
-        if first is _EMPTY:
-            return
-        rows = itertools.chain([first], rows)
     conn = connection_factory()
     try:
         cur = conn.cursor()
-        if ledger_key is not None:
-            if partition_id is not None:
-                pid = partition_id
-            else:
-                from pyspark import TaskContext
+        if partition_id is not None:
+            pid = partition_id
+        else:
+            from pyspark import TaskContext
 
-                ctx = TaskContext.get()
-                if ctx is None:
-                    raise RuntimeError(
-                        "ledger-guarded write outside a Spark task needs "
-                        "an explicit partition_id — defaulting would "
-                        "collapse every partition onto one ledger key "
-                        "and silently discard the rest as replays"
-                    )
-                pid = ctx.partitionId()
-            cur.execute(
-                claim_sql or ledger_claim_sql(paramstyle),
-                (ledger_key[0], ledger_key[1], pid, n_parts),
-            )
-            rc = getattr(cur, "rowcount", None)
-            if rc == 0:
-                # a completed prior attempt owns this partition — but
-                # verify it was written under the SAME pinned partition
-                # count, or the replayed rows hash elsewhere and the
-                # skip silently loses / double-applies them
-                if hasattr(cur, "fetchone") and n_parts:
-                    ph = PARAM_PLACEHOLDERS[paramstyle]
-                    cur.execute(
-                        f"SELECT n_parts FROM {LEDGER_TABLE} WHERE "
-                        f"table_name = {ph} AND batch_id = {ph} AND "
-                        f"partition_id = {ph}",
-                        (ledger_key[0], ledger_key[1], pid),
-                    )
-                    prior = cur.fetchone()
-                    if prior is not None and prior[0] not in (0, n_parts):
-                        raise RuntimeError(
-                            f"{ledger_key[0]} batch {ledger_key[1]}: a "
-                            f"prior attempt committed partitions under "
-                            f"num_partitions={prior[0]}, this run uses "
-                            f"{n_parts} — row->partition assignment "
-                            "changed mid-batch; restore the original "
-                            "setting to finish the batch"
-                        )
-                conn.rollback()
-                if skip_acc is not None:
-                    skip_acc.add(1)
-                return
-            if rc != 1:
+            ctx = TaskContext.get()
+            if ctx is None:
                 raise RuntimeError(
-                    f"ledger claim reported rowcount {rc!r}; the replay "
-                    "guard needs the DB-API rowcount contract (0 = "
-                    "already claimed, 1 = claimed now) — a fail-open "
-                    "driver here would double-apply additive deltas"
+                    "ledger-guarded write outside a Spark task needs "
+                    "an explicit partition_id — defaulting would "
+                    "collapse every partition onto one ledger key "
+                    "and silently discard the rest as replays"
                 )
+            pid = ctx.partitionId()
+        cur.execute(
+            claim_sql or ledger_claim_sql(paramstyle),
+            (ledger_key[0], ledger_key[1], pid, n_parts),
+        )
+        rc = getattr(cur, "rowcount", None)
+        if rc == 0:
+            # a completed prior attempt owns this partition — but
+            # verify it was written under the SAME pinned partition
+            # count, or the replayed rows hash elsewhere and the skip
+            # silently loses / double-applies them
+            if hasattr(cur, "fetchone") and n_parts:
+                ph = PARAM_PLACEHOLDERS[paramstyle]
+                cur.execute(
+                    f"SELECT n_parts FROM {LEDGER_TABLE} WHERE "
+                    f"table_name = {ph} AND batch_id = {ph} AND "
+                    f"partition_id = {ph}",
+                    (ledger_key[0], ledger_key[1], pid),
+                )
+                prior = cur.fetchone()
+                if prior is not None and prior[0] not in (0, n_parts):
+                    raise RuntimeError(
+                        f"{ledger_key[0]} batch {ledger_key[1]}: a "
+                        f"prior attempt committed partitions under "
+                        f"num_partitions={prior[0]}, this run uses "
+                        f"{n_parts} — row->partition assignment "
+                        "changed mid-batch; restore the original "
+                        "setting to finish the batch"
+                    )
+            conn.rollback()
+            if skip_acc is not None:
+                skip_acc.add(1)
+            return
+        if rc != 1:
+            raise RuntimeError(
+                f"ledger claim reported rowcount {rc!r}; the replay "
+                "guard needs the DB-API rowcount contract (0 = "
+                "already claimed, 1 = claimed now) — a fail-open "
+                "driver here would double-apply additive deltas"
+            )
         buf: list[tuple] = []
         written = 0
         for r in rows:
@@ -391,16 +367,15 @@ class JdbcSink:
     ``connection_factory`` is an injection seam (tests substitute a
     recording connection; production default is psycopg2 over ``dsn``).
 
-    ``num_partitions`` pins the additive mode's write parallelism: the
-    batch is hash-repartitioned on the table's primary key with this
-    EXPLICIT count, so a replayed batch reproduces the identical
-    row->partition assignment regardless of session shuffle settings or
-    AQE — the invariant the per-partition replay ledger depends on.
+    ``num_partitions`` pins the write parallelism: the batch is
+    hash-repartitioned on the table's primary key with this EXPLICIT
+    count, so a replayed batch reproduces the identical row->partition
+    assignment regardless of session shuffle settings or AQE — the
+    invariant the per-partition replay ledger depends on.
     """
 
     dsn: str
     table: str
-    mode: str = "additive"
     batch_size: int = 100
     connection_factory: Callable | None = None
     num_partitions: int = 32
@@ -424,23 +399,19 @@ class JdbcSink:
             factory = functools.partial(_pg_connect, self.dsn)
         cols, pk = FACT_TABLES[self.table]
         names = [c for c, _ in cols]
-        out = batch_df.select(*names)
-        ledger_key = None
-        if self.mode == "additive":
-            # additive upserts are not idempotent -> ledger-guard each
-            # partition, and make partition ids replay-stable by hash
-            # partitioning on the key with a pinned count (see
-            # _write_partition); SET-merge replays are no-ops as-is
-            ledger_key = (self.table, batch_id)
-            out = out.repartition(self.num_partitions, *pk)
-            self._preflight(factory, batch_id)
+        # additive upserts are not idempotent -> ledger-guard each
+        # partition, and make partition ids replay-stable by hash
+        # partitioning on the key with a pinned count (see
+        # _write_partition)
+        out = batch_df.select(*names).repartition(self.num_partitions, *pk)
+        self._preflight(factory, batch_id)
         writer = functools.partial(
             _write_partition,
             connection_factory=factory,
-            sql=upsert_sql(self.table, self.mode, self.paramstyle),
+            sql=upsert_sql(self.table, self.paramstyle),
             names=names,
             batch_size=self.batch_size,
-            ledger_key=ledger_key,
+            ledger_key=(self.table, batch_id),
             paramstyle=self.paramstyle,
             n_parts=self.num_partitions,
             claim_sql=ledger_claim_sql(self.paramstyle),
@@ -451,7 +422,7 @@ class JdbcSink:
         out.foreachPartition(writer)
 
     def _preflight(self, factory: Callable, batch_id: int) -> None:
-        """Driver-side ledger sanity pass before an additive batch:
+        """Driver-side ledger sanity pass before each batch:
 
         - SCHEMA PROBE: a ledger table created before ``n_parts`` was
           added makes every claim INSERT fail with a column-count

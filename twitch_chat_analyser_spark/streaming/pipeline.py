@@ -1,36 +1,35 @@
-"""Streaming write path: the five fact-table pipelines behind
-Structured Streaming with exactly-once upsert sinks (SURVEY.md §7.4).
+"""Streaming write path: the five fact-table pipelines and the
+matched-message side output behind ONE Structured Streaming query with
+exactly-once sinks (SURVEY.md §7.4).
 
 Reference mapping:
 - Kafka source + committed offsets (EmoteAnalyser.java:65-78) ->
   ``readStream`` (file source in tests; swap ``.format("kafka")`` with
   the same downstream plan for production) with offsets tracked in the
   Spark checkpoint.
+- one consumer fanned into five aggregations plus a side output
+  (EmoteAnalyser.java:65-151) -> :func:`run_all`: one query, whose
+  ``foreachBatch`` sink persists the micro-batch once and runs every
+  fact transform on it in batch mode (duality D4).
 - keyed tumbling-window state + processing-time partial flush
-  (AbstractStatsAggregation.java:63-115) -> ``groupBy(window(...))`` in
-  **update** output mode with a processing-time trigger: each trigger
-  emits the per-window CUMULATIVE count for every key changed in that
-  batch. NO watermark by default — parity with the reference's
-  unbounded-lateness design (a late event lands in its old bucket);
-  pass ``watermark=`` to bound state at scale (SURVEY §7.6 item 4).
-- XA two-phase-commit upsert sink (XAPostgresSink.java:89-175) ->
-  ``foreachBatch`` + key-based MERGE where the merge action is
-  ``SET value = source.value`` (update mode emits cumulative counts, so
-  the merge is naturally idempotent across batch replays — the replay
-  hazard of the reference's additive ``cnt = cnt + EXCLUDED.cnt`` upsert
-  disappears; design decision D3, SURVEY §7.0).
+  (AbstractStatsAggregation.java:63-115) -> no streaming state at all:
+  each trigger aggregates its batch ALONE and the store accumulates
+  the deltas, like the reference clearing Flink state on every flush
+  and letting Postgres hold history. A late event lands additively in
+  its old bucket (unbounded lateness, no watermark).
+- double-row additive upsert + XA two-phase commit
+  (ChannelStatsAggregation.java:45-63, XAPostgresSink.java:89-175) ->
+  per-batch deltas plus their ``timestamp = 0`` totals, applied by a
+  per-table writer that makes replays no-ops: the journaled parquet
+  :func:`additive_merge` by default, or the ledger-guarded
+  ``jdbc.JdbcSink``.
 
 End-to-end latency: Spark commits sink + offsets per micro-batch, so the
 worst case is one trigger interval — strictly better than the
 reference's aggregation-interval + checkpoint-interval bound
 (README.md:62-67).
 
-Sink layouts: the update-mode SET-merge sink (``merge_upsert``) rewrites
-a flat parquet directory via left-anti union + atomic swap — the
-portable stand-in for ``MERGE INTO`` on Delta/Iceberg (jars not in this
-image) or JDBC ``INSERT .. ON CONFLICT DO UPDATE SET x = EXCLUDED.x``.
-The additive delta sink (``additive_merge``, the default single-pass
-topology's store) has an ADAPTIVE layout since round 7: flat
+Parquet store layout: ``additive_merge`` is ADAPTIVE — a flat
 whole-rewrite while the store is under FLAT_STORE_MAX_BYTES (cheapest
 for small tables — one job, one file set), then DAY-PARTITIONED with
 per-partition replay journals once it crosses, so a trigger reads and
@@ -45,8 +44,9 @@ from __future__ import annotations
 import json
 import os
 import shutil
-import tempfile
+import time
 import uuid
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -76,30 +76,6 @@ def read_message_stream(
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     return reader.parquet(source_dir)
-
-
-def merge_upsert(spark: SparkSession, path: str, src: DataFrame, keys: list[str]) -> None:
-    """Idempotent key-based MERGE into a local parquet table:
-    delete-matching + insert (SET = source semantics), atomic directory
-    swap. Stand-in for Delta ``MERGE INTO`` / JDBC upsert."""
-    src = src.cache()
-    try:
-        if os.path.isdir(path):
-            old = spark.read.parquet(path)
-            merged = old.join(src.select(*keys), keys, "left_anti").unionByName(src)
-        else:
-            merged = src
-        tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
-        merged.write.mode("overwrite").parquet(tmp)
-        back = f"{path}.old-{uuid.uuid4().hex[:8]}"
-        had_old = os.path.isdir(path)
-        if had_old:
-            os.rename(path, back)
-        os.rename(tmp, path)
-        if had_old:
-            shutil.rmtree(back, ignore_errors=True)
-    finally:
-        src.unpersist()
 
 
 @dataclass
@@ -137,117 +113,6 @@ def default_pipelines(spark: SparkSession) -> list[Pipeline]:
     ]
 
 
-def start_pipeline(
-    spark: SparkSession,
-    messages_stream: DataFrame,
-    pipeline: Pipeline,
-    out_dir: str,
-    checkpoint_dir: str,
-    trigger: dict | None = None,
-    watermark: str | None = None,
-):
-    """Start one streaming query: transform -> update-mode streaming agg
-    -> foreachBatch MERGE. Returns the StreamingQuery handle."""
-    src = messages_stream
-    if watermark:
-        src = src.withWatermark("ts", watermark)
-    stats = pipeline.transform(src)
-    target = os.path.join(out_dir, pipeline.name)
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        merge_upsert(spark, target, batch_df, pipeline.keys)
-
-    writer = (
-        stats.writeStream.outputMode("update")
-        .option("checkpointLocation", os.path.join(checkpoint_dir, pipeline.name))
-        .foreachBatch(sink)
-    )
-    trigger = trigger or {"availableNow": True}
-    return writer.trigger(**trigger).start()
-
-
-def run_all(
-    spark: SparkSession,
-    source_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    trigger: dict | None = None,
-    max_files_per_trigger: int | None = None,
-    watermark: str | None = None,
-    merge_metrics: list | None = None,
-) -> list:
-    """DEFAULT write-path topology: all five fact tables + the
-    matched-message side output from ONE streaming query scanning the
-    source once per trigger (:func:`run_all_single_pass`) — the
-    reference's actual dataflow shape, and the one that meets its 5 s
-    trigger budget (the five-query shape pays 5x source scans and
-    overruns it; see ``run_all_multi_query``).
-
-    ``watermark`` routes to the multi-query topology: bounding streaming
-    state is an update-mode feature — the single-pass plan is stateless
-    (per-batch deltas accumulate in the store) and needs none.
-
-    MIGRATION: the two topologies differ in checkpoint layout AND merge
-    discipline (journaled additive deltas + sentinel totals vs
-    idempotent SET-merge). An existing deployment must keep the topology
-    its checkpoints/output were created with — switching against a
-    populated out_dir reprocesses from offset zero into already-merged
-    tables. Start a new out_dir/checkpoint_dir to change topology.
-
-    Returns the progress records (one list per query — here a single
-    query) so callers can report per-trigger latency percentiles."""
-    if watermark is not None:
-        return run_all_multi_query(
-            spark, source_dir, out_dir, checkpoint_dir, trigger,
-            max_files_per_trigger, watermark,
-        )
-    return [
-        run_all_single_pass(
-            spark, source_dir, out_dir, checkpoint_dir, trigger,
-            max_files_per_trigger, merge_metrics=merge_metrics,
-        )
-    ]
-
-
-def run_all_multi_query(
-    spark: SparkSession,
-    source_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    trigger: dict | None = None,
-    max_files_per_trigger: int | None = None,
-    watermark: str | None = None,
-) -> list:
-    """COMPAT-ONLY topology: five INDEPENDENT streaming queries (one
-    per fact table), each with its own checkpoint, update-mode streaming
-    agg and naturally idempotent SET-merge sink. Simple and
-    independently restartable — but every query re-reads the source per
-    trigger (5x scan + 5x checkpoint bookkeeping), which at the
-    reference's 5 s trigger interval overruns the budget on the bench
-    workload. It exists for one feature the stateless single-pass plan
-    cannot express: watermark-bounded streaming state (``run_all``
-    routes ``watermark=`` here). It is excluded from bench.py's headline
-    — Structured Streaming gives each query its own source, so the 5x
-    scan cannot be shared away; replay-idempotence remains
-    pytest-covered. :func:`run_all` (single-pass) is the default.
-
-    Runs until available data is exhausted (availableNow by default —
-    replayable, resumes from the checkpoint like the reference's Kafka
-    reprocessing flow, README.md:86-101).
-
-    Returns the queries' recent progress records (one list per query)."""
-    stream = read_message_stream(spark, source_dir, max_files_per_trigger)
-    queries = [
-        start_pipeline(
-            spark, stream, p, out_dir, checkpoint_dir, trigger, watermark
-        )
-        for p in default_pipelines(spark)
-    ]
-    for q in queries:
-        q.awaitTermination()
-    return [q.recentProgress for q in queries]
-
-
 def _applied_batches(path: str) -> set[int]:
     """Union of applied batch ids across the store's journals — the
     root journal of the legacy flat layout plus every per-bucket
@@ -280,6 +145,21 @@ DAY_MS = 86_400_000
 def _day_bucketize(df: DataFrame) -> DataFrame:
     return df.withColumn(
         "bucket", F.floor(F.col("timestamp") / F.lit(DAY_MS)).cast("int")
+    )
+
+
+def _legacy_bucketize(df: DataFrame) -> DataFrame:
+    """Serving-read bucketizer for not-yet-migrated flat rows: rows
+    without a timestamp column get the sentinel bucket, which never
+    matches a migration marker."""
+    if "timestamp" in df.columns:
+        return _day_bucketize(df)
+    return df.withColumn("bucket", F.lit(-1).cast("int"))
+
+
+def _is_bucketed(path: str) -> bool:
+    return os.path.isdir(path) and any(
+        e.startswith("bucket=") for e in os.listdir(path)
     )
 
 
@@ -408,10 +288,7 @@ def additive_merge(
     from . import storeswap
 
     limit = FLAT_STORE_MAX_BYTES if flat_max_bytes is None else flat_max_bytes
-    has_buckets = os.path.isdir(path) and any(
-        e.startswith("bucket=") for e in os.listdir(path)
-    )
-    if not has_buckets:
+    if not _is_bucketed(path):
         # heal a torn FLAT swap before sizing/merging (crash between
         # the two renames would otherwise silently lose the store)
         storeswap.recover(path)
@@ -491,11 +368,6 @@ def read_table(spark: SparkSession, path: str) -> DataFrame:
     bucket, which never matches a marker)."""
     from . import bucketstore
 
-    def _legacy_bucketize(df: DataFrame) -> DataFrame:
-        if "timestamp" in df.columns:
-            return _day_bucketize(df)
-        return df.withColumn("bucket", F.lit(-1).cast("int"))
-
     bucketstore.recover(path, restore_only=True)
     df = bucketstore.read_store(spark, path, bucketize=_legacy_bucketize)
     if df is None:
@@ -507,7 +379,8 @@ def read_table(spark: SparkSession, path: str) -> DataFrame:
             e.startswith("batch=") for e in os.listdir(path)
         ):
             return _read_matched_root(spark, path)
-        # flat SET-merge table: plain parquet read
+        # flat additive store (under FLAT_STORE_MAX_BYTES, never
+        # bucketed): plain parquet read
         return spark.read.parquet(path)
     return df.drop("bucket")
 
@@ -527,11 +400,6 @@ def read_table_snapshot(spark: SparkSession, path: str):
     import contextlib
 
     from . import bucketstore
-
-    def _legacy_bucketize(df: DataFrame) -> DataFrame:
-        if "timestamp" in df.columns:
-            return _day_bucketize(df)
-        return df.withColumn("bucket", F.lit(-1).cast("int"))
 
     @contextlib.contextmanager
     def _cm():
@@ -796,42 +664,82 @@ def with_total_rows(stats: DataFrame, keys: list[str], value_col: str) -> DataFr
     return stats.unionByName(totals)
 
 
-def start_delta_pipeline(
-    spark: SparkSession,
-    messages_stream: DataFrame,
-    pipeline: Pipeline,
+@dataclass
+class Trigger:
+    """One non-empty micro-batch, ready for its per-table merges
+    (:func:`prepare_trigger`)."""
+
+    batch: DataFrame  # persisted
+    rows: int
+    hint: list[int] | None  # day buckets a merge may touch
+    shuffle_partitions: int
+    occurrences: DataFrame  # the shared emote extraction, persisted
+
+    def build(self, pipeline: Pipeline) -> DataFrame:
+        """The pipeline's stats for this batch; both emote tables derive
+        from the one shared extraction."""
+        if pipeline.name == "emote_stats":
+            return agg.emote_stats_from_occurrences(self.occurrences)
+        if pipeline.name == "user_emote_stats":
+            return agg.user_emote_stats_from_occurrences(self.occurrences)
+        return pipeline.transform(self.batch)
+
+    def release(self) -> None:
+        self.occurrences.unpersist()
+        self.batch.unpersist()
+
+
+def prepare_trigger(
+    batch_df: DataFrame,
     out_dir: str,
-    checkpoint_dir: str,
-    trigger: dict | None = None,
-):
-    """Reference-exact state bounding (SURVEY §7.6 items 4/6): aggregate
-    each micro-batch ALONE inside ``foreachBatch`` (the same pure
-    transform, in batch mode — duality D4) and ADD the per-batch deltas
-    into the sink table, sentinel ``timestamp=0`` totals included.
+    pipelines: list[Pipeline],
+    emotes: DataFrame,
+) -> Trigger | None:
+    """The per-trigger work every table's merge shares. Returns None,
+    with the batch released, for an empty micro-batch.
 
-    The streaming plan has ZERO stateful operators — long-term
-    accumulation lives in the store, exactly like the reference where
-    Flink state is cleared on every flush and Postgres holds history
-    (AbstractStatsAggregation.java:108-112). Late data lands additively
-    in its old window bucket with unbounded lateness, no watermark
-    needed. Trade-off vs the update-mode pipeline: the sink must be
-    additive (needs the batch-id journal for replays) instead of the
-    naturally idempotent SET-merge.
-    """
-    target = os.path.join(out_dir, pipeline.name)
+    - Persists the batch, then runs ONE span job: it materializes the
+      cache (one parallel pass instead of six cold jobs racing block
+      locks), prices the day-bucket hint shared by all five merges
+      (replacing a per-merge distinct-collect probe — five probe jobs
+      per trigger was the difference between meeting and missing the
+      5 s budget at bench scale), guards the empty micro-batch (ADVICE
+      r8: it must not rewrite and re-journal five stores), and sizes
+      the trigger's reduce-side parallelism.
+    - Builds ONE emote extraction, shared by both emote tables
+      (EmoteAnalyser.java:98-129 likewise derives emote_stats AND
+      user_emote_stats from a single extracted stream): persisted so
+      concurrent merges compute the explode + broadcast dim join once
+      (VERDICT r8 #3).
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        stats = pipeline.transform(batch_df)
-        value_col = [c for c in stats.columns if c not in pipeline.keys][0]
-        deltas = with_total_rows(stats, pipeline.keys, value_col)
-        additive_merge(spark, target, deltas, pipeline.keys, value_col, batch_id)
-
-    return (
-        messages_stream.writeStream.outputMode("append")
-        .option("checkpointLocation", os.path.join(checkpoint_dir, pipeline.name))
-        .foreachBatch(sink)
-        .trigger(**(trigger or {"availableNow": True}))
-        .start()
+    Shuffle partitions are sized on ``batch_df.sparkSession``; the
+    caller sets them on that session and calls :meth:`Trigger.release`
+    when the merges are done."""
+    batch_df.persist()
+    span = batch_df.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.min(F.unix_millis("ts")).alias("min_ms"),
+        F.max(F.unix_millis("ts")).alias("max_ms"),
+    ).first()
+    if span["n"] == 0:
+        batch_df.unpersist()
+        return None
+    stores = [os.path.join(out_dir, p.name) for p in pipelines]
+    hint = None
+    if any(_is_bucketed(d) for d in stores):
+        # window-end timestamps can cross into the next day; +1 day
+        # of slack keeps the hint a superset (extras are no-ops)
+        hint = [0] + list(range(
+            int(span["min_ms"] // DAY_MS),
+            int(span["max_ms"] // DAY_MS) + 2,
+        ))
+    store_b = max((_store_bytes(d) for d in stores), default=0)
+    return Trigger(
+        batch_df,
+        span["n"],
+        hint,
+        trigger_shuffle_partitions(batch_df.sparkSession, span["n"], store_b),
+        agg.emote_occurrences(batch_df, emotes).persist(),
     )
 
 
@@ -839,16 +747,16 @@ def merge_once(
     spark: SparkSession,
     out_dir: str,
     pipeline: Pipeline,
-    batch_df: DataFrame,
-    shared: dict,
-    hint,
+    trig: Trigger,
     batch_id: int,
     stream_id: str | None = None,
+    write=None,
 ) -> str:
-    """ONE table's per-trigger work: build the delta (the pipeline's
-    transform, or a shared pre-computed builder for the two emote
-    tables), append the sentinel totals, and run the journaled additive
-    merge. Returns the layout used.
+    """ONE table's per-trigger work: build the delta, append the
+    sentinel totals, and apply them exactly once — through ``write``
+    (a ``(deltas, batch_id)`` callable such as ``jdbc.JdbcSink``) or,
+    by default, the journaled parquet :func:`additive_merge`. Returns
+    the parquet layout used, or the writer's class name.
 
     This is the unit the streaming sink runs CONCURRENTLY per table
     and the bench's isolated-floor probe runs SERIALLY — one
@@ -860,15 +768,15 @@ def merge_once(
     twice; lazy persist (not an eager localCheckpoint) keeps the whole
     merge ONE Spark job (round 8, trigger-budget headroom).
     """
-    build = shared.get(
-        pipeline.name, lambda: pipeline.transform(batch_df)
-    )
-    stats = build().persist()
+    stats = trig.build(pipeline).persist()
     try:
         value_col = [
             c for c in stats.columns if c not in pipeline.keys
         ][0]
         deltas = with_total_rows(stats, pipeline.keys, value_col)
+        if write is not None:
+            write(deltas, batch_id)
+            return type(write).__name__
         return additive_merge(
             spark,
             os.path.join(out_dir, pipeline.name),
@@ -876,46 +784,55 @@ def merge_once(
             pipeline.keys,
             value_col,
             batch_id,
-            touched_hint=hint,
+            touched_hint=trig.hint,
             stream_id=stream_id,
         )
     finally:
         stats.unpersist()
 
 
-def run_all_single_pass(
+def run_all(
     spark: SparkSession,
     source_dir: str,
     out_dir: str,
     checkpoint_dir: str,
     trigger: dict | None = None,
     max_files_per_trigger: int | None = None,
-    include_matched_messages: bool = True,
     merge_metrics: list | None = None,
+    writer: dict | None = None,
 ) -> list:
-    """All five fact tables + the matched-message side output from ONE
-    streaming query — the reference's actual topology: a single Kafka
-    consumer fans out into five aggregation dataflows plus a side output
-    (EmoteAnalyser.java:65-151), the stream is consumed once.
+    """The write path: all five fact tables + the matched-message side
+    output from ONE streaming query — the reference's topology, a
+    single Kafka consumer fanned into five aggregation dataflows plus a
+    side output (EmoteAnalyser.java:65-151); the stream is consumed
+    once.
 
-    ``run_all_multi_query`` runs five queries, each re-reading the
-    source — simple, independently restartable, but at 100 TB/day of
-    replay that is 5x the source scan and 5x the checkpoint
-    bookkeeping. Here (the default behind ``run_all``) each
-    micro-batch is persisted once and every fact transform runs against
-    the cached batch (batch-mode duality D4), so per trigger the source
-    is scanned exactly once; the per-batch deltas land through the
-    journaled additive merge (sentinel ``timestamp=0`` totals included),
-    so a replayed batch is a no-op on every table and the streaming plan
-    itself is stateless — state bounding identical to the reference's
-    flush-and-clear + DB accumulation (AbstractStatsAggregation.java:
-    108-112).
+    Each micro-batch is persisted once and every fact transform runs
+    against the cached batch (batch-mode duality D4), so per trigger
+    the source is scanned exactly once. The per-batch deltas, sentinel
+    ``timestamp=0`` totals included, land through a replay-guarded
+    additive writer, so a replayed batch is a no-op on every table and
+    the streaming plan itself is stateless — state bounding identical
+    to the reference's flush-and-clear + DB accumulation
+    (AbstractStatsAggregation.java:108-112).
+
+    ``writer``: ``None`` (the default) merges each table into its
+    journaled parquet store under ``out_dir`` (:func:`additive_merge`);
+    otherwise a mapping from every fact-table name to a ``(deltas,
+    batch_id)`` callable that applies the deltas exactly once — e.g.
+    one ``jdbc.JdbcSink`` per table.
 
     The side output is written ``overwrite`` into a ``batch=<id>``
-    subdirectory: a replay overwrites the same directory, keeping the
-    append log exactly-once too (MessagesMatchingPhraseExporter.java:
-    16-50 gets the same guarantee from the XA wrapper).
-    """
+    subdirectory of ``out_dir`` whatever the writer: a replay
+    overwrites the same directory, keeping the append log exactly-once
+    too (MessagesMatchingPhraseExporter.java:16-50 gets the same
+    guarantee from the XA wrapper).
+
+    Runs until available data is exhausted (availableNow by default —
+    replayable, resumes from the checkpoint like the reference's Kafka
+    reprocessing flow, README.md:86-101). Returns ``[progress]``, the
+    query's progress records in a one-element list, so callers can
+    report per-trigger latency percentiles."""
     pipelines = default_pipelines(spark)
     phrases = dims.phrases_df(spark)
     emotes = dims.emotes_df(spark)
@@ -938,19 +855,7 @@ def run_all_single_pass(
             )
         return ident["id"]
 
-    def _any_bucketed() -> bool:
-        for p in default_pipelines(spark):
-            d = os.path.join(out_dir, p.name)
-            if os.path.isdir(d) and any(
-                e.startswith("bucket=") for e in os.listdir(d)
-            ):
-                return True
-        return False
-
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        import time
-        from concurrent.futures import ThreadPoolExecutor
-
         # the micro-batch DataFrame is bound to MicroBatchExecution's
         # CLONED session (shared SparkContext, isolated SQLConf) — run
         # every sink job through it so the per-trigger shuffle-
@@ -959,59 +864,16 @@ def run_all_single_pass(
         # the clone's conf set is invisible on the outer session)
         sess = batch_df.sparkSession
         sid = _stream_identity()
-        batch_df.persist()
-        # ONE up-front span job per trigger: it materializes the cache
-        # (one parallel pass instead of six cold jobs racing block
-        # locks), prices the day-bucket hint shared by all five merges
-        # (replacing the per-merge distinct-collect probe — five probe
-        # jobs per trigger was the difference between meeting and
-        # missing the 5 s budget at bench scale), guards the empty
-        # micro-batch (ADVICE r8: an empty batch must not rewrite and
-        # re-journal five stores), and sizes the trigger's reduce-side
-        # parallelism below.
         t_span = time.time()
-        span = batch_df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.min(F.unix_millis("ts")).alias("min_ms"),
-            F.max(F.unix_millis("ts")).alias("max_ms"),
-        ).first()
+        trig = prepare_trigger(batch_df, out_dir, pipelines, emotes)
         if merge_metrics is not None:
             merge_metrics.append({
                 "batch_id": batch_id, "step": "span_agg",
-                "sec": round(time.time() - t_span, 3), "rows": span["n"],
+                "sec": round(time.time() - t_span, 3),
+                "rows": trig.rows if trig else 0,
             })
-        if span["n"] == 0:
-            batch_df.unpersist()
+        if trig is None:
             return
-        hint = None
-        if _any_bucketed():
-            # window-end timestamps can cross into the next day; +1 day
-            # of slack keeps the hint a superset (extras are no-ops)
-            hint = [0] + list(range(
-                int(span["min_ms"] // DAY_MS),
-                int(span["max_ms"] // DAY_MS) + 2,
-            ))
-        store_b = max(
-            (_store_bytes(os.path.join(out_dir, p.name)) for p in pipelines),
-            default=0,
-        )
-        nparts = trigger_shuffle_partitions(sess, span["n"], store_b)
-
-        # ONE emote extraction per trigger, shared by both emote tables
-        # (EmoteAnalyser.java:98-129 likewise derives emote_stats AND
-        # user_emote_stats from a single extracted stream): persisted so
-        # the concurrent merges below compute the explode + broadcast
-        # dim join once — it was the largest repeated work item and
-        # user_emote_stats the slowest merge (VERDICT r8 #3).
-        occurrences = agg.emote_occurrences(batch_df, emotes).persist()
-        shared = {
-            "emote_stats": lambda: agg.emote_stats_from_occurrences(
-                occurrences
-            ),
-            "user_emote_stats": (
-                lambda: agg.user_emote_stats_from_occurrences(occurrences)
-            ),
-        }
 
         def merge_one(p: Pipeline) -> None:
             # per-thread scheduler pool: the session runs FAIR mode
@@ -1023,10 +885,9 @@ def run_all_single_pass(
                 "spark.scheduler.pool", f"trigger-{p.name}"
             )
             t0 = time.time()
-            target = os.path.join(out_dir, p.name)
             layout = merge_once(
-                sess, out_dir, p, batch_df, shared, hint, batch_id,
-                stream_id=sid,
+                sess, out_dir, p, trig, batch_id, stream_id=sid,
+                write=None if writer is None else writer[p.name],
             )
             if merge_metrics is not None:
                 # the layout decision + its input (store bytes) land in
@@ -1037,7 +898,9 @@ def run_all_single_pass(
                     "batch_id": batch_id, "step": "merge", "table": p.name,
                     "layout": layout,
                     "merge_sec": round(time.time() - t0, 3),
-                    "store_bytes": _store_bytes(target),
+                    "store_bytes": _store_bytes(
+                        os.path.join(out_dir, p.name)
+                    ),
                 })
 
         def side_output() -> None:
@@ -1047,9 +910,7 @@ def run_all_single_pass(
             t0 = time.time()
             matched = agg.messages_matching_phrase(batch_df, phrases)
             matched.write.mode("overwrite").parquet(
-                os.path.join(
-                    out_dir, "messages_matching_phrase", f"batch={batch_id}"
-                )
+                os.path.join(out_dir, MATCHED_DIRNAME, f"batch={batch_id}")
             )
             if merge_metrics is not None:
                 merge_metrics.append({
@@ -1068,22 +929,21 @@ def run_all_single_pass(
             # on the micro-batch's CLONED session (isolated SQLConf),
             # so a concurrent batch query on the user's session never
             # sees trigger-sized parallelism (ADVICE r11).
-            sess.conf.set("spark.sql.shuffle.partitions", str(nparts))
+            sess.conf.set(
+                "spark.sql.shuffle.partitions", str(trig.shuffle_partitions)
+            )
             # Spark driver actions are thread-safe; each table's jobs
             # run concurrently on the shared executor pool in their own
-            # FAIR scheduler pools (see merge_one), recovering the
-            # parallelism of run_all's five independent queries while
-            # scanning the source exactly once.
+            # FAIR scheduler pools (see merge_one), while the source is
+            # scanned exactly once.
             jobs = [lambda p=p: merge_one(p) for p in pipelines]
-            if include_matched_messages:
-                jobs.append(side_output)
+            jobs.append(side_output)
             with ThreadPoolExecutor(max_workers=len(jobs)) as pool:
                 for f in [pool.submit(j) for j in jobs]:
                     f.result()
         finally:
             sess.conf.set("spark.sql.shuffle.partitions", old_parts)
-            occurrences.unpersist()
-            batch_df.unpersist()
+            trig.release()
 
     stream = read_message_stream(spark, source_dir, max_files_per_trigger)
     # in-plan ingest metrics (rows + event-time bounds per trigger),
@@ -1105,29 +965,4 @@ def run_all_single_pass(
         .start()
     )
     q.awaitTermination()
-    return q.recentProgress
-
-
-def matched_messages_side_output(
-    spark: SparkSession,
-    messages_stream: DataFrame,
-    out_dir: str,
-    checkpoint_dir: str,
-    trigger: dict | None = None,
-):
-    """The reference's side-output append log (A13,
-    MessagesMatchingPhraseExporter.java:16-50): same parent stream,
-    second sink, plain append — no merge needed (append-only log)."""
-    phrases = dims.phrases_df(spark)
-    matched = agg.messages_matching_phrase(messages_stream, phrases)
-    return (
-        matched.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", os.path.join(out_dir, "messages_matching_phrase"))
-        .option(
-            "checkpointLocation",
-            os.path.join(checkpoint_dir, "messages_matching_phrase"),
-        )
-        .trigger(**(trigger or {"availableNow": True}))
-        .start()
-    )
+    return [q.recentProgress]

@@ -1,7 +1,7 @@
 """Bucketed streaming-store layout (bucketstore.py): per-trigger merge
 touches ONLY the buckets present in the batch, per-bucket torn swaps
-heal, and legacy flat stores migrate without losing history or replay
-suppression."""
+heal, and flat stores convert in one swap without losing history or
+replay suppression."""
 
 from __future__ import annotations
 
@@ -87,32 +87,33 @@ def test_per_bucket_torn_swap_heals_on_serve(spark, tmp_path):
 
 
 def test_legacy_flat_store_migrates_with_replay_suppression(spark, tmp_path):
-    from twitch_chat_analyser_spark.streaming.storeswap import swap_in
-
     store = str(tmp_path / "candles")
     b1 = _events(spark, [("2024-01-01 10:05:00", 1, "view", 10.0)])
     # write the PRE-bucketing layout: flat parquet + root journal
-    swap_in(ohlc.ohlc_delta(b1), store, journal_ids={0})
-    assert bucketstore._legacy_flat_files(store)
+    bucketstore.write_store(store, ohlc.ohlc_delta(b1), [0])
+    assert bucketstore._flat_files(store)
 
     b2 = _events(spark, [("2024-01-01 10:30:00", 1, "view", 4.0)], id0=100)
     ohlc.ohlc_merge(spark, store, ohlc.ohlc_delta(b2), 1, num_buckets=4)
-    # flat files folded into buckets, root journal gone
-    assert not bucketstore._legacy_flat_files(store)
+    # flat files converted into buckets, root journal gone
+    assert not bucketstore._flat_files(store)
     assert not os.path.isfile(os.path.join(store, "_applied_batches.json"))
     r = ohlc.serve_candles(spark, store).collect()[0]
     assert (r["open"], r["low"], r["n_events"]) == (10.0, 4.0, 2)
-    # batch 0 from the ROOT journal is still suppressed post-migration
+    # batch 0 from the ROOT journal is still suppressed post-conversion
     ohlc.ohlc_merge(spark, store, ohlc.ohlc_delta(b1), 0, num_buckets=4)
     r = ohlc.serve_candles(spark, store).collect()[0]
     assert r["n_events"] == 2
 
 
 def test_additive_fact_store_day_partitions_leave_history_untouched(
-    spark, tmp_path
+    spark, tmp_path, monkeypatch
 ):
     from twitch_chat_analyser_spark.streaming import pipeline as sp
 
+    # a threshold of 0 forces the partitioned layout — at the default
+    # threshold a store this small stays flat
+    monkeypatch.setattr(sp, "FLAT_STORE_MAX_BYTES", 0)
     store = str(tmp_path / "channel_stats")
     day = sp.DAY_MS
 
@@ -122,18 +123,17 @@ def test_additive_fact_store_day_partitions_leave_history_untouched(
             rows, "channel string, timestamp long, messages long"
         )
 
-    # day 1 history (flat_max_bytes=0 forces the partitioned layout —
-    # at the default threshold a store this small stays flat)
+    # day 1 history
     sp.additive_merge(
         spark, store, deltas(day + 1000, "a", 3),
-        ["channel", "timestamp"], "messages", 0, flat_max_bytes=0,
+        ["channel", "timestamp"], "messages", 0,
     )
     before = _bucket_files(store)
     assert set(before) == {"bucket=0", "bucket=1"}  # sentinel + day 1
     # a day-2 trigger touches {day 2, sentinel}; day 1 files untouched
     sp.additive_merge(
         spark, store, deltas(2 * day + 1000, "a", 4),
-        ["channel", "timestamp"], "messages", 1, flat_max_bytes=0,
+        ["channel", "timestamp"], "messages", 1,
     )
     after = _bucket_files(store)
     assert set(after) == {"bucket=0", "bucket=1", "bucket=2"}
@@ -148,7 +148,7 @@ def test_additive_fact_store_day_partitions_leave_history_untouched(
     # replay of an applied batch id is a no-op on every partition
     sp.additive_merge(
         spark, store, deltas(2 * day + 1000, "a", 4),
-        ["channel", "timestamp"], "messages", 1, flat_max_bytes=0,
+        ["channel", "timestamp"], "messages", 1,
     )
     got2 = {
         (r["channel"], r["timestamp"]): r["messages"]
@@ -158,10 +158,10 @@ def test_additive_fact_store_day_partitions_leave_history_untouched(
 
 
 def test_additive_store_flat_under_threshold_migrates_over_it(
-    spark, tmp_path
+    spark, tmp_path, monkeypatch
 ):
     """Adaptive layout: a small store stays flat (whole-rewrite is one
-    job — cheapest); crossing FLAT_STORE_MAX_BYTES migrates it to day
+    job — cheapest); crossing FLAT_STORE_MAX_BYTES converts it to day
     partitions WITH its replay journal, and accumulated values
     survive."""
     import os
@@ -184,22 +184,24 @@ def test_additive_store_flat_under_threshold_migrates_over_it(
     )
     assert not any(e.startswith("bucket=") for e in os.listdir(store))
     assert os.path.isfile(os.path.join(store, "_applied_batches.json"))
-    # next merge "crosses" the threshold (forced with flat_max_bytes=0)
-    # -> migration folds flat history + journal into day partitions
+    # next merge "crosses" the threshold (forced with a threshold of 0)
+    # -> one swap converts flat history + journal into day partitions
+    monkeypatch.setattr(sp, "FLAT_STORE_MAX_BYTES", 0)
     sp.additive_merge(
         spark, store, deltas(2 * day + 1000, 4),
-        ["channel", "timestamp"], "messages", 1, flat_max_bytes=0,
+        ["channel", "timestamp"], "messages", 1,
     )
     assert any(e.startswith("bucket=") for e in os.listdir(store))
+    assert not bucketstore._flat_files(store)
     got = {
         (r["channel"], r["timestamp"]): r["messages"]
         for r in sp.read_table(spark, store).collect()
     }
     assert got[("a", 0)] == 7
-    # batch 0 from the migrated ROOT journal is still suppressed
+    # batch 0 from the converted ROOT journal is still suppressed
     sp.additive_merge(
         spark, store, deltas(day + 1000, 3),
-        ["channel", "timestamp"], "messages", 0, flat_max_bytes=0,
+        ["channel", "timestamp"], "messages", 0,
     )
     got2 = {
         (r["channel"], r["timestamp"]): r["messages"]
@@ -244,6 +246,7 @@ def test_crash_at_every_rename_point_converges_after_replay(
     from twitch_chat_analyser_spark.streaming import bucketstore
     from twitch_chat_analyser_spark.streaming import pipeline as sp
 
+    monkeypatch.setattr(sp, "FLAT_STORE_MAX_BYTES", 0)
     day = sp.DAY_MS
 
     def deltas(n):
@@ -267,7 +270,7 @@ def test_crash_at_every_rename_point_converges_after_replay(
         try:
             sp.additive_merge(
                 spark, store, deltas(5),
-                ["channel", "timestamp"], "messages", 0, flat_max_bytes=0,
+                ["channel", "timestamp"], "messages", 0,
             )
         except OSError:
             pass
@@ -291,7 +294,7 @@ def test_crash_at_every_rename_point_converges_after_replay(
         # checkpoint replay: the same batch id runs again, uninjected
         sp.additive_merge(
             spark, store, deltas(5),
-            ["channel", "timestamp"], "messages", 0, flat_max_bytes=0,
+            ["channel", "timestamp"], "messages", 0,
         )
         got = sorted(map(tuple, sp.read_table(spark, store).collect()))
         assert got == want, f"crash point {k} diverged"
@@ -301,17 +304,18 @@ def test_crash_during_flat_migration_replays_without_double_count(
     spark, tmp_path, monkeypatch
 ):
     """ADVICE r8 (high): crash injection at every rename point of a
-    migration that STARTS from a flat store. The old fold re-unioned
-    flat rows into already-swapped buckets and re-applied the delta to
-    already-journaled buckets on replay; the per-bucket
-    ``_legacy_migrated`` markers + journal-pending delta filter must
-    make the replayed migration converge to the uninterrupted result."""
+    merge that STARTS from a flat store. The conversion is one
+    whole-store swap, so a crash inside it leaves the old flat store
+    (healed back by recover if the crash fell between its two renames)
+    or the new bucketed one — serving reads see exactly the pre-batch
+    rows there, and the replayed batch converges to the uninterrupted
+    result without double-counting history or the batch."""
     import os as _os
 
     from twitch_chat_analyser_spark.streaming import bucketstore
     from twitch_chat_analyser_spark.streaming import pipeline as sp
-    from twitch_chat_analyser_spark.streaming.storeswap import swap_in
 
+    monkeypatch.setattr(sp, "FLAT_STORE_MAX_BYTES", 0)
     day = sp.DAY_MS
 
     def flat_seed(store):
@@ -321,7 +325,7 @@ def test_crash_during_flat_migration_replays_without_double_count(
             [("a", day + 1000, 3), ("a", 2 * day + 1000, 4), ("a", 0, 7)],
             "channel string, timestamp long, messages long",
         )
-        swap_in(hist, store, journal_ids={0})
+        bucketstore.write_store(store, hist, [0])
 
     def deltas(n):
         return spark.createDataFrame(
@@ -343,7 +347,7 @@ def test_crash_during_flat_migration_replays_without_double_count(
         try:
             sp.additive_merge(
                 spark, store, deltas(5),
-                ["channel", "timestamp"], "messages", 1, flat_max_bytes=0,
+                ["channel", "timestamp"], "messages", 1,
             )
         except OSError:
             pass
@@ -352,25 +356,33 @@ def test_crash_during_flat_migration_replays_without_double_count(
 
     ref = str(tmp_path / "ref")
     flat_seed(ref)
+    before = sorted(map(tuple, sp.read_table(spark, ref).collect()))
     run(ref, crash_after=None)
     want = sorted(map(tuple, sp.read_table(spark, ref).collect()))
-    assert ("a", 0, 12) in want  # 7 folded + 5 delta, applied once
+    assert ("a", 0, 12) in want  # 7 converted + 5 delta, applied once
 
-    # 3 day-buckets to fold + 1 new bucket, 2 renames each -> probe a
-    # generous range; points past the last rename just succeed
-    for k in range(0, 10):
+    # renames 0-1 are the conversion's whole-store swap; then bucket 0
+    # (2 renames) and the new day-3 bucket (1 rename) publish. Points
+    # past the last rename just succeed.
+    for k in range(0, 7):
         store = str(tmp_path / f"s{k}")
         flat_seed(store)
         run(store, crash_after=k)
+        if k <= 2:
+            # crash inside (or right after) the conversion swap: no
+            # bucket of the batch is published yet, and the serve read
+            # is exact — no mixed flat/bucketed state to double-count
+            got = sorted(map(tuple, sp.read_table(spark, store).collect()))
+            assert got == before, f"serve at crash point {k}"
         # checkpoint replay of the same batch, uninjected
         sp.additive_merge(
             spark, store, deltas(5),
-            ["channel", "timestamp"], "messages", 1, flat_max_bytes=0,
+            ["channel", "timestamp"], "messages", 1,
         )
         got = sorted(map(tuple, sp.read_table(spark, store).collect()))
         assert got == want, f"crash point {k} diverged"
-        # migration fully committed: flat files + root journal gone
-        assert not bucketstore._legacy_flat_files(store), f"point {k}"
+        # conversion committed: flat files + root journal gone
+        assert not bucketstore._flat_files(store), f"point {k}"
         assert not os.path.isfile(
             os.path.join(store, "_applied_batches.json")
         ), f"point {k}"
@@ -446,68 +458,12 @@ def test_writer_swap_survives_concurrent_restore_only_heal(
     assert (r["low"], r["n_events"]) == (4.0, 2)  # batch 2 landed once
 
 
-def test_serve_is_exact_during_interrupted_migration(
-    spark, tmp_path, monkeypatch
-):
-    """Between a crash in the migration swap loop and the healing
-    merge, some buckets hold their folded legacy rows while the flat
-    files still exist. The day-bucketed fact-store serve recomputes
-    legacy rows' buckets and drops the marked ones, so read_table is
-    exact in the window (not just after the replay)."""
-    import os as _os
-
-    from twitch_chat_analyser_spark.streaming import bucketstore
-    from twitch_chat_analyser_spark.streaming import pipeline as sp
-    from twitch_chat_analyser_spark.streaming.storeswap import swap_in
-
-    day = sp.DAY_MS
-    store = str(tmp_path / "channel_stats")
-    hist = spark.createDataFrame(
-        [("a", day + 1000, 3), ("a", 2 * day + 1000, 4), ("a", 0, 7)],
-        "channel string, timestamp long, messages long",
-    )
-    swap_in(hist, store, journal_ids={0})
-    want = sorted(map(tuple, sp.read_table(spark, store).collect()))
-
-    # migration-only merge (empty delta), crashing after the FIRST
-    # bucket committed its fold (2 renames: dst->back is skipped for a
-    # fresh bucket, so each commit is one rename)
-    empty = spark.createDataFrame(
-        [], "channel string, timestamp long, messages long"
-    )
-    real_rename = _os.rename
-    calls = {"n": 0}
-
-    def flaky_rename(src, dst):
-        if calls["n"] >= 1:
-            raise OSError("injected crash")
-        calls["n"] += 1
-        return real_rename(src, dst)
-
-    monkeypatch.setattr(bucketstore.os, "rename", flaky_rename)
-    try:
-        sp.additive_merge(
-            spark, store, empty,
-            ["channel", "timestamp"], "messages", 1, flat_max_bytes=0,
-        )
-    except OSError:
-        pass
-    finally:
-        monkeypatch.setattr(bucketstore.os, "rename", real_rename)
-
-    # the window: >=1 marked bucket AND flat files still present
-    assert bucketstore._marked_buckets(store)
-    assert bucketstore._legacy_flat_files(store)
-    got = sorted(map(tuple, sp.read_table(spark, store).collect()))
-    assert got == want  # no double-counted rows mid-migration
-
-
 def test_swap_bucket_double_rename_failure_fails_the_batch(
     tmp_path, monkeypatch
 ):
     """ADVICE r9 (medium): when the publish rename fails twice (lost
-    the heal race again, or a persistent rename error), _swap_bucket
-    must RAISE — returning success would let Structured Streaming
+    the heal race again, or a persistent rename error), the bucket
+    publish must RAISE — returning success would let Structured Streaming
     commit the batch and lose the bucket's delta forever. The raise
     fails the micro-batch so the checkpoint replays it."""
     import os as _os
@@ -528,49 +484,64 @@ def test_swap_bucket_double_rename_failure_fails_the_batch(
         return real_rename(a, b)
 
     monkeypatch.setattr(bucketstore.os, "rename", flaky_rename)
-    with _pytest.raises(bucketstore.BucketSwapError):
-        bucketstore._swap_bucket(store, 0, src)
+    with _pytest.raises(bucketstore.SwapError):
+        bucketstore._publish(store, src, 0)
     # and the error is an OSError so existing crash-injection replay
     # machinery (and foreachBatch) treats it as a batch failure
-    assert issubclass(bucketstore.BucketSwapError, OSError)
+    assert issubclass(bucketstore.SwapError, OSError)
 
 
-def test_read_store_keeps_unbucketizable_legacy_rows(spark, tmp_path):
-    """ADVICE r9 (low): the mid-migration legacy-row drop filter must
-    retain rows whose recomputed bucket is NULL — `~isin` alone
-    filters NULL predicates out, silently dropping them from serve
-    reads."""
-    import shutil as _shutil
-
+def test_flat_store_null_bucket_row_converts_to_sentinel(spark, tmp_path):
+    """ADVICE r9 (low), through the one-swap conversion: a flat row the
+    writer's bucketize cannot place (NULL bucket) converts into the
+    reserved NULL_BUCKET — still served, not dropped by a NULL-blind
+    filter — and its seeded journal still suppresses replays."""
     store = str(tmp_path / "s")
-    # committed bucket 1 carrying its migration marker
-    spark.createDataFrame([(1, 10)], "k long, v long").coalesce(1).write.parquet(
-        os.path.join(store, "bucket=1")
+    bucketstore.write_store(
+        store,
+        spark.createDataFrame([(1, 10), (None, 99)], "k long, v long"),
+        [0],
     )
-    open(os.path.join(store, "bucket=1", "_legacy_migrated"), "w").close()
-    # legacy flat rows at the store root: one already folded into the
-    # marked bucket 1, one with a NULL key (bucketize -> NULL bucket)
-    flat_tmp = str(tmp_path / "flat")
-    spark.createDataFrame(
-        [(1, 10), (None, 99)], "k long, v long"
-    ).coalesce(1).write.parquet(flat_tmp)
-    for f in os.listdir(flat_tmp):
-        if f.endswith(".parquet"):
-            _shutil.copy(os.path.join(flat_tmp, f), os.path.join(store, f))
-    assert bucketstore._legacy_flat_files(store)
+
+    def merge_fn(old, d):
+        if old is None:
+            return d
+        return (
+            old.unionByName(d)
+            .groupBy("k", "bucket")
+            .agg(F.sum("v").alias("v"))
+            .select("k", "v", "bucket")
+        )
 
     bucketize = lambda df: df.withColumn(  # noqa: E731
         "bucket", (F.col("k") % 4).cast("int")
     )
-    got = {
-        (r["k"], r["v"])
-        for r in bucketstore.read_store(spark, store, bucketize=bucketize)
-        .select("k", "v")
-        .collect()
-    }
-    # the folded (1, 10) legacy twin is dropped (marked bucket); the
-    # NULL-key row survives
-    assert got == {(None, 99), (1, 10)}
+
+    def merge(rows, batch_id):
+        bucketstore.merge_into(
+            spark, store, spark.createDataFrame(rows, "k long, v long"),
+            ["k"], merge_fn, num_buckets=4, batch_id=batch_id,
+            bucketize=bucketize,
+        )
+
+    def served():
+        return {
+            (r["k"], r["v"])
+            for r in bucketstore.read_store(spark, store)
+            .select("k", "v")
+            .collect()
+        }
+
+    merge([], 1)  # an empty batch still converts the store
+    assert not bucketstore._flat_files(store)
+    assert os.path.isdir(
+        os.path.join(store, f"bucket={bucketstore.NULL_BUCKET}")
+    )
+    assert served() == {(1, 10), (None, 99)}
+    # batch 0 (root journal, now seeded into every bucket) replays as
+    # a no-op on the sentinel bucket too
+    merge([(None, 99)], 0)
+    assert served() == {(1, 10), (None, 99)}
 
 
 def test_merge_routes_null_buckets_to_sentinel(spark, tmp_path):
@@ -633,7 +604,7 @@ def test_merge_routes_null_buckets_to_sentinel(spark, tmp_path):
 def test_recover_restores_negative_bucket_backup(spark, tmp_path):
     """Review r9: a stranded backup of a NEGATIVE bucket id (pre-1970
     day bucket, NULL_BUCKET sentinel) must be restored, not
-    misclassified as a legacy whole-store backup and deleted."""
+    misclassified as a whole-store backup and deleted."""
     store = str(tmp_path / "s")
     bdir = os.path.join(store, "bucket=-5")
     spark.createDataFrame([(1, 10)], "k long, v long").coalesce(
@@ -649,16 +620,15 @@ def test_recover_restores_negative_bucket_backup(spark, tmp_path):
 def test_flat_swap_survives_concurrent_restore_only_heal(
     spark, tmp_path, monkeypatch
 ):
-    """Review r9: storeswap.swap_in gets the same heal-race retake as
-    _swap_bucket — a reader restoring the backup between the writer's
-    two renames must not kill the query, and the new data wins."""
+    """Review r9: the whole-store publish gets the same heal-race
+    retake as a bucket publish — a reader restoring the backup between
+    the writer's two renames must not kill the query, and the new data
+    wins."""
     import os as _os
 
-    from twitch_chat_analyser_spark.streaming import storeswap
-
     path = str(tmp_path / "flat")
-    storeswap.swap_in(
-        spark.createDataFrame([(1, 1)], "k long, v long"), path
+    bucketstore.write_store(
+        path, spark.createDataFrame([(1, 1)], "k long, v long")
     )
     real_rename = _os.rename
     state = {"armed": True}
@@ -667,19 +637,21 @@ def test_flat_swap_survives_concurrent_restore_only_heal(
         real_rename(src, dst)
         if state["armed"] and ".old-" in str(dst):
             state["armed"] = False
-            storeswap.recover(path, restore_only=True)
+            bucketstore.recover(path, restore_only=True)
 
-    monkeypatch.setattr(storeswap.os, "rename", racing_rename)
-    storeswap.swap_in(
-        spark.createDataFrame([(1, 2)], "k long, v long"), path
+    monkeypatch.setattr(bucketstore.os, "rename", racing_rename)
+    bucketstore.write_store(
+        path, spark.createDataFrame([(1, 2)], "k long, v long")
     )
-    monkeypatch.setattr(storeswap.os, "rename", real_rename)
+    monkeypatch.setattr(bucketstore.os, "rename", real_rename)
     assert [(r["k"], r["v"]) for r in spark.read.parquet(path).collect()] == [
         (1, 2)
     ]
 
 
-def test_replay_journal_is_pruned_to_a_watermark(spark, tmp_path):
+def test_replay_journal_is_pruned_to_a_watermark(
+    spark, tmp_path, monkeypatch
+):
     """Review r11: unpruned journals accrue every batch id ever applied
     — O(stream lifetime) json work per trigger on always-touched
     buckets (the sentinel day-0 bucket). The journal now keeps the top
@@ -701,10 +673,11 @@ def test_replay_journal_is_pruned_to_a_watermark(spark, tmp_path):
         )
 
     # bucketed store: sentinel bucket=0 is touched by every batch
+    monkeypatch.setattr(sp, "FLAT_STORE_MAX_BYTES", 0)
     for b in range(5):
         sp.additive_merge(
             spark, store, deltas(day + 1000, 1),
-            ["channel", "timestamp"], "messages", b, flat_max_bytes=0,
+            ["channel", "timestamp"], "messages", b,
         )
     j = os.path.join(store, "bucket=0", "_applied_batches.json")
     with open(j) as fh:
@@ -714,7 +687,7 @@ def test_replay_journal_is_pruned_to_a_watermark(spark, tmp_path):
     before = sorted(map(tuple, sp.read_table(spark, store).collect()))
     sp.additive_merge(
         spark, store, deltas(day + 1000, 99),
-        ["channel", "timestamp"], "messages", 1, flat_max_bytes=0,
+        ["channel", "timestamp"], "messages", 1,
     )
     assert sorted(map(tuple, sp.read_table(spark, store).collect())) == before
     # a legacy full-history journal shrinks on its next write
@@ -722,12 +695,13 @@ def test_replay_journal_is_pruned_to_a_watermark(spark, tmp_path):
         _json.dump(list(range(5)), fh)
     sp.additive_merge(
         spark, store, deltas(day + 1000, 1),
-        ["channel", "timestamp"], "messages", 5, flat_max_bytes=0,
+        ["channel", "timestamp"], "messages", 5,
     )
     with open(j) as fh:
         assert _json.load(fh) == [4, 5]
 
     # flat store: same pruning through the root journal
+    monkeypatch.undo()
     flat = str(tmp_path / "flat_store")
     for b in range(4):
         sp.additive_merge(
@@ -739,7 +713,7 @@ def test_replay_journal_is_pruned_to_a_watermark(spark, tmp_path):
 
 
 def test_journal_records_stream_identity_and_rejects_a_foreign_one(
-    spark, tmp_path
+    spark, tmp_path, monkeypatch
 ):
     """ADVICE r11: the watermark replay test is only sound within ONE
     checkpoint's monotone batch-id sequence. A fresh checkpoint
@@ -763,12 +737,13 @@ def test_journal_records_stream_identity_and_rejects_a_foreign_one(
         )
 
     # --- bucketed layout ---
+    monkeypatch.setattr(sp, "FLAT_STORE_MAX_BYTES", 0)
     store = str(tmp_path / "bucketed")
     for b in range(3):
         sp.additive_merge(
             spark, store, deltas(1),
             ["channel", "timestamp"], "messages", b,
-            flat_max_bytes=0, stream_id="ckpt-A",
+            stream_id="ckpt-A",
         )
     j = os.path.join(store, "bucket=0", "_applied_batches.json")
     with open(j) as fh:
@@ -779,7 +754,7 @@ def test_journal_records_stream_identity_and_rejects_a_foreign_one(
     sp.additive_merge(
         spark, store, deltas(99),
         ["channel", "timestamp"], "messages", 0,
-        flat_max_bytes=0, stream_id="ckpt-A",
+        stream_id="ckpt-A",
     )
     assert (
         sorted(map(tuple, sp.read_table(spark, store).collect())) == before
@@ -789,7 +764,7 @@ def test_journal_records_stream_identity_and_rejects_a_foreign_one(
         sp.additive_merge(
             spark, store, deltas(1),
             ["channel", "timestamp"], "messages", 0,
-            flat_max_bytes=0, stream_id="ckpt-B",
+            stream_id="ckpt-B",
         )
     # the remediation from the message: delete the journals, then the
     # new stream's batches apply from scratch under the new identity
@@ -800,12 +775,13 @@ def test_journal_records_stream_identity_and_rejects_a_foreign_one(
     sp.additive_merge(
         spark, store, deltas(5),
         ["channel", "timestamp"], "messages", 0,
-        flat_max_bytes=0, stream_id="ckpt-B",
+        stream_id="ckpt-B",
     )
     with open(j) as fh:
         assert _json.load(fh)["stream"] == "ckpt-B"
 
     # --- flat layout: same contract through the root journal ---
+    monkeypatch.undo()
     flat = str(tmp_path / "flat")
     sp.additive_merge(
         spark, flat, deltas(1),
@@ -820,7 +796,9 @@ def test_journal_records_stream_identity_and_rejects_a_foreign_one(
         )
 
 
-def test_legacy_journal_adopts_the_current_stream_identity(spark, tmp_path):
+def test_legacy_journal_adopts_the_current_stream_identity(
+    spark, tmp_path, monkeypatch
+):
     """A v1 list journal carries no identity: the first identity-
     carrying merge must keep the watermark behavior (no spurious
     error) and UPGRADE the journal to the v2 dict format."""
@@ -837,11 +815,12 @@ def test_legacy_journal_adopts_the_current_stream_identity(spark, tmp_path):
             "channel string, timestamp long, messages long",
         )
 
+    monkeypatch.setattr(sp, "FLAT_STORE_MAX_BYTES", 0)
     store = str(tmp_path / "s")
     # identity-less writer (legacy callers) produces the v1 list
     sp.additive_merge(
         spark, store, deltas(1),
-        ["channel", "timestamp"], "messages", 0, flat_max_bytes=0,
+        ["channel", "timestamp"], "messages", 0,
     )
     j = os.path.join(store, f"bucket={day // sp.DAY_MS}")
     j = os.path.join(j, "_applied_batches.json")
@@ -851,7 +830,7 @@ def test_legacy_journal_adopts_the_current_stream_identity(spark, tmp_path):
     sp.additive_merge(
         spark, store, deltas(1),
         ["channel", "timestamp"], "messages", 1,
-        flat_max_bytes=0, stream_id="ckpt-X",
+        stream_id="ckpt-X",
     )
     with open(j) as fh:
         rec = _json.load(fh)
@@ -863,7 +842,7 @@ def test_legacy_journal_adopts_the_current_stream_identity(spark, tmp_path):
     sp.additive_merge(
         spark, store, deltas(50),
         ["channel", "timestamp"], "messages", 1,
-        flat_max_bytes=0, stream_id="ckpt-X",
+        stream_id="ckpt-X",
     )
     assert (
         sorted(map(tuple, sp.read_table(spark, store).collect())) == before
@@ -895,8 +874,6 @@ def test_fsync_dir_reraises_real_io_errors(tmp_path, monkeypatch):
 
     import pytest
 
-    from twitch_chat_analyser_spark.streaming import storeswap
-
     real_fsync = os.fsync
 
     def failing(errnum):
@@ -906,21 +883,23 @@ def test_fsync_dir_reraises_real_io_errors(tmp_path, monkeypatch):
 
     # not-supported: silent no-op
     monkeypatch.setattr(os, "fsync", failing(errno.EINVAL))
-    storeswap._fsync_dir(str(tmp_path))
+    bucketstore._fsync_dir(str(tmp_path))
     monkeypatch.setattr(os, "fsync", failing(errno.ENOTSUP))
-    storeswap._fsync_dir(str(tmp_path))
+    bucketstore._fsync_dir(str(tmp_path))
     # genuine disk failure: must raise
     monkeypatch.setattr(os, "fsync", failing(errno.EIO))
     with pytest.raises(OSError):
-        storeswap._fsync_dir(str(tmp_path))
+        bucketstore._fsync_dir(str(tmp_path))
     monkeypatch.setattr(os, "fsync", failing(errno.ENOSPC))
     with pytest.raises(OSError):
-        storeswap._fsync_dir(str(tmp_path))
+        bucketstore._fsync_dir(str(tmp_path))
     monkeypatch.setattr(os, "fsync", real_fsync)
-    storeswap._fsync_dir(str(tmp_path))  # healthy path still works
+    bucketstore._fsync_dir(str(tmp_path))  # healthy path still works
 
 
-def test_read_snapshot_survives_concurrent_swap_and_gc(spark, tmp_path):
+def test_read_snapshot_survives_concurrent_swap_and_gc(
+    spark, tmp_path, monkeypatch
+):
     """VERDICT r11 task 3: the merge/compaction publish rename could
     yank files under a long concurrent reader (retry contract). A
     hardlink snapshot must keep serving the EXACT pre-merge rows while
@@ -931,6 +910,7 @@ def test_read_snapshot_survives_concurrent_swap_and_gc(spark, tmp_path):
     from twitch_chat_analyser_spark.streaming import bucketstore
     from twitch_chat_analyser_spark.streaming import pipeline as sp
 
+    monkeypatch.setattr(sp, "FLAT_STORE_MAX_BYTES", 0)
     store = str(tmp_path / "channel_stats")
     day = sp.DAY_MS
 
@@ -943,7 +923,7 @@ def test_read_snapshot_survives_concurrent_swap_and_gc(spark, tmp_path):
     for b in range(2):
         sp.additive_merge(
             spark, store, deltas(10),
-            ["channel", "timestamp"], "messages", b, flat_max_bytes=0,
+            ["channel", "timestamp"], "messages", b,
         )
 
     with sp.read_table_snapshot(spark, store) as df:
@@ -956,7 +936,7 @@ def test_read_snapshot_survives_concurrent_swap_and_gc(spark, tmp_path):
         for b in range(2, 5):
             sp.additive_merge(
                 spark, store, deltas(10),
-                ["channel", "timestamp"], "messages", b, flat_max_bytes=0,
+                ["channel", "timestamp"], "messages", b,
             )
         # live store moved on...
         live = sorted(map(tuple, sp.read_table(spark, store).collect()))
@@ -978,6 +958,7 @@ def test_read_snapshot_link_race_retakes_then_falls_back(
     from twitch_chat_analyser_spark.streaming import bucketstore
     from twitch_chat_analyser_spark.streaming import pipeline as sp
 
+    monkeypatch.setattr(sp, "FLAT_STORE_MAX_BYTES", 0)
     store = str(tmp_path / "s")
     day = sp.DAY_MS
     sp.additive_merge(
@@ -987,7 +968,7 @@ def test_read_snapshot_link_race_retakes_then_falls_back(
             [("a", day + 1000, 3)],
             "channel string, timestamp long, messages long",
         ),
-        ["channel", "timestamp"], "messages", 0, flat_max_bytes=0,
+        ["channel", "timestamp"], "messages", 0,
     )
 
     real = bucketstore._link_tree
@@ -1016,13 +997,16 @@ def test_read_snapshot_link_race_retakes_then_falls_back(
     assert bucketstore._snapshot_dirs(store) == []
 
 
-def test_leaked_snapshots_are_gcd_by_the_writer_after_ttl(spark, tmp_path):
+def test_leaked_snapshots_are_gcd_by_the_writer_after_ttl(
+    spark, tmp_path, monkeypatch
+):
     import os
     import time
 
     from twitch_chat_analyser_spark.streaming import bucketstore
     from twitch_chat_analyser_spark.streaming import pipeline as sp
 
+    monkeypatch.setattr(sp, "FLAT_STORE_MAX_BYTES", 0)
     store = str(tmp_path / "s")
     day = sp.DAY_MS
 
@@ -1034,7 +1018,7 @@ def test_leaked_snapshots_are_gcd_by_the_writer_after_ttl(spark, tmp_path):
 
     sp.additive_merge(
         spark, store, deltas(1),
-        ["channel", "timestamp"], "messages", 0, flat_max_bytes=0,
+        ["channel", "timestamp"], "messages", 0,
     )
     stale = f"{store}.snap-deadbeef"
     fresh = f"{store}.snap-cafecafe"
@@ -1045,7 +1029,7 @@ def test_leaked_snapshots_are_gcd_by_the_writer_after_ttl(spark, tmp_path):
     # the single writer GCs leaked snapshots past TTL on its next merge
     sp.additive_merge(
         spark, store, deltas(1),
-        ["channel", "timestamp"], "messages", 1, flat_max_bytes=0,
+        ["channel", "timestamp"], "messages", 1,
     )
     assert not os.path.isdir(stale)
     assert os.path.isdir(fresh)  # a live reader's snapshot survives

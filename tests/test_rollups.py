@@ -93,6 +93,33 @@ def test_streaming_rollup_cascade_matches_batch(spark, tmp_path):
         assert _sorted_rows(got) == _sorted_rows(exp), name
 
 
+def test_rollup_journals_reject_a_fresh_checkpoint(spark, tmp_path):
+    """A fresh checkpoint restarts batch ids at 0: pointed at existing
+    rollup stores it must fail loudly, not watermark-drop every new
+    batch as a replay — the journals record the checkpoint identity
+    (ADVICE r11)."""
+    import pytest
+
+    from twitch_chat_analyser_spark.operators import aggregations as agg
+    from twitch_chat_analyser_spark.streaming import pipeline as sp
+
+    from test_streaming import BATCH_1, BATCH_2, _mk_messages
+
+    src, out = str(tmp_path / "src"), str(tmp_path / "out")
+
+    def run(ckpt):
+        rollups.start_rollup_pipeline(
+            spark, sp.read_message_stream(spark, src), agg.channel_stats,
+            ["channel"], "messages", out, ckpt,
+        ).awaitTermination()
+
+    _mk_messages(spark, BATCH_1).coalesce(1).write.mode("append").parquet(src)
+    run(str(tmp_path / "ckpt1"))
+    _mk_messages(spark, BATCH_2).coalesce(1).write.mode("append").parquet(src)
+    with pytest.raises(Exception, match="refusing the watermark replay"):
+        run(str(tmp_path / "ckpt2"))
+
+
 def test_lsh_probe_is_subset_of_brute_force_candidates(spark):
     # Every LSH result must be a true neighbor (exists in the corpus,
     # not the query itself) and, when the bucket holds the whole true

@@ -157,31 +157,23 @@ def test_segment_merge_is_amortized_and_crash_safe(
     assert _matched_rows(spark, out) == want
 
 
-def test_legacy_marker_and_undead_supersession(spark, tmp_path, monkeypatch):
-    """Two durability edges from review: (a) a segment written by the
-    pre-watermark code (cumulative ``_folded_ids.json`` list) is still
-    honored, and (b) a superseded segment whose gc deletion silently
-    failed is re-recorded in the next published segment, so its
-    exclusion survives its superseder's removal."""
+def test_undead_superseded_segment_stays_excluded(
+    spark, tmp_path, monkeypatch
+):
+    """Durability edge from review: a superseded segment whose gc
+    deletion silently failed is re-recorded in the next published
+    segment, so its exclusion survives its superseder's removal."""
     src, out, ckpt = _dirs(tmp_path)
     _mk_messages(spark, BATCH_1).coalesce(1).write.mode("append").parquet(src)
     sp.run_all(spark, src, out, ckpt)
     _mk_messages(spark, BATCH_2).coalesce(1).write.mode("append").parquet(src)
     sp.run_all(spark, src, out, ckpt)
     want = _matched_rows(spark, out)
-
-    # (a) hand-build a LEGACY-format segment: fold batch 0's rows into
-    # batch=-1 carrying only the old _folded_ids.json marker
-    import json as _json
-
-    root = os.path.join(out, sp.MATCHED_DIRNAME)
-    b0, seg1 = os.path.join(root, "batch=0"), os.path.join(root, "batch=-1")
-    shutil.copytree(b0, seg1)
-    with open(os.path.join(seg1, "_folded_ids.json"), "w") as fh:
-        _json.dump([0], fh)
+    # segment batch=-1 folds batch 0
+    assert sp.compact_matched_messages(spark, out, keep_last=1) == 1
     assert _matched_rows(spark, out) == want  # batch=0 excluded, once
 
-    # (b) two segment merges while batch=-1's deletion silently fails:
+    # two segment merges while batch=-1's deletion silently fails:
     # merge 1 supersedes -1 (marker on -2 excludes it); merge 2 then
     # REMOVES -2 — without the undead carry-forward, nothing on disk
     # would list -1 any more and batch 0's rows would double-count

@@ -168,23 +168,23 @@ def test_merge_touches_only_batch_buckets(spark, tmp_path):
 
 def test_legacy_flat_store_is_migrated_not_ignored(spark, tmp_path):
     """A register store written by the pre-bucketing flat layout must be
-    folded into the bucketed layout on the first merge — not silently
-    excluded from the estimate, and not left at a conflicting directory
-    depth next to bucket= dirs."""
+    converted into the bucketed layout on the first merge — not
+    silently excluded from the estimate, and not left at a conflicting
+    directory depth next to bucket= dirs."""
     store = str(tmp_path / "store")
     first = _messages(spark, 40, channels=("a", "b"))
     # simulate the old layout: registers as plain parquet at the root
     sketches.hll_registers(first, ["channel"]).write.mode(
         "overwrite"
     ).parquet(store)
-    assert bucketstore._legacy_flat_files(store)
+    assert bucketstore._flat_files(store)
 
     second = _messages(spark, 70, channels=("a", "b"))
     shll.merge_registers(
         spark, store, sketches.hll_registers(second), ["channel"]
     )
     # flat files gone, only bucket= partitions remain
-    assert not bucketstore._legacy_flat_files(store)
+    assert not bucketstore._flat_files(store)
     assert all(
         e.startswith("bucket=")
         for e in os.listdir(store)
@@ -205,10 +205,14 @@ def test_legacy_flat_store_is_migrated_not_ignored(spark, tmp_path):
     assert got == want
 
 
-def test_serve_reads_flat_and_mixed_stores(spark, tmp_path):
-    """serve_estimates answers from a legacy flat store before any merge
-    has migrated it, and from the mixed state (flat files + bucket dirs)
-    the earlier buggy merge could leave behind."""
+def test_serve_reads_flat_store_and_merge_refuses_mixed_one(spark, tmp_path):
+    """serve_estimates answers from a flat store before any merge has
+    converted it. A store holding both root part files and bucket=
+    dirs breaks the flat-or-bucketed rule (an older release's
+    interrupted migration could leave one): the merge refuses it
+    loudly instead of converting the flat half over the buckets."""
+    import pytest
+
     store = str(tmp_path / "store")
     first = _messages(spark, 30, channels=("a",))
     sketches.hll_registers(first, ["channel"]).write.mode(
@@ -228,9 +232,13 @@ def test_serve_reads_flat_and_mixed_stores(spark, tmp_path):
                 if e.startswith("bucket="))
     os.rename(os.path.join(str(tmp_path / "other"), bdir),
               os.path.join(store, bdir))
-    mixed = {r["channel"]: r["hll_est"]
-             for r in shll.serve_estimates(spark, store).collect()}
-    assert set(mixed) == {"a", "b"} and mixed["a"] == flat_only["a"]
+    with pytest.raises(RuntimeError, match="flat or bucketed"):
+        shll.merge_registers(
+            spark, store, sketches.hll_registers(second), ["channel"]
+        )
+    # nothing was rewritten: both halves are still on disk
+    assert bucketstore._flat_files(store)
+    assert os.path.isdir(os.path.join(store, bdir))
 
 
 def test_torn_bucket_swap_is_recovered(spark, tmp_path):

@@ -120,24 +120,24 @@ def test_kmv_merge_rewrites_only_touched_buckets(spark, tmp_path):
 
 
 def test_kmv_legacy_flat_store_is_migrated(spark, tmp_path):
-    """A store written by the old flat layout folds into buckets on the
-    first merge, with estimates exact before, during, and after."""
+    """A store written by the old flat layout converts into buckets on
+    the first merge, with estimates exact before and after."""
     import os
 
     from twitch_chat_analyser_spark.streaming import bucketstore
-    from twitch_chat_analyser_spark.streaming.storeswap import swap_in
 
     path = str(tmp_path / "store")
     b1 = _msgs(spark, [(None, "a", f"u{i}", "m") for i in range(100)])
-    swap_in(sketches.kmv_kmin(b1, k=64), path)  # pre-bucketing layout
-    assert bucketstore._legacy_flat_files(path)
+    # pre-bucketing layout: flat, no journal (idempotent algebra)
+    bucketstore.write_store(path, sketches.kmv_kmin(b1, k=64))
+    assert bucketstore._flat_files(path)
     # serve answers from the flat store before any merge
     assert {r["channel"] for r in
             kmv.serve_estimates(spark, path, k=64).collect()} == {"a"}
 
     b2 = _msgs(spark, [(None, "b", f"u{i}", "m") for i in range(80)])
     kmv.merge_kmv(spark, path, b2, k=64)
-    assert not bucketstore._legacy_flat_files(path)
+    assert not bucketstore._flat_files(path)
     assert all(
         e.startswith("bucket=")
         for e in os.listdir(path)
@@ -146,57 +146,3 @@ def test_kmv_legacy_flat_store_is_migrated(spark, tmp_path):
     got = _sorted_rows(spark.read.parquet(path).drop("bucket"))
     want = _sorted_rows(sketches.kmv_kmin(b1.unionByName(b2), k=64))
     assert got == want
-
-
-def test_kmv_serve_exact_in_migration_crash_window(spark, tmp_path):
-    """ADVICE r9: between a crash in the migration swap loop and the
-    next merge, a folded-and-marked bucket coexists with the legacy
-    flat files. Evicted legacy hv values are NOT identical rows, so
-    distinct() alone cannot collapse them — the serve read must drop
-    the folded legacy rows via the writer's bucket assignment (plus the
-    bottom-k belt) or n/hk is computed over a >k mixture."""
-    import shutil
-
-    from twitch_chat_analyser_spark.streaming import bucketstore
-    from twitch_chat_analyser_spark.streaming.storeswap import swap_in
-
-    path = str(tmp_path / "store")
-    k = 8
-    b1 = _msgs(spark, [(None, "a", f"u{i}", "m") for i in range(50)])
-    swap_in(sketches.kmv_kmin(b1, k=k), path)  # pre-bucketing layout
-    flat_before = bucketstore._legacy_flat_files(path)
-    assert flat_before
-    saved = str(tmp_path / "saved-flat")
-    import os
-
-    os.makedirs(saved)
-    for f in flat_before:
-        shutil.copy(f, saved)
-
-    # the merge folds the legacy rows into marked buckets; new users
-    # hash below some legacy values, so the fold EVICTS legacy rows
-    b2 = _msgs(spark, [(None, "a", f"v{i}", "m") for i in range(50)])
-    kmv.merge_kmv(spark, path, b2, k=k)
-    assert bucketstore._marked_buckets(path)
-    truth_est = _sorted_rows(kmv.serve_estimates(spark, path, k=k))
-    truth_rows = _sorted_rows(_read_sketch_rows(spark, path, k))
-    want = _sorted_rows(
-        sketches.kmv_kmin(b1.unionByName(b2), k=k).select("channel", "hv")
-    )
-    assert truth_rows == want
-
-    # resurrect the flat files: the exact crash-window state
-    for f in os.listdir(saved):
-        shutil.copy(os.path.join(saved, f), path)
-    assert bucketstore._legacy_flat_files(path)
-    assert _sorted_rows(_read_sketch_rows(spark, path, k)) == want
-    assert _sorted_rows(kmv.serve_estimates(spark, path, k=k)) == truth_est
-    assert _sorted_rows(kmv.serve_overlap(spark, path, k=k)) == _sorted_rows(
-        sketches.kmv_overlap_from_sketch(
-            sketches.kmv_kmin(b1.unionByName(b2), k=k), k
-        )
-    )
-
-
-def _read_sketch_rows(spark, path, k):
-    return kmv._read_sketch(spark, path, k).select("channel", "hv")

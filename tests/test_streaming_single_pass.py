@@ -209,8 +209,10 @@ def test_trigger_shuffle_partitions_sizing(spark):
     operator's cluster sizing, never exceed it)."""
     sess = int(spark.conf.get("spark.sql.shuffle.partitions"))
     f = sp.trigger_shuffle_partitions
-    assert f(spark, 0) == 8
-    assert f(spark, 25_000) == 8
+    # every expectation is capped by the session value, which tracks
+    # the core count (a 4-vCPU box runs fewer than 8 partitions)
+    assert f(spark, 0) == min(sess, 8)
+    assert f(spark, 25_000) == min(sess, 8)
     assert f(spark, 50_000 * 12) == min(sess, 12)
     assert f(spark, 10 ** 9) == sess  # capped at the session value
     assert f(spark, 0, store_bytes=20 * (128 << 20)) == min(sess, 20)

@@ -138,9 +138,11 @@ def start_rollup_pipeline(
     """
     import os
 
+    from ..streaming import bucketstore
     from ..streaming.pipeline import additive_merge
 
     keys = [*dims, "timestamp"]
+    ckpt = os.path.join(checkpoint_dir, name + "_rollup")
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         stats = transform(batch_df).localCheckpoint(eager=True)
@@ -157,6 +159,10 @@ def start_rollup_pipeline(
             int(span["min_ms"] // DAY_MS),
             int(span["max_ms"] // DAY_MS) + 2,
         ))
+        # pins the journals to this checkpoint: a fresh one restarts
+        # batch ids at 0 and must fail loudly, not watermark-drop every
+        # new batch (ADVICE r11)
+        sid = bucketstore.stream_identity(ckpt)
         hourly = rollup(stats, dims, value_col, HOUR_MS)
         daily = rollup(hourly, dims, value_col, DAY_MS)
         for suffix, deltas in (("", stats), ("_1h", hourly), ("_1d", daily)):
@@ -168,11 +174,12 @@ def start_rollup_pipeline(
                 value_col,
                 batch_id,
                 touched_hint=hint,
+                stream_id=sid,
             )
 
     return (
         messages_stream.writeStream.outputMode("append")
-        .option("checkpointLocation", os.path.join(checkpoint_dir, name + "_rollup"))
+        .option("checkpointLocation", ckpt)
         .foreachBatch(sink)
         .trigger(**(trigger or {"availableNow": True}))
         .start()

@@ -1,5 +1,5 @@
-"""Shared bucketed streaming-store layout: per-trigger merge cost
-O(touched buckets + batch), never O(total store).
+"""The streaming stores' on-disk layout and its one atomic publish:
+per-trigger merge cost O(touched buckets + batch), never O(total store).
 
 Round 4-6 carried the same finding against the OHLC and Markov stores:
 their merge full-outer-joined and rewrote the ENTIRE store every
@@ -7,18 +7,23 @@ micro-batch, so per-trigger cost grew with stream lifetime. The fix
 machinery existed in streaming/hll.py's register store; this module
 generalizes it so any keyed store can use it:
 
-- layout: ``store/bucket=<hash(keys) % N>/`` parquet partitions.
-  A batch's deltas touch only the buckets its keys hash to; merge
-  reads and rewrites ONLY those partitions (Spark partition pruning on
-  the read, per-bucket atomic directory swap on the write). At 100 TB
-  the candle/last-event history can be arbitrarily old and wide — a
-  trigger still pays for the buckets in the batch, nothing else.
-- crash safety: each bucket swaps via rename(live -> ``.old-*-b<k>``),
-  rename(tmp -> live), delete(backup). :func:`recover` restores a
-  stranded per-bucket backup (live missing), drops superseded ones,
-  and clears stale ``.tmp-*`` dirs. ``restore_only=True`` is the
-  read-path mode (heal, never delete — a serving call must not rmtree
-  a concurrent writer's tmp dir), same contract as storeswap.py.
+- layout: a store directory is EITHER flat (parquet part files at its
+  root, plus a root ``_applied_batches.json`` for additive stores) OR
+  bucketed (``store/bucket=<hash(keys) % N>/`` partitions), never both.
+  A bucketed batch's deltas touch only the buckets its keys hash to;
+  merge reads and rewrites ONLY those partitions (Spark partition
+  pruning on the read, per-bucket atomic directory swap on the write).
+  At 100 TB the candle/last-event history can be arbitrarily old and
+  wide — a trigger still pays for the buckets in the batch, nothing
+  else.
+- one publish (:func:`_publish`): write ``<store>.tmp-*``, rename(live
+  -> ``.old-*``), rename(tmp -> live), fsync the parent, delete the
+  backup. It swaps a whole store (flat rewrites, flat -> bucketed
+  conversion) or one ``bucket=<b>`` dir (``.old-*-b<b>`` backups).
+  :func:`recover` restores a stranded backup (live missing), drops
+  superseded ones, and clears stale ``.tmp-*`` dirs.
+  ``restore_only=True`` is the read-path mode (heal, never delete — a
+  serving call must not rmtree a concurrent writer's tmp dir).
 - replay safety, two algebras:
   * idempotent merges (struct/register max) need NO journal — replay
     is a value no-op (``batch_id=None``).
@@ -28,24 +33,19 @@ generalizes it so any keyed store can use it:
     rename that publishes the bucket's data. A crash mid-swap leaves
     some buckets applied and some not; on replay exactly the
     not-yet-applied buckets merge again — per-bucket exactly-once.
-- legacy migration: stores written by the old flat layout (parquet
-  part files + one root journal) are folded into buckets on the first
-  merge that sees them; the root journal seeds every migrated bucket's
-  journal so replay suppression survives the migration. The fold is
-  replay-idempotent per bucket: a ``_legacy_migrated`` marker is
-  committed by the SAME rename that publishes the bucket, the delta is
-  only ever applied to journal-pending buckets (never re-applied just
-  because a migration re-ran), and the flat files are removed only
-  once EVERY legacy bucket carries the marker — so a crash at any
-  rename point of the migration replays without double-counting
-  either the legacy rows or the batch.
+- flat -> bucketed: :func:`merge_into` converts a flat store WHOLE
+  before merging — its rows are bucketized into a tmp dir, every bucket
+  journal is seeded from the root journal, and one whole-store publish
+  swaps it in. A crash leaves the old flat store or the new bucketed
+  one, and the replayed batch merges into whichever it finds.
 
 Single-writer assumption: foreachBatch serializes merges per query —
-same as storeswap.py / streaming/hll.py.
+same as streaming/hll.py.
 """
 
 from __future__ import annotations
 
+import errno
 import json
 import os
 import shutil
@@ -54,8 +54,6 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from . import storeswap
 
 # sized so one bucket's rows fit an executor core comfortably at
 # 100 TB-scale key cardinality; tests pass small N to exercise
@@ -76,12 +74,12 @@ def _null_safe_bucket(df: DataFrame) -> DataFrame:
     )
 
 
-class BucketSwapError(OSError):
-    """A bucket's publish rename failed even after the heal-race
-    retake. Raised (never swallowed) so the micro-batch fails and
-    Structured Streaming replays it from the checkpoint — the bucket's
-    journal was not committed, so the replay re-merges exactly the
-    lost delta (exactly-once preserved)."""
+class SwapError(OSError):
+    """A publish rename failed even after the heal-race retake. Raised
+    (never swallowed) so the micro-batch fails and Structured Streaming
+    replays it from the checkpoint — the journal travels inside the
+    unpublished tmp dir, so the replay re-merges exactly the lost delta
+    (exactly-once preserved)."""
 
 
 def with_bucket(df: DataFrame, keys: list[str], num_buckets: int) -> DataFrame:
@@ -90,20 +88,60 @@ def with_bucket(df: DataFrame, keys: list[str], num_buckets: int) -> DataFrame:
     )
 
 
+def _fsync_dir(path: str) -> None:
+    """Directory-entry durability: ``fsync(file)`` persists the bytes,
+    NOT the file's name in its directory — POSIX permits a power loss
+    to surface a published dir whose journal file is absent unless the
+    dir itself is fsynced before the publishing rename (review r11;
+    ext4's ordered journaling saves you incidentally, other filesystems
+    do not). Platforms without dir fsync (the open or the fsync
+    reports not-supported) keep rename atomicity, which is the
+    stronger half of the guarantee — but a GENUINE I/O failure
+    (EIO/ENOSPC on a failing disk) must propagate so the micro-batch
+    fails and replays; swallowing it would re-open exactly the
+    power-loss double-apply window this call exists to close
+    (ADVICE r11)."""
+    try:
+        fd = os.open(path, os.O_RDONLY)
+    except OSError:
+        # directories aren't openable O_RDONLY everywhere (e.g.
+        # Windows) — that's "no dir fsync on this platform", not a
+        # disk failure
+        return
+    try:
+        try:
+            os.fsync(fd)
+        except OSError as exc:
+            if exc.errno not in (
+                errno.EINVAL, errno.ENOTSUP, errno.EOPNOTSUPP,
+                errno.EBADF,
+            ):
+                raise
+    finally:
+        os.close(fd)
+
+
+def _mtime(parent: str, entry: str) -> float:
+    try:
+        return os.path.getmtime(os.path.join(parent, entry))
+    except OSError:
+        return 0.0
+
+
 def recover(store: str, restore_only: bool = False) -> None:
     """Make any interrupted swap whole — per-bucket backups
-    (``<store>.old-*-b<k>``) and legacy whole-store backups
-    (``<store>.old-*`` from the flat layout) alike. Rename races with
+    (``<store>.old-*-b<k>``) and whole-store backups (``<store>.old-*``
+    of a flat rewrite or a conversion) alike. Rename races with
     concurrent readers are tolerated: losing the race means the other
     party already restored it."""
-    from .storeswap import _mtime
-
     parent = os.path.dirname(os.path.abspath(store)) or "."
     base = os.path.basename(store)
     if not os.path.isdir(parent):
         return
-    # newest-first for the same reason as storeswap.recover: a stale
-    # leftover backup must not outrank a freshly stranded one
+    # newest backup first: if a silently-failed deletion left a STALE
+    # backup alongside a freshly stranded one, random-hex name order
+    # could restore the stale one and delete the fresh one as
+    # superseded — mtime order makes the choice deterministic
     entries = sorted(
         os.listdir(parent), key=lambda e: _mtime(parent, e), reverse=True
     )
@@ -114,8 +152,8 @@ def recover(store: str, restore_only: bool = False) -> None:
             bucket = stem.rsplit("-b", 1)[1] if "-b" in stem else ""
             # lstrip: bucket ids can be negative (day buckets of
             # pre-1970 timestamps, the NULL_BUCKET sentinel) — plain
-            # isdigit() would misclassify their backups as legacy
-            # whole-store backups and DELETE them in full mode
+            # isdigit() would misclassify their backups as whole-store
+            # backups and DELETE them in full mode
             if bucket.lstrip("-").isdigit():
                 live = os.path.join(store, f"bucket={bucket}")
                 if not os.path.isdir(live):
@@ -126,7 +164,7 @@ def recover(store: str, restore_only: bool = False) -> None:
                         pass  # lost a heal race — already restored
                 elif not restore_only:
                     shutil.rmtree(full, ignore_errors=True)
-            else:  # legacy flat-store backup: whole-dir restore
+            else:  # whole-store backup: whole-dir restore
                 if not os.path.isdir(store):
                     try:
                         os.rename(full, store)
@@ -138,10 +176,8 @@ def recover(store: str, restore_only: bool = False) -> None:
             shutil.rmtree(full, ignore_errors=True)
 
 
-def _legacy_flat_files(store: str) -> list[str]:
-    """Parquet part files from the pre-bucketing flat layout, directly
-    under the store root (mixed depths break partition discovery, so
-    they must be folded in, not ignored)."""
+def _flat_files(store: str) -> list[str]:
+    """The part files of a FLAT store, directly under its root."""
     if not os.path.isdir(store):
         return []
     return [
@@ -152,11 +188,16 @@ def _legacy_flat_files(store: str) -> list[str]:
     ]
 
 
+def _is_bucketed(store: str) -> bool:
+    return os.path.isdir(store) and any(
+        e.startswith("bucket=") for e in os.listdir(store)
+    )
+
+
 def _has_data(dirpath: str) -> bool:
-    """True when the bucket dir holds at least one parquet part file.
-    Marker-only dirs (a migrated-empty bucket: just ``_legacy_migrated``
-    and ``_applied_batches.json``) must be skipped by readers — handing
-    an empty directory to the parquet reader fails schema inference."""
+    """True when the bucket dir holds at least one parquet part file —
+    handing the parquet reader an empty directory fails schema
+    inference, so readers skip dirs that hold only a journal."""
     try:
         return any(not e.startswith(("_", ".")) for e in os.listdir(dirpath))
     except OSError:
@@ -250,19 +291,22 @@ def _check_stream(
 
 
 def _dump_journal(
-    path: str, ids: list[int], stream: str | None
+    dirpath: str, ids: list[int], stream: str | None
 ) -> None:
-    """Write a journal durably (fsynced BEFORE the publishing rename —
-    a power loss must not surface a bucket whose journal is
-    truncated). v2 dict format when a stream identity is known, else
-    the legacy list so identity-less callers stay byte-compatible."""
+    """Write ``dirpath``'s journal durably — the file AND its directory
+    entry are fsynced BEFORE the publishing rename (review r11: a power
+    loss must not surface a published dir whose journal is truncated
+    or absent, or a replay would double-apply). v2 dict format when a
+    stream identity is known, else the legacy list so identity-less
+    callers stay byte-compatible."""
     payload: object = (
         {"stream": stream, "ids": ids} if stream else ids
     )
-    with open(path, "w") as fh:
+    with open(os.path.join(dirpath, "_applied_batches.json"), "w") as fh:
         json.dump(payload, fh)
         fh.flush()
         os.fsync(fh.fileno())
+    _fsync_dir(dirpath)
 
 
 def _is_applied(journal: set[int], batch_id: int) -> bool:
@@ -297,112 +341,88 @@ def _pruned(journal: set[int]) -> list[int]:
     return sorted(journal)[-2:]
 
 
-def _migrated(store: str, b: int) -> bool:
-    return os.path.isfile(
-        os.path.join(store, f"bucket={b}", "_legacy_migrated")
-    )
-
-
-def _swap_bucket(store: str, b: int, src: str) -> None:
-    """Atomically publish one bucket dir, tolerating the heal race
-    with a concurrent ``recover(restore_only=True)`` reader: between
-    our rename(dst→back) and rename(src→dst) the reader may restore
-    the backup, making the second rename fail — retake the swap
-    instead of crashing the streaming query (ADVICE r7 low). If the
-    retake loses ANOTHER race (or hits a persistent rename error) the
-    bucket MUST NOT report success: returning here would let the sink
-    complete, Structured Streaming would commit the batch in its
-    checkpoint, and the bucket's delta rows would be lost forever
-    (ADVICE r8 medium). Raise so the micro-batch fails and the
-    checkpoint replays it — the journal for this bucket was never
-    committed, so the replayed merge re-applies the delta."""
-    dst = os.path.join(store, f"bucket={b}")
-    back = f"{store}.old-{uuid.uuid4().hex[:8]}-b{b}"
+def _publish(store: str, src: str, bucket: int | None = None) -> None:
+    """Atomically make ``src`` the live store (``bucket=None``) or its
+    ``bucket=<b>`` dir — the one publish behind flat rewrites,
+    conversions and bucket merges alike. Tolerates the heal race with a concurrent
+    ``recover(restore_only=True)`` reader: between our rename(dst→back)
+    and rename(src→dst) the reader may restore the backup, making the
+    second rename fail — retake the swap instead of crashing the
+    streaming query (ADVICE r7 low). If the retake loses ANOTHER race
+    (or hits a persistent rename error) the publish MUST NOT report
+    success: returning here would let the sink complete, Structured
+    Streaming would commit the batch in its checkpoint, and the delta
+    rows would be lost forever (ADVICE r8 medium). Raise so the
+    micro-batch fails and the checkpoint replays it — the journal was
+    never published, so the replayed merge re-applies the delta."""
+    dst = store if bucket is None else os.path.join(store, f"bucket={bucket}")
+    tag = "" if bucket is None else f"-b{bucket}"
+    back = f"{store}.old-{uuid.uuid4().hex[:8]}{tag}"
     had_old = os.path.isdir(dst)
     if had_old:
         os.rename(dst, back)
     try:
         os.rename(src, dst)
     except OSError:
-        back2 = f"{store}.old-{uuid.uuid4().hex[:8]}-b{b}"
+        back2 = f"{store}.old-{uuid.uuid4().hex[:8]}{tag}"
         try:
             os.rename(dst, back2)
             os.rename(src, dst)
         except OSError as exc:
-            raise BucketSwapError(
-                f"bucket={b} of {store}: publish rename failed twice; "
-                "failing the micro-batch so the checkpoint replays it"
+            raise SwapError(
+                f"{dst}: publish rename failed twice; failing the "
+                "micro-batch so the checkpoint replays it"
             ) from exc
         shutil.rmtree(back2, ignore_errors=True)
+    # make the publish rename itself durable (parent dir entry)
+    _fsync_dir(os.path.dirname(os.path.abspath(dst)))
     if had_old:
         shutil.rmtree(back, ignore_errors=True)
 
 
-def _marked_buckets(store: str) -> list[int]:
-    """Buckets whose legacy migration marker is committed."""
-    if not os.path.isdir(store):
-        return []
-    out = []
-    for e in os.listdir(store):
-        if e.startswith("bucket=") and os.path.isfile(
-            os.path.join(store, e, "_legacy_migrated")
-        ):
-            b = e.split("=", 1)[1]
-            if b.lstrip("-").isdigit():
-                out.append(int(b))
-    return out
+def write_store(
+    store: str,
+    df: DataFrame,
+    journal: list[int] | None = None,
+    stream: str | None = None,
+) -> None:
+    """Replace the WHOLE store with ``df`` in one publish: flat (part
+    files + root journal) when ``df`` has no ``bucket`` column,
+    bucketed (every ``bucket=<b>`` dir carrying ``journal``) when it
+    does. ``journal=None`` writes no journal (idempotent stores)."""
+    tmp = f"{store}.tmp-{uuid.uuid4().hex[:8]}"
+    if "bucket" in df.columns:
+        df.write.partitionBy("bucket").mode("overwrite").parquet(tmp)
+        dirs = [
+            os.path.join(tmp, e)
+            for e in os.listdir(tmp)
+            if e.startswith("bucket=")
+        ]
+    else:
+        df.write.mode("overwrite").parquet(tmp)
+        dirs = [tmp]
+    if journal is not None:
+        for d in dirs:
+            _dump_journal(d, journal, stream)
+    _publish(store, tmp)
 
 
 def read_store(
     spark: SparkSession,
     store: str,
     buckets: list[int] | None = None,
-    bucketize: Callable[[DataFrame], DataFrame] | None = None,
 ) -> DataFrame | None:
-    """Rows of the given buckets (all when None), bucket column
-    retained; legacy flat rows included only in the all-buckets read
-    (a bucket-filtered read during migration would misattribute them —
-    merge folds them in first). None when the store holds nothing.
-
-    ``bucketize`` (the same row→bucket assignment the writer uses)
-    closes the mid-migration serve window: between a crash in the
-    migration swap loop and the next merge, some buckets already hold
-    their folded legacy rows while the flat files still exist — a
-    reader that can recompute the legacy rows' buckets drops exactly
-    the rows of ``_legacy_migrated``-marked buckets instead of
-    double-counting them. Without it (a serve path that cannot
-    reconstruct the writer's bucket function, e.g. hash layouts with a
-    non-default bucket count) the read transiently over-counts those
-    buckets until the next merge completes the migration."""
-    dirs = _bucket_dirs(store, buckets)
-    legacy = _legacy_flat_files(store) if buckets is None else []
-    parts = []
-    if dirs:
-        parts.append(spark.read.option("basePath", store).parquet(*dirs))
-    if legacy:
-        ldf = spark.read.parquet(*legacy)
-        if bucketize is not None:
-            # NULL-safe routing mirrors the writer (merge_into): a
-            # legacy row bucketize cannot place recomputes to the same
-            # NULL_BUCKET the writer folds it into, so the marked-
-            # bucket exclusion is exact for those rows too (the r8
-            # NULL-isin fix retained them unconditionally, which would
-            # double-count once their fold committed)
-            ldf = _null_safe_bucket(bucketize(ldf))
-            mig = _marked_buckets(store)
-            if mig:
-                ldf = ldf.filter(~F.col("bucket").isin(mig))
-        else:
-            # not-yet-migrated flat rows; sentinel bucket keeps the
-            # schema aligned (serving callers drop the column)
-            ldf = ldf.withColumn("bucket", F.lit(-1).cast("int"))
-        parts.append(ldf)
-    if not parts:
-        return None
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    """A bucketed store's rows of the given buckets (all when None),
+    ``bucket`` column retained; a flat store's root part files (it has
+    no buckets to prune, so ``buckets`` is moot). None when the store
+    holds nothing."""
+    if _is_bucketed(store):
+        dirs = _bucket_dirs(store, buckets)
+        if not dirs:
+            return None
+        return spark.read.option("basePath", store).parquet(*dirs)
+    flat = _flat_files(store)
+    return spark.read.parquet(*flat) if flat else None
 
 
 SNAPSHOT_TTL_SEC = 24 * 3600
@@ -457,7 +477,6 @@ def read_snapshot(
     spark: SparkSession,
     store: str,
     buckets: list[int] | None = None,
-    bucketize: Callable[[DataFrame], DataFrame] | None = None,
     attempts: int = 5,
 ):
     """Context manager: a STABLE read of the store that survives
@@ -506,7 +525,7 @@ def read_snapshot(
                     shutil.rmtree(cand, ignore_errors=True)
                     break
         try:
-            yield read_store(spark, snap or store, buckets, bucketize)
+            yield read_store(spark, snap or store, buckets)
         finally:
             if snap is not None:
                 shutil.rmtree(snap, ignore_errors=True)
@@ -526,7 +545,9 @@ def merge_into(
     touched_hint: list[int] | None = None,
     stream_id: str | None = None,
 ) -> None:
-    """Merge one batch's keyed deltas into the bucketed store.
+    """Merge one batch's keyed deltas into the bucketed store. A flat
+    store is first converted whole (module docstring); a store holding
+    both layouts is refused.
 
     ``merge_fn(old, delta)`` receives the CURRENT rows of the pending
     buckets (None when they hold nothing yet) and the delta rows of
@@ -563,7 +584,7 @@ def merge_into(
     skipped (nothing to journal — a replay skips them identically).
 
     ``merge_fn`` contract (review r11): it must not implement
-    retention — a zero-row result for a non-legacy bucket is treated
+    retention — a zero-row result for a bucket is treated
     as "nothing to write" (the old dir is KEPT and the batch is not
     journaled for it), which is correct for the additive/idempotent
     algebras here (union + re-aggregate of a nonempty bucket is never
@@ -581,6 +602,26 @@ def merge_into(
     recover(store)
     _gc_snapshots(store)
     bucketize = bucketize or (lambda df: with_bucket(df, keys, num_buckets))
+    flat = _flat_files(store)
+    if flat:
+        # a store is flat OR bucketed: convert it WHOLE, in one publish,
+        # before merging — a crash leaves the old flat store or the new
+        # bucketed one, and the replayed batch merges into either. The
+        # root journal seeds every bucket's, so replay suppression
+        # survives the conversion.
+        if _is_bucketed(store):
+            raise RuntimeError(
+                f"{store} holds both root part files and bucket= dirs; "
+                "a store must be flat or bucketed — move one of the two "
+                "aside before merging"
+            )
+        ids, stream = _applied(store)
+        write_store(
+            store,
+            _null_safe_bucket(bucketize(spark.read.parquet(*flat))),
+            _pruned(ids) if ids else None,
+            stream,
+        )
     # NULL-safe: a custom bucketize may emit NULL buckets; unrouted,
     # the hint stray guard's ~isin would silently DROP those rows and
     # the probe path would crash sorting None (review r9)
@@ -612,128 +653,39 @@ def merge_into(
                 r["bucket"]
                 for r in delta.select("bucket").distinct().collect()
             )
-        legacy = _legacy_flat_files(store)
-        legacy_applied: set[int] = set()
-        legacy_stream: str | None = None
-        if legacy:
-            legacy_applied, legacy_stream = _applied(store)
-        legacy_df = None
-        lbuckets: set[int] = set()
-        if legacy:
-            legacy_df = _null_safe_bucket(
-                bucketize(spark.read.parquet(*legacy))
-            )
-            lbuckets = {
-                r["bucket"]
-                for r in legacy_df.select("bucket").distinct().collect()
-            }
-        # fold = legacy buckets whose migration has not yet committed;
-        # a replayed migration skips already-marked buckets instead of
-        # re-unioning their flat rows (ADVICE r7 high)
-        fold = sorted(b for b in lbuckets if not _migrated(store, b))
-        all_pend = sorted(set(touched) | set(fold))
-        if not all_pend:
-            _clear_legacy_if_done(store, legacy, lbuckets)
-            return  # empty micro-batch, no pending migration
-        journals: dict[int, set[int]] = {}
-        recorded: dict[int, str | None] = {}
-        for b in all_pend:
-            ids, rec = _applied(os.path.join(store, f"bucket={b}"))
-            journals[b] = ids | legacy_applied
-            recorded[b] = rec or legacy_stream
+        journals = {
+            b: _applied(os.path.join(store, f"bucket={b}")) for b in touched
+        }
         if batch_id is not None:
             for b in touched:
                 _check_stream(
-                    recorded.get(b), stream_id, f"{store}/bucket={b}"
+                    journals[b][1], stream_id, f"{store}/bucket={b}"
                 )
-            # the delta applies ONLY to journal-pending buckets — a
-            # bucket pending purely for migration must not re-apply a
-            # batch its journal already covers (watermark semantics,
-            # see _is_applied)
-            journal_pending = [
-                b for b in touched if not _is_applied(journals[b], batch_id)
+            pending = [
+                b for b in touched if not _is_applied(journals[b][0], batch_id)
             ]
         else:
-            journal_pending = list(touched)
-        pending = sorted(set(journal_pending) | set(fold))
+            pending = touched
         if not pending:
-            _clear_legacy_if_done(store, legacy, lbuckets)
-            return  # full replay: every touched bucket already applied
-        delta_p = delta.filter(
-            F.col("bucket").isin([int(b) for b in journal_pending])
-        )
-        old = read_store(spark, store, pending)
-        if legacy_df is not None and fold:
-            # fold UNMIGRATED flat history in as pre-existing store rows
-            lpart = legacy_df.filter(
-                F.col("bucket").isin([int(b) for b in fold])
-            )
-            old = lpart if old is None else old.unionByName(lpart)
-        merged = merge_fn(old, delta_p)
+            return  # empty micro-batch, or a full replay
+        delta_p = delta.filter(F.col("bucket").isin([int(b) for b in pending]))
+        merged = merge_fn(read_store(spark, store, pending), delta_p)
         tmp = f"{store}.tmp-{uuid.uuid4().hex[:8]}"
         merged.write.partitionBy("bucket").mode("overwrite").parquet(tmp)
         os.makedirs(store, exist_ok=True)
-        jset = set(journal_pending)
         for b in pending:
             src = os.path.join(tmp, f"bucket={b}")
             if not os.path.isdir(src):
-                if legacy and b in lbuckets:
-                    # merge_fn emitted nothing, but the migration marker
-                    # must still commit or this bucket's flat rows fold
-                    # again forever (readers skip data-less dirs)
-                    os.makedirs(src)
-                else:
-                    continue  # merge_fn emitted nothing for it (safety)
+                continue  # merge_fn emitted nothing for it (safety)
             if batch_id is not None:
-                new_journal = journals[b] | (
-                    {batch_id} if b in jset else set()
-                )
+                ids, recorded = journals[b]
                 # stream identity is preserved when the caller doesn't
                 # thread one, so an upgraded journal never loses the
                 # checkpoint it was recorded under
                 _dump_journal(
-                    os.path.join(src, "_applied_batches.json"),
-                    _pruned(new_journal),
-                    stream_id or recorded.get(b),
+                    src, _pruned(ids | {batch_id}), stream_id or recorded
                 )
-            if legacy and b in lbuckets:
-                # committed by the same rename as the folded data; also
-                # re-written for already-marked buckets so a rewrite
-                # while flat files still exist can't lose the marker
-                with open(os.path.join(src, "_legacy_migrated"), "w") as fh:
-                    os.fsync(fh.fileno())
-            # journal/marker DIRECTORY ENTRIES must be durable before
-            # the publishing rename (review r11: fsync(file) does not
-            # persist the name in its dir; a power loss could publish
-            # the bucket without its journal and a replay would
-            # double-apply)
-            storeswap._fsync_dir(src)
-            _swap_bucket(store, b, src)
+            _publish(store, src, b)
         shutil.rmtree(tmp, ignore_errors=True)
-        _clear_legacy_if_done(store, legacy, lbuckets)
     finally:
         delta.unpersist()
-
-
-def _clear_legacy_if_done(
-    store: str, legacy: list[str], lbuckets: set[int]
-) -> None:
-    """Remove the flat part files + root journal only once EVERY legacy
-    bucket's migration marker is committed — a crash mid-migration
-    leaves the files for the replay to finish folding (idempotently,
-    thanks to the per-bucket markers)."""
-    if not legacy:
-        return
-    if not all(_migrated(store, b) for b in lbuckets):
-        return
-    for f in legacy:
-        try:
-            os.remove(f)
-        except OSError:
-            pass
-    legacy_journal = os.path.join(store, "_applied_batches.json")
-    if os.path.isfile(legacy_journal):
-        try:
-            os.remove(legacy_journal)
-        except OSError:
-            pass

@@ -36,8 +36,9 @@ fully swapped are replay-no-ops by the max algebra; a crash INSIDE one
 bucket's two-rename swap strands a ``.old-`` backup, which ``_recover``
 restores (live dir missing) or discards (live dir present) before the
 next merge or serve — so no bucket's history is ever lost to a torn
-swap. Stores written by the earlier flat (unbucketed) layout are
-migrated into buckets on the first merge that sees them.
+swap. A store written by the earlier flat (unbucketed) layout is
+converted whole, in one atomic swap, by the first merge that sees it —
+a store is flat or bucketed, never both.
 """
 
 from __future__ import annotations
@@ -68,8 +69,8 @@ def merge_registers(
     parquet register store, on the SHARED bucketed-store machinery
     (bucketstore.merge_into — which this module's round-5 code was
     generalized FROM, and which has since gained the heal-race retake,
-    mtime-ordered recovery, legacy whole-store restore, marker-committed
-    migration, and fsynced journals the local copy lacked; review r9
+    mtime-ordered recovery, whole-store restore, the one-swap flat
+    conversion, and fsynced journals the local copy lacked; review r9
     ported the original back onto it). ``batch_id=None`` because the
     max algebra is idempotent — replay is a value no-op, no journal
     needed. Only touched buckets are read and rewritten."""
@@ -124,12 +125,11 @@ def serve_estimates(
 ) -> DataFrame:
     """Serving read: estimate straight off the stored registers — never
     touches raw events. Heals torn swaps restore-only (never deletes a
-    concurrent writer's tmp dir) and reads legacy flat files alongside
-    bucket partitions mid-migration. The per-key register re-max before
-    estimating makes the read EXACT in every crash window: duplicated
-    register rows (flat + folded copies between a migration crash and
-    the healing merge) collapse by the max algebra instead of
-    double-counting n_regs (review r9). -> *dims, hll_est"""
+    concurrent writer's tmp dir), then reads the bucketed or flat
+    store. The per-key register re-max before estimating is a no-op on
+    a healthy store and, by the max algebra, keeps any duplicated
+    register row from double-counting n_regs (review r9).
+    -> *dims, hll_est"""
     dims = dims or ["channel"]
     bucketstore.recover(store_dir, restore_only=True)
     regs = bucketstore.read_store(spark, store_dir)

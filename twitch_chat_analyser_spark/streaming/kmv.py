@@ -19,17 +19,16 @@ its batch's channels hash to — the old flat swap rewrote the whole
 store every trigger (its left-semi split avoided re-SORTING cold
 channels but still scanned and rewrote every row). The bottom-k-
 distinct algebra is idempotent, so replay needs no journal
-(bucketstore.merge_into, batch_id=None) and legacy flat stores are
-folded in by the shared migration machinery.
+(bucketstore.merge_into, batch_id=None), and a flat store from the old
+layout is converted whole, in one atomic swap, by its next merge.
 
 Serving: sketches.kmv_overlap_from_sketch over the store gives the
 live pairwise audience-overlap estimates; per-channel distinct
 estimates come from the same CASE/divide expressions as the batch
-operator (bit-identical math). Serve reads reconstruct the writer's
-bucket assignment (dropping already-folded legacy rows exactly during
-a migration crash window), dedupe (channel, hv), and re-apply the
-per-channel bottom-k — so the estimates stay exact in every store
-state (ADVICE r9).
+operator (bit-identical math). A store is flat or bucketed, never
+both; serve reads dedupe (channel, hv) and re-apply the per-channel
+bottom-k, so the estimates stay exact in every store state (ADVICE
+r9).
 """
 
 from __future__ import annotations
@@ -80,31 +79,16 @@ def merge_kmv(
     )
 
 
-def _read_sketch(
-    spark: SparkSession,
-    path: str,
-    k: int = KMV_K,
-    num_buckets: int = STORE_BUCKETS,
-) -> DataFrame:
-    """Serve-side sketch rows: restore-only heal, bucketed + legacy
-    flat rows. ``num_buckets`` must match the writer's so the
-    reconstructed bucket assignment drops already-folded legacy rows
-    exactly during a migration crash window (ADVICE r9: without it,
-    evicted legacy hv values coexist with the new bottom-k and
-    ``distinct()`` alone cannot collapse them — n/hk would be computed
-    over a >k mixture). Belt: the per-channel bottom-k is re-applied
-    after the dedup — ``bottom-k(old ∪ bottom-k(old ∪ new)) =
-    bottom-k(old ∪ new)`` (every old row outside the folded set is
-    larger than all of it), so it is a no-op in every healthy state and
-    heals any residual mixture."""
+def _read_sketch(spark: SparkSession, path: str, k: int = KMV_K) -> DataFrame:
+    """Serve-side sketch rows: restore-only heal, then the bucketed or
+    flat store. Belt: the per-channel bottom-k is re-applied after the
+    dedup — ``bottom-k(old ∪ bottom-k(old ∪ new)) = bottom-k(old ∪
+    new)`` (every old row outside the kept set is larger than all of
+    it), so it is a no-op in every healthy state and heals any
+    residual >k mixture instead of computing n/hk over it (ADVICE
+    r9)."""
     bucketstore.recover(path, restore_only=True)
-    sk = bucketstore.read_store(
-        spark,
-        path,
-        bucketize=lambda df: bucketstore.with_bucket(
-            df, ["channel"], num_buckets
-        ),
-    )
+    sk = bucketstore.read_store(spark, path)
     if sk is None:
         # empty/missing store: keep the old plain-read failure mode
         sk = spark.read.parquet(path)
@@ -121,10 +105,7 @@ def _read_sketch(
 
 
 def serve_estimates(
-    spark: SparkSession,
-    path: str,
-    k: int = KMV_K,
-    num_buckets: int = STORE_BUCKETS,
+    spark: SparkSession, path: str, k: int = KMV_K
 ) -> DataFrame:
     """Store -> per-channel distinct estimate (same expression tree as
     the batch operator, so stream==batch is bit-for-bit). Quantized to
@@ -133,7 +114,7 @@ def serve_estimates(
 
     -> channel, est_milli
     """
-    sk = _read_sketch(spark, path, k, num_buckets)
+    sk = _read_sketch(spark, path, k)
     return (
         sk.groupBy("channel")
         .agg(F.count("*").alias("n"), F.max("hv").alias("hk"))
@@ -147,15 +128,12 @@ def serve_estimates(
 
 
 def serve_overlap(
-    spark: SparkSession,
-    path: str,
-    k: int = KMV_K,
-    num_buckets: int = STORE_BUCKETS,
+    spark: SparkSession, path: str, k: int = KMV_K
 ) -> DataFrame:
     """Store -> live pairwise audience-overlap estimates (the batch
     operator's pair stage over the maintained sketches). Restore-only:
     readers never delete a concurrent writer's tmp dir."""
-    return kmv_overlap_from_sketch(_read_sketch(spark, path, k, num_buckets), k)
+    return kmv_overlap_from_sketch(_read_sketch(spark, path, k), k)
 
 
 def start_kmv_pipeline(

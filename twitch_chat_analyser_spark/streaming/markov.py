@@ -98,40 +98,21 @@ def process_batch(
             .select("user_id", F.col("event_type").alias("dst_type"))
         )
         # boundary join reads ONLY the buckets the batch's users hash
-        # to — the rest of the per-user history is never opened. One
-        # exception: un-migrated legacy flat files (pre-bucketing
-        # layout) sit outside any bucket, so until the merge below
-        # folds them in, the boundary read must see the whole store.
-        if bucketstore._legacy_flat_files(last_dir):
-            # mid-migration reads pass the writer's bucketize so legacy
-            # rows whose fold already committed are excluded instead of
-            # double-read (review r9); the struct-max below makes the
-            # boundary exact even in that window regardless
-            store_rows = bucketstore.read_store(
-                spark,
-                last_dir,
-                bucketize=lambda df: bucketstore.with_bucket(
-                    df, LAST_KEYS, num_buckets
-                ),
+        # to — the rest of the per-user history is never opened (a flat
+        # store, not yet converted by the merge below, is read whole)
+        touched = sorted(
+            r["bucket"]
+            for r in bucketstore.with_bucket(
+                events.select("user_id").distinct(), LAST_KEYS, num_buckets
             )
-        else:
-            touched = sorted(
-                r["bucket"]
-                for r in bucketstore.with_bucket(
-                    events.select("user_id").distinct(),
-                    LAST_KEYS,
-                    num_buckets,
-                )
-                .select("bucket")
-                .distinct()
-                .collect()
-            )
-            store_rows = bucketstore.read_store(spark, last_dir, touched)
+            .select("bucket")
+            .distinct()
+            .collect()
+        )
+        store_rows = bucketstore.read_store(spark, last_dir, touched)
         if store_rows is not None:
-            # re-max per user: if a stale flat copy AND its folded twin
-            # both surface (crash window), max picks the newer struct —
-            # one boundary pair per user, exact by the same algebra the
-            # store merges with
+            # one boundary pair per user: the store holds one row per
+            # user, and the re-max is the same algebra it merges with
             prev = (
                 store_rows.groupBy("user_id")
                 .agg(F.max("last").alias("last"))
@@ -182,16 +163,11 @@ def serve_transitions(spark: SparkSession, transitions_dir: str) -> DataFrame:
     """Store -> the public schema of behavior.markov_transitions.
 
     Restore-only recovery first (never deletes an in-flight writer's
-    tmp dir — bucketstore.recover(restore_only=True)). The writer's
-    bucket assignment is the constant 0, trivially reconstructible, so
-    mid-migration reads exclude already-folded legacy rows exactly
-    (review r9)."""
+    tmp dir — bucketstore.recover(restore_only=True)); the store is
+    flat or bucketed, never both, so the read is exact in every crash
+    window."""
     bucketstore.recover(transitions_dir, restore_only=True)
-    t = bucketstore.read_store(
-        spark,
-        transitions_dir,
-        bucketize=lambda df: df.withColumn("bucket", F.lit(0).cast("int")),
-    )
+    t = bucketstore.read_store(spark, transitions_dir)
     if t is None:
         raise FileNotFoundError(transitions_dir)
     wsrc = Window.partitionBy("src_type")

@@ -22,7 +22,8 @@ the ENTIRE store every trigger, so state grew with stream lifetime.
 Replay safety: n_events is additive (NOT idempotent), so applied batch
 ids are journaled per bucket, committed by the same rename that
 publishes the bucket — a partially-crashed swap replays exactly the
-buckets that missed.
+buckets that missed. A flat store from the pre-bucketing layout is
+converted whole, in one atomic swap, by its next merge.
 """
 
 from __future__ import annotations
@@ -118,21 +119,14 @@ def ohlc_merge(
     )
 
 
-def serve_candles(
-    spark: SparkSession, path: str, num_buckets: int = STORE_BUCKETS
-) -> DataFrame:
+def serve_candles(spark: SparkSession, path: str) -> DataFrame:
     """Store -> the public candle schema (same columns as
     temporal.ohlc_downsample). Restore-only recovery: a reader must
-    never delete an in-flight writer's tmp dir. ``num_buckets`` must
-    match the writer's so the reconstructed bucket assignment excludes
-    already-folded legacy rows exactly during a migration window
-    (review r9)."""
+    never delete an in-flight writer's tmp dir. The store is flat (a
+    pre-bucketing layout the next merge converts) or bucketed, never
+    both, so the read is exact in every crash window."""
     bucketstore.recover(path, restore_only=True)
-    s = bucketstore.read_store(
-        spark,
-        path,
-        bucketize=lambda df: bucketstore.with_bucket(df, _KEYS, num_buckets),
-    )
+    s = bucketstore.read_store(spark, path)
     if s is None:
         raise FileNotFoundError(path)
     return s.select(

@@ -31,9 +31,10 @@ reference's aggregation-interval + checkpoint-interval bound
 
 Parquet store layout: ``additive_merge`` is ADAPTIVE — a flat
 whole-rewrite while the store is under FLAT_STORE_MAX_BYTES (cheapest
-for small tables — one job, one file set), then DAY-PARTITIONED with
-per-partition replay journals once it crosses, so a trigger reads and
-rewrites only the {current-day, sentinel-day-0} partitions. Per-trigger
+for small tables — one job, one file set), then, converted in one
+atomic swap, DAY-PARTITIONED with per-partition replay journals, so a
+trigger reads and rewrites only the {current-day, sentinel-day-0}
+partitions. Per-trigger
 cost is bounded by max(threshold, batch + today's partition) at every
 store age — never O(all windows ever) — the same touched-partition
 property a Delta MERGE on a date-partitioned table gives at 100 TB.
@@ -55,6 +56,7 @@ from pyspark.sql import types as T
 
 from .. import dims
 from ..operators import aggregations as agg
+from . import bucketstore
 
 MESSAGE_SCHEMA = T.StructType(
     [
@@ -115,11 +117,9 @@ def default_pipelines(spark: SparkSession) -> list[Pipeline]:
 
 def _applied_batches(path: str) -> set[int]:
     """Union of applied batch ids across the store's journals — the
-    root journal of the legacy flat layout plus every per-bucket
-    journal of the bucketed layout (introspection/tests; the merge
-    itself checks per bucket)."""
-    from . import bucketstore
-
+    root journal of the flat layout or every per-bucket journal of the
+    bucketed layout (introspection/tests; the merge itself checks per
+    bucket)."""
     out: set[int] = set()
     candidates = [path]
     if os.path.isdir(path):
@@ -148,28 +148,13 @@ def _day_bucketize(df: DataFrame) -> DataFrame:
     )
 
 
-def _legacy_bucketize(df: DataFrame) -> DataFrame:
-    """Serving-read bucketizer for not-yet-migrated flat rows: rows
-    without a timestamp column get the sentinel bucket, which never
-    matches a migration marker."""
-    if "timestamp" in df.columns:
-        return _day_bucketize(df)
-    return df.withColumn("bucket", F.lit(-1).cast("int"))
-
-
-def _is_bucketed(path: str) -> bool:
-    return os.path.isdir(path) and any(
-        e.startswith("bucket=") for e in os.listdir(path)
-    )
-
-
 # Adaptive layout threshold: below this total size a store stays FLAT
 # and each trigger rewrites it whole — for a small table that is ONE
 # job writing one file set, strictly cheaper than partitioned IO (the
 # per-merge bucket probe/journal/commit overhead measured ~0.4 s x 5
 # tables per trigger at bench scale, pushing p50 from 2.6 s to 5.3 s).
 # Once the store crosses the threshold the day-partitioned layout
-# engages (the existing flat->bucketed migration folds history in), so
+# engages (bucketstore.merge_into converts the store in one swap), so
 # per-trigger cost is bounded by max(threshold, batch + today's
 # partition) — never O(all windows ever). At 100 TB every fact store
 # crosses this in the first minutes of the stream.
@@ -177,14 +162,7 @@ FLAT_STORE_MAX_BYTES = 64 * 2**20
 
 
 def _flat_bytes(path: str) -> int:
-    if not os.path.isdir(path):
-        return 0
-    total = 0
-    for e in os.listdir(path):
-        f = os.path.join(path, e)
-        if os.path.isfile(f) and not e.startswith((".", "_")):
-            total += os.path.getsize(f)
-    return total
+    return sum(os.path.getsize(f) for f in bucketstore._flat_files(path))
 
 
 def _store_bytes(path: str) -> int:
@@ -228,7 +206,6 @@ def additive_merge(
     batch_id: int,
     bucketize=None,
     touched_hint=None,
-    flat_max_bytes: int | None = None,
     stream_id: str | None = None,
 ) -> str:
     """The reference's additive upsert (`ON CONFLICT ... SET v = v +
@@ -256,18 +233,19 @@ def additive_merge(
     a replayed state-dependent delta can differ from the original and
     would otherwise leak rows into never-journaled buckets.
 
-    ADAPTIVE LAYOUT: while the store is flat and under
-    ``FLAT_STORE_MAX_BYTES``, the merge keeps the flat whole-rewrite
-    path (one job, one file set, root journal — all-or-nothing, so
-    safe for every delta kind); crossing the threshold switches to the
-    partitioned layout, with the flat history and its journal folded
-    in by bucketstore's migration. Per-trigger cost is therefore
+    ADAPTIVE LAYOUT: a store is flat or bucketed, never both. While it
+    is flat and under ``FLAT_STORE_MAX_BYTES``, the merge keeps the
+    flat whole-rewrite path (one job, one file set, root journal —
+    all-or-nothing, so safe for every delta kind); crossing the
+    threshold hands it to bucketstore.merge_into, which converts the
+    whole store — history and root journal — to the partitioned layout
+    in one atomic swap before merging. Per-trigger cost is therefore
     bounded by max(threshold, batch + touched partitions) at every
     store age.
 
-    WHY ONE-WAY: once bucketed, a store never migrates back to flat
+    WHY ONE-WAY: once bucketed, a store never converts back to flat
     even if compaction shrinks it under the threshold (VERDICT r7 #7).
-    The forward fold is safe because the root journal is a single
+    The forward conversion is safe because the root journal is a single
     all-buckets superset that seeds every per-bucket journal; the
     reverse would have to MERGE per-bucket journals that may legally
     disagree (a crash mid-swap leaves some buckets a batch ahead) into
@@ -284,15 +262,11 @@ def additive_merge(
     Returns the layout the merge used (``"flat"`` | ``"bucketed"``)
     so harnesses can record the adaptive decision per trigger.
     """
-    from . import bucketstore
-    from . import storeswap
-
-    limit = FLAT_STORE_MAX_BYTES if flat_max_bytes is None else flat_max_bytes
-    if not _is_bucketed(path):
+    if not bucketstore._is_bucketed(path):
         # heal a torn FLAT swap before sizing/merging (crash between
         # the two renames would otherwise silently lose the store)
-        storeswap.recover(path)
-        if _flat_bytes(path) < limit:
+        bucketstore.recover(path)
+        if _flat_bytes(path) < FLAT_STORE_MAX_BYTES:
             applied, recorded = bucketstore._applied(path)
             # watermark semantics (bucketstore._is_applied): ids are
             # monotone per checkpoint, so any id <= the journal max is
@@ -304,7 +278,7 @@ def additive_merge(
             bucketstore._check_stream(recorded, stream_id, path)
             if bucketstore._is_applied(applied, batch_id):
                 return "flat"
-            # no cache: the whole flat merge is ONE action (the swap-in
+            # no cache: the whole flat merge is ONE action (the publish
             # write), so caching deltas would cost a memory write with
             # zero reuse (round 8 — it was costing every merge of every
             # trigger a cache population for nothing)
@@ -324,9 +298,9 @@ def additive_merge(
                 )
             else:
                 merged = deltas
-            storeswap.swap_in(
-                merged, path, bucketstore._pruned(applied | {batch_id}),
-                journal_stream=stream_id or recorded,
+            bucketstore.write_store(
+                path, merged, bucketstore._pruned(applied | {batch_id}),
+                stream_id or recorded,
             )
             return "flat"
 
@@ -356,22 +330,15 @@ def additive_merge(
 
 
 def read_table(spark: SparkSession, path: str) -> DataFrame:
-    """Serving read of a fact store: heal any torn per-bucket (or
-    legacy flat) swap restore-only, read bucketed + not-yet-migrated
-    flat rows, and drop the physical ``bucket`` column.
-
-    The fact stores bucket by day-of-window, which a reader can
-    recompute from the rows themselves — so legacy rows of buckets
-    whose migration marker is already committed are excluded, making
-    the serve read exact even between a mid-migration crash and the
-    healing merge (rows without a timestamp column get the sentinel
-    bucket, which never matches a marker)."""
-    from . import bucketstore
-
+    """Serving read of a fact store: heal any torn per-bucket or
+    whole-store swap restore-only, then read the bucket partitions
+    (physical ``bucket`` column dropped) or, for a flat store, its
+    explicit root part-file list. A store is never both, so the read
+    is exact in every crash window."""
     bucketstore.recover(path, restore_only=True)
-    df = bucketstore.read_store(spark, path, bucketize=_legacy_bucketize)
+    df = bucketstore.read_store(spark, path)
     if df is None:
-        # not a bucketed store. A batch=<id>-partitioned side output
+        # no fact-store rows. A batch=<id>-partitioned side output
         # goes through the marker-aware reader — after a compaction a
         # plain partition-discovery read would double-count any
         # stale-but-excluded directory a crashed gc left behind
@@ -379,8 +346,7 @@ def read_table(spark: SparkSession, path: str) -> DataFrame:
             e.startswith("batch=") for e in os.listdir(path)
         ):
             return _read_matched_root(spark, path)
-        # flat additive store (under FLAT_STORE_MAX_BYTES, never
-        # bucketed): plain parquet read
+        # empty or missing store: plain parquet read and its failure
         return spark.read.parquet(path)
     return df.drop("bucket")
 
@@ -399,13 +365,9 @@ def read_table_snapshot(spark: SparkSession, path: str):
     """
     import contextlib
 
-    from . import bucketstore
-
     @contextlib.contextmanager
     def _cm():
-        with bucketstore.read_snapshot(
-            spark, path, bucketize=_legacy_bucketize
-        ) as df:
+        with bucketstore.read_snapshot(spark, path) as df:
             if df is None:
                 # same non-bucketed fallbacks as read_table (these
                 # layouts have their own crash-consistency contracts)
@@ -463,12 +425,6 @@ def _segment_marker(root: str, sid: int) -> dict:
                 "published but its fold record is corrupt; repair the "
                 "marker before serving"
             ) from exc
-    legacy = os.path.join(d, "_folded_ids.json")
-    if os.path.isfile(legacy):
-        # pre-watermark format: a cumulative list of folded batch ids
-        with open(legacy) as fh:
-            ids = json.load(fh)
-        return {"max_batch": max(ids, default=-1), "segments": []}
     raise RuntimeError(
         f"segment {d} has no fold marker — a published segment always "
         "carries one (it is fsynced before the publishing rename)"
@@ -726,7 +682,7 @@ def prepare_trigger(
         return None
     stores = [os.path.join(out_dir, p.name) for p in pipelines]
     hint = None
-    if any(_is_bucketed(d) for d in stores):
+    if any(bucketstore._is_bucketed(d) for d in stores):
         # window-end timestamps can cross into the next day; +1 day
         # of slack keeps the hint a superset (extras are no-ops)
         hint = [0] + list(range(
@@ -847,8 +803,6 @@ def run_all(
     ident: dict[str, str | None] = {}
 
     def _stream_identity() -> str | None:
-        from . import bucketstore
-
         if "id" not in ident:
             ident["id"] = bucketstore.stream_identity(
                 os.path.join(checkpoint_dir, "single_pass")

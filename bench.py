@@ -18,7 +18,11 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+_HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, _HERE)
+sys.path.insert(0, os.path.join(_HERE, "tools"))
+
+from probe import median, spread_exceeds, time_query, warm_up  # noqa: E402
 
 # stdout `queries` map: the reference's five fact tables + totals +
 # side output — the workload BASELINE.md defines; everything else is in
@@ -33,6 +37,28 @@ HEADLINE = [
     "channel_stats_totals",
     "user_emote_stats_totals",
 ]
+
+# Per-query timing protocol (r13): two runs per query — a single pass
+# folds one-time JIT/GC events into whichever query they land on — and
+# a 2-run spread above SPREAD_SUSPECT escalates to a THIRD run whose
+# median is reported (one contaminated run can no longer set the
+# number; two are flagged). All runs land in BENCH_FULL.queries_runs,
+# the legacy min-of-2 in queries_min2 (round-over-round
+# comparability), and queries whose FINAL spread still exceeds
+# SPREAD_SUSPECT are named in measurement_suspect, so a total polluted
+# by host load is self-identifying instead of reading as a code
+# regression (r12: 207 s vs 152 s on identical code).
+SPREAD_SUSPECT = 1.5
+
+
+def timed_runs(time_once) -> tuple[list[float], float]:
+    """Runs of one query and its reported time under the protocol
+    above; ``time_once()`` times one run."""
+    runs = [time_once(), time_once()]
+    if spread_exceeds(runs, SPREAD_SUSPECT):
+        runs.append(time_once())
+        return runs, median(runs)
+    return runs, min(runs)
 
 
 def main() -> None:
@@ -51,117 +77,28 @@ def main() -> None:
     extra = [n for n in all_queries if n not in HEADLINE]
     names = HEADLINE + extra
 
-    # Warm-up: file listing, parquet footers, JVM/codegen paths — so
-    # per-query timings measure the queries, not session cold start.
-    from twitch_chat_analyser_spark import ingest
-
-    for t in ingest.TABLES:
-        ingest.load(spark, sf_dir, t).count()
-    all_queries["channel_stats"](spark, sf_dir).count()
-
-    # JIT warm-up on tiny slices (measured: the first query to exercise
-    # each path pays 5-25s of one-time C2/codegen compilation that then
-    # never recurs — e.g. the higher-order-function dot-product fold went
-    # 28.7s cold -> 2.0s warm at sf0.1). Warm the three hot machinery
-    # paths once so timings measure the operators: (a) the HOF fold +
-    # band joins, (b) the Python/Arrow worker pool, (c) window
-    # functions over a shuffle.
-    from pyspark.sql import functions as F
-
-    from twitch_chat_analyser_spark.operators import similarity as _sim
-
-    _emb_small = ingest.load(spark, sf_dir, "embeddings").filter(
-        F.col("vec_id") < 256
-    )
-    _sim.embedding_dedup_pairs(_emb_small).count()  # (a)
-    _sim.ann_topk_blas(_emb_small, query_ids=[0], k=1).count()  # (b)
-    _msg_small = ingest.messages(spark, sf_dir).limit(4096)
-    from pyspark.sql.window import Window as _W
-
-    _msg_small.withColumn(
-        "rn", F.row_number().over(_W.partitionBy("channel").orderBy("timestamp"))
-    ).count()  # (c)
-
-    # One-time index builds, measured separately: the indexed phrase
-    # search answers from a prebuilt postings table, and min-of-N would
-    # otherwise report only the warm probe — the build cost (the entire
-    # amortization argument for the postings layout) must be visible.
-    from twitch_chat_analyser_spark.operators import llmops as _llm
-
-    t0 = time.time()
-    _llm.ensure_phrase_postings(spark, sf_dir, force=True)
-    index_build = {"phrase_postings_sec": round(time.time() - t0, 3)}
-
-    # Ground-truth construction for the recall evals, hoisted OUT of the
-    # timed region (VERDICT r13 item 6): the truth memos
-    # (llmops._IVF_TRUTH_ROWS / _JACCARD_TRUTH_ROWS) previously filled
-    # on the first timed run, so min-of-2 reported the memo-warm second
-    # run. Build them here and report the cost like phrase_postings_sec;
-    # with truth warm, eval_* run-1 ~= run-2 and the
-    # eval_queries_excluded_from_regression carve-out is dropped.
-    t0 = time.time()
-    _llm._ivf_truth(spark, sf_dir)
-    index_build["ivf_truth_sec"] = round(time.time() - t0, 3)
-    t0 = time.time()
-    _llm._jaccard_truth(spark, sf_dir)
-    index_build["jaccard_truth_sec"] = round(time.time() - t0, 3)
-
-    # Per-query timing protocol (r13, VERDICT r12 item 1 — the r11
-    # contingency triggered: driver and builder disagreed >1.5x on
-    # identical code and min-of-2 could not rebut load). Two runs per
-    # query as before — a single pass folds one-time JIT/GC events into
-    # whichever query they land on — but a 2-run spread above
-    # SPREAD_SUSPECT escalates to a THIRD run and the reported time is
-    # the median of 3 (one contaminated run can no longer set the
-    # number; two contaminated runs are flagged, see below). All runs
-    # land in BENCH_FULL.queries_runs, the legacy min-of-2 in
-    # queries_min2 (round-over-round comparability), and queries whose
-    # FINAL spread still exceeds SPREAD_SUSPECT are named in
-    # measurement_suspect so a polluted total is self-identifying
-    # instead of reading as a code regression (r12: 207 s driver vs
-    # 152 s builder+judge on identical code).
-    SPREAD_SUSPECT = 1.5
+    index_build = warm_up(spark, sf_dir)
     load_start = os.getloadavg()
-
-    def run_once(fn) -> float:
-        t0 = time.time()
-        df = fn(spark, sf_dir)
-        # noop sink: evaluates EVERY projection column (count()
-        # would let Catalyst prune unevaluated expressions, under-
-        # measuring map-only transforms like text_pii_redaction)
-        # while still never collecting to the driver
-        df.write.format("noop").mode("overwrite").save()
-        return round(time.time() - t0, 3)
 
     timings: dict[str, float] = {}
     min2: dict[str, float] = {}
     query_runs: dict[str, list[float]] = {}
     for name in names:
         fn = all_queries[name]
-        runs = [run_once(fn) for _ in range(2)]
-        min2[name] = min(runs)
-        if max(runs) / max(min(runs), 1e-9) > SPREAD_SUSPECT:
-            runs.append(run_once(fn))
-            timings[name] = sorted(runs)[1]  # median of 3
-        else:
-            timings[name] = min(runs)
+        runs, timings[name] = timed_runs(lambda: time_query(spark, fn, sf_dir))
+        min2[name] = min(runs[:2])
         query_runs[name] = runs
 
     total = round(sum(timings.values()), 3)
     # per-query run spread (max/min): > SPREAD_SUSPECT after escalation
     # means even 3 runs disagreed — treat that query's number as
     # measurement-suspect, not as a regression signal
-    # suspect membership thresholds on the UNROUNDED ratio — the
-    # display rounding used to run first, so a spread of 1.5019
-    # rounded to 1.50, failed `> 1.5`, and disagreed with
-    # check_artifacts' unrounded recomputation (r14 drift finding)
-    raw_spreads = {
-        n: max(r) / max(min(r), 1e-9) for n, r in query_runs.items()
+    spreads = {
+        n: round(max(r) / max(min(r), 1e-9), 2) for n, r in query_runs.items()
     }
-    spreads = {n: round(s, 2) for n, s in raw_spreads.items()}
     noisy = {n: s for n, s in sorted(spreads.items(), key=lambda kv: -kv[1])[:10]}
     suspect = sorted(
-        n for n, s in raw_spreads.items() if s > SPREAD_SUSPECT + 1e-9
+        n for n, r in query_runs.items() if spread_exceeds(r, SPREAD_SUSPECT)
     )
 
     # Streaming write-path throughput: all five fact pipelines (the

@@ -218,3 +218,40 @@ def test_scale_reasonless_exclusion_is_red():
         {"eval_x": ""},
     )
     assert any("without a reason" in p for p in probs)
+
+
+# ---- one spread predicate for bench's escalation and the check ----
+
+sys.path.insert(
+    0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "..")
+)
+
+import bench  # noqa: E402
+
+
+def test_spread_boundary_same_verdict_in_bench_and_check():
+    # a 2-run spread of exactly the threshold (or within float error of
+    # it) does not escalate, one a hair above it does; the check must
+    # agree with bench either way
+    for pair, escalates in (
+        ([2.0, 3.0], False),
+        ([2.0, 3.0 + 1e-10], False),
+        ([2.0, 3.0 + 1e-6], True),
+    ):
+        times = iter(pair + [2.5])
+        runs, t = bench.timed_runs(lambda: next(times))
+        assert (len(runs) == 3) is escalates
+        b = copy.deepcopy(GOOD_PROTO)
+        b["spread_suspect_threshold"] = bench.SPREAD_SUSPECT
+        b["queries"] = {"q": t}
+        b["queries_runs"] = {"q": runs}
+        # escalation cannot narrow a spread: an escalated query stays
+        # suspect
+        b["measurement_suspect"] = ["q"] if escalates else []
+        assert check_bench_protocol(b) == []
+        # the unescalated form of the above-threshold pair goes red
+        b["queries_runs"] = {"q": pair}
+        b["queries"] = {"q": min(pair)}
+        assert any(
+            "no escalation run" in p for p in check_bench_protocol(b)
+        ) is escalates

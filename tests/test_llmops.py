@@ -50,6 +50,42 @@ def test_minhash_jaccard_value(docs):
     assert j == pytest.approx(7 / 9)
 
 
+def test_minhash_jaccard_equals_union_jaccard_on_repeated_tokens(spark):
+    # token_jaccard derives |union| as |a| + |b| - |intersect|, exact only
+    # for distinct arrays; minhash_dedup_pairs array_distinct's its token
+    # sets first, so repeated tokens must not change the set Jaccard
+    rep = spark.createDataFrame(
+        [
+            (1, "a a a b b c d e f g", "en", "s1", 19),
+            (2, "a a b b c d e f g h h", "en", "s1", 21),
+            (3, "a a a b b c d e f g g", "en", "s1", 21),
+        ],
+        DOC_SCHEMA,
+    )
+    pairs = dedup.minhash_dedup_pairs(rep, num_hashes=8, threshold=0.0)
+    toks = rep.select("doc_id", dedup.tokens().alias("t"))
+    union_j = (
+        pairs.join(toks.withColumnsRenamed({"doc_id": "doc_a", "t": "ta"}), "doc_a")
+        .join(toks.withColumnsRenamed({"doc_id": "doc_b", "t": "tb"}), "doc_b")
+        .select(
+            "doc_a",
+            "doc_b",
+            "jaccard",
+            (
+                F.size(F.array_intersect("ta", "tb")).cast("double")
+                / F.size(F.array_union("ta", "tb"))
+            ).alias("union_j"),
+            dedup.token_jaccard("ta", "tb").alias("raw_j"),
+        )
+        .collect()
+    )
+    assert {(r["doc_a"], r["doc_b"]) for r in union_j} == {(1, 2), (1, 3), (2, 3)}
+    for r in union_j:
+        assert r["jaccard"] == r["union_j"]
+        # the precondition matters: on the raw arrays the formula is off
+        assert r["raw_j"] != r["union_j"]
+
+
 def test_simhash_close_for_near_dups(docs):
     sig = {r["doc_id"]: r["simhash"] for r in dedup.simhash(docs).collect()}
     ham = lambda a, b: bin(sig[a] ^ sig[b]).count("1")

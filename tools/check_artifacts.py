@@ -19,6 +19,9 @@ import os
 import sys
 
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), ".."))
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+from probe import spread_exceeds  # noqa: E402
 
 
 # the reference's flush interval (job.example.properties:15): the
@@ -63,9 +66,7 @@ def check_bench_protocol(b: dict) -> list[str]:
         )
         suspect = []
     expect_suspect = sorted(
-        n
-        for n, r in runs.items()
-        if r and max(r) / max(min(r), 1e-9) > thr + 1e-9
+        n for n, r in runs.items() if r and spread_exceeds(r, thr)
     )
     if sorted(suspect) != expect_suspect:
         problems.append(
@@ -80,10 +81,9 @@ def check_bench_protocol(b: dict) -> list[str]:
                 "the protocol requires at least 2"
             )
             continue
-        two_spread = max(r[:2]) / max(min(r[:2]), 1e-9)
-        if two_spread > thr + 1e-9 and len(r) < 3:
+        if spread_exceeds(r[:2], thr) and len(r) < 3:
             problems.append(
-                f"BENCH_FULL {name}: 2-run spread {two_spread:.2f} "
+                f"BENCH_FULL {name}: 2-run spread of {r} "
                 f"exceeds {thr} but no escalation run was recorded"
             )
         t = timings.get(name)

@@ -148,6 +148,16 @@ def stabilize(plan: str) -> str:
     return re.sub(r"plan_id=(\d+)", plan_repl, plan)
 
 
+def formatted_plan(spark, df) -> str:
+    """``df.explain("formatted")`` as a string, id-stabilized."""
+    return stabilize(
+        df._jdf.queryExecution().explainString(
+            spark._jvm.org.apache.spark.sql.execution.ExplainMode
+            .fromString("formatted")
+        )
+    )
+
+
 def audit(plan: str) -> list[str]:
     # count only the "(n) NodeName" detail headers — each physical node
     # appears twice in formatted output (tree sketch + detail section)
@@ -203,13 +213,7 @@ def main() -> None:
     qs = registry.queries()
     sections = []
     for name in HEADLINE:
-        df = qs[name](spark, sf_dir)
-        plan = stabilize(
-            df._jdf.queryExecution().explainString(
-                spark._jvm.org.apache.spark.sql.execution.ExplainMode
-                .fromString("formatted")
-            )
-        )
+        plan = formatted_plan(spark, qs[name](spark, sf_dir))
         notes = "\n".join(f"- {n}" for n in audit(plan))
         sections.append(
             f"## {name}\n\n{notes}\n\n```\n{plan.strip()}\n```\n"

@@ -1,7 +1,7 @@
 """Dump .explain("formatted") for a round's optimization targets into
 plans/<round>/<query>_<tag>.txt (tag = before/after). Reuses
-dump_plans' id-stabilizer so before/after diffs show structure, not
-counter churn.
+dump_plans.formatted_plan, whose id-stabilizer makes before/after diffs
+show structure, not counter churn.
 
 Usage: SPARK_GRAFT_SF_DIR=<scale-factor dir> \
        python tools/dump_round_plans.py <round> <tag> <query> [query ...]
@@ -14,7 +14,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from dump_plans import stabilize  # noqa: E402  (same tools dir)
+from dump_plans import formatted_plan  # noqa: E402  (same tools dir)
 
 
 def main() -> None:
@@ -34,13 +34,7 @@ def main() -> None:
     )
     os.makedirs(outdir, exist_ok=True)
     for name in targets:
-        df = qs[name](spark, sf_dir)
-        plan = stabilize(
-            df._jdf.queryExecution().explainString(
-                spark._jvm.org.apache.spark.sql.execution.ExplainMode
-                .fromString("formatted")
-            )
-        )
+        plan = formatted_plan(spark, qs[name](spark, sf_dir))
         path = os.path.join(outdir, f"{name}_{tag}.txt")
         with open(path, "w") as fh:
             fh.write(plan.strip() + "\n")

@@ -279,6 +279,10 @@ def totals_from_rows(
     1.9x on channel_stats_totals). Use it whenever the totals are NOT
     derived from an already-needed stats frame.
 
+    Caveat: "exactly equal" holds for rows with a non-null ``ts``. A
+    null-``ts`` row has no window, so the windowed route drops it, but
+    this function counts it.
+
     -> dims..., timestamp(=0), value_col
     """
     return totals(

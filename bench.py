@@ -50,6 +50,15 @@ HEADLINE = [
 # regression (r12: 207 s vs 152 s on identical code).
 SPREAD_SUSPECT = 1.5
 
+# executemany batch + writer partitions per table of the JDBC stage: the
+# r11 same-session sweep optimum on the SQLite stand-in (SCALE.md),
+# steady p50 — 2000x4: 4,840 ms, 8000x4: 4,383 ms, 8000x2: 3,871 ms
+# (fewest single-writer lock handoffs AND executemany round-trips),
+# 20000x1: 4,346 ms (no Spark-side overlap left). A real Postgres takes
+# row-level locks, so more partitions win there.
+JDBC_BATCH_ROWS = 8000
+JDBC_PARTITIONS = 2
+
 
 def timed_runs(time_once) -> tuple[list[float], float]:
     """Runs of one query and its reported time under the protocol
@@ -496,25 +505,13 @@ def _bench_streaming_jdbc(spark, sf_dir: str) -> dict:
                 t: (sc.accumulator(0), sc.accumulator(0), sc.accumulator(0))
                 for t in sj.FACT_TABLES
             }
-            # executemany batch + writer partitions per table: tunable
-            # like the reference's DB batch size (README.md:99-101 —
-            # "throughput improves up to an optimal batch size").
-            # Defaults are the r11 same-session sweep optimum on the
-            # SQLite stand-in: steady p50 — 2000x4: 4,840 ms, 8000x4:
-            # 4,383 ms, 8000x2: 3,871 ms (best; fewer single-writer
-            # lock handoffs AND fewer executemany round-trips),
-            # 20000x1: 4,346 ms (no Spark-side overlap left). A real
-            # Postgres has row-level locks, so MORE partitions win
-            # there — deployment knobs, not constants.
-            batch_rows = int(os.environ.get("SPARK_GRAFT_JDBC_BATCH", "8000"))
-            n_parts = int(os.environ.get("SPARK_GRAFT_JDBC_PARTS", "2"))
             writer = {
                 t: sj.JdbcSink(
                     dsn="unused",
                     table=t,
-                    batch_size=batch_rows,
+                    batch_size=JDBC_BATCH_ROWS,
                     connection_factory=factory,
-                    num_partitions=n_parts,
+                    num_partitions=JDBC_PARTITIONS,
                     paramstyle="qmark",
                     rows_acc=a[0],
                     txn_acc=a[1],

@@ -58,18 +58,47 @@ def _actual_tables(spark, out_dir):
         "phrase_stats",
     ]:
         got[name] = _sorted_rows(_table(spark, out_dir, name))
-    # side output carries a batch=<id> partition dir for replay
-    # idempotence — not part of the logical schema
-    matched = _table(spark, out_dir, "messages_matching_phrase").drop("batch")
+    matched = _table(spark, out_dir, "messages_matching_phrase")
     got["messages_matching_phrase"] = _sorted_rows(matched)
     return got
 
 
 def test_single_pass_all_tables_with_totals_and_side_output(spark, dirs):
+    import glob
+    import os
+
     src, out, ckpt = dirs
     _mk_messages(spark, BATCH_1).coalesce(1).write.mode("append").parquet(src)
     sp.run_all(spark, src, out, ckpt)
     assert _actual_tables(spark, out) == _expected_tables(spark, BATCH_1)
+    # the on-disk contract readers outside the library glob: the side
+    # output's part files sit exactly one dir below its store root
+    root = os.path.join(out, sp.MATCHED_DIRNAME)
+    parts = glob.glob(os.path.join(root, "*", "*.parquet"))
+    assert parts and {
+        os.path.basename(os.path.dirname(p)) for p in parts
+    } == {"bucket=19723"}  # 2024-01-01, the day of message_time
+    assert not glob.glob(os.path.join(root, "*.parquet"))
+    assert not glob.glob(os.path.join(root, "*", "*", "*.parquet"))
+
+
+def test_fresh_checkpoint_cannot_overwrite_the_side_output(spark, tmp_path):
+    """Exactly-once is per (checkpoint, batch id): a second stream with
+    a fresh checkpoint, pointed at the same out_dir, restarts batch ids
+    at 0. It must be refused, and must not replace the first stream's
+    matched rows with its own."""
+    out = str(tmp_path / "out")
+    for name, rows in (("a", BATCH_1), ("b", BATCH_2)):
+        src = str(tmp_path / f"src_{name}")
+        _mk_messages(spark, rows).coalesce(1).write.mode("append").parquet(src)
+    sp.run_all(spark, str(tmp_path / "src_a"), out, str(tmp_path / "ckpt_a"))
+    want = _expected_tables(spark, BATCH_1)["messages_matching_phrase"]
+    assert _sorted_rows(sp.read_matched_messages(spark, out)) == want
+    with pytest.raises(Exception, match="checkpoint"):
+        sp.run_all(
+            spark, str(tmp_path / "src_b"), out, str(tmp_path / "ckpt_b")
+        )
+    assert _sorted_rows(sp.read_matched_messages(spark, out)) == want
 
 
 def test_run_all_reports_progress_and_ingest_metrics(spark, dirs):

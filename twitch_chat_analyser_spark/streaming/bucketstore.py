@@ -38,6 +38,11 @@ generalizes it so any keyed store can use it:
   journal is seeded from the root journal, and one whole-store publish
   swaps it in. A crash leaves the old flat store or the new bucketed
   one, and the replayed batch merges into whichever it finds.
+- append logs (:func:`append_into`): the same bucketed layout, per-
+  bucket journals and publish, for rows that are only ever added. A
+  bucket's new dir hardlinks the live part files beside the batch's
+  new ones, so a plain append never rewrites history; a bucket that
+  reached its file cap is rewritten into one file set by that append.
 
 Single-writer assumption: foreachBatch serializes merges per query —
 same as streaming/hll.py.
@@ -689,3 +694,88 @@ def merge_into(
         shutil.rmtree(tmp, ignore_errors=True)
     finally:
         delta.unpersist()
+
+
+def append_into(
+    spark: SparkSession,
+    store: str,
+    rows: DataFrame,
+    batch_id: int,
+    max_files: int,
+    fold_hint: list[int],
+    stream_id: str | None = None,
+) -> None:
+    """Append one batch's ``rows`` (carrying an int ``bucket`` column)
+    to a bucketed append log, exactly once per (checkpoint, batch id).
+
+    ONE partitioned write lands the batch's rows of each bucket in a
+    tmp dir. Every touched journal, and the newest live bucket's (a
+    fresh checkpoint may touch only new days), must record
+    ``stream_id`` (:func:`_check_stream`), so a fresh checkpoint is
+    refused before anything is published. Each touched bucket whose
+    journal has not seen ``batch_id`` (:func:`_is_applied`) then gets
+    the live bucket's part files hardlinked beside the new ones (copied
+    where the filesystem refuses links) and its journal, and
+    :func:`_publish` swaps it in. A lazy reader that listed the old dir
+    still finds every file under the same name afterwards.
+
+    File growth is bounded by the writer itself: a live bucket among
+    ``fold_hint`` (the buckets the rows may touch) that already holds
+    ``max_files`` part files is read back into that same write, so its
+    new dir is one rewritten file set — no extra Spark job and no
+    maintenance caller. The hint only steers folding; every row lands
+    whatever it says. Rows must be a pure function of the batch, as for
+    :func:`merge_into`'s per-bucket journals."""
+    recover(store)
+    live = {
+        int(e.split("=", 1)[1]): os.path.join(store, e)
+        for e in (os.listdir(store) if os.path.isdir(store) else [])
+        if e.startswith("bucket=")
+    }
+    rows = _null_safe_bucket(rows)
+    fold = []
+    for b in sorted(live.keys() & set(fold_hint)):
+        files = _flat_files(live[b])
+        if len(files) < max_files:
+            continue
+        fold.append(b)
+        # ~128 MB per rewritten file; reading the dir (not its file
+        # list) keeps the fold free of a parallel-listing job
+        n = -(-sum(map(os.path.getsize, files)) // (128 << 20))
+        old = spark.read.schema(rows.drop("bucket").schema).parquet(live[b])
+        rows = rows.unionByName(
+            old.coalesce(max(1, n)).withColumn("bucket", F.lit(b))
+        )
+    tmp = f"{store}.tmp-{uuid.uuid4().hex[:8]}"
+    try:
+        rows.write.partitionBy("bucket").mode("overwrite").parquet(tmp)
+        touched = sorted(
+            int(e.split("=", 1)[1])
+            for e in os.listdir(tmp)
+            if e.startswith("bucket=")
+        )
+        probed = set(touched) | ({max(live)} if live else set())
+        journals = {
+            b: _applied(os.path.join(store, f"bucket={b}")) for b in probed
+        }
+        for b, (_, recorded) in journals.items():
+            _check_stream(recorded, stream_id, f"{store}/bucket={b}")
+        os.makedirs(store, exist_ok=True)
+        for b in touched:
+            ids, recorded = journals[b]
+            if _is_applied(ids, batch_id):
+                continue  # a replay: this bucket already holds the batch
+            src = os.path.join(tmp, f"bucket={b}")
+            if b in live and b not in fold:
+                for f in _flat_files(live[b]):
+                    dst = os.path.join(src, os.path.basename(f))
+                    try:
+                        os.link(f, dst)
+                    except OSError:  # no hardlinks here (EXDEV/EPERM/EMLINK)
+                        shutil.copy2(f, dst)
+            _dump_journal(
+                src, _pruned(ids | {batch_id}), stream_id or recorded
+            )
+            _publish(store, src, b)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)

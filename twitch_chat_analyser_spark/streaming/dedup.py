@@ -46,6 +46,21 @@ def _has_history(path: str) -> bool:
             return True
     return False
 
+
+def _history(
+    spark: SparkSession, path: str, batch_id: int
+) -> DataFrame | None:
+    """The ``batch=<id>`` history store's rows of every batch but
+    ``batch_id`` (None while it holds no committed data): excluding the
+    batch's own partition lets a replay see exactly the history its
+    first run saw."""
+    from pyspark.sql import functions as F
+
+    if not _has_history(path):
+        return None
+    return spark.read.parquet(path).filter(F.col("batch") != batch_id)
+
+
 # Wire-identity of a message (Message.java:11-14): no synthetic id
 # exists, the full record is the key.
 DEDUP_KEYS = ["ts", "channel", "username", "message"]
@@ -122,13 +137,9 @@ def _dedup_against_history(
     hashed = batch_df.withColumn("fp", F.md5(norm_text()))
     keeper = hashed.groupBy("fp").agg(F.min("doc_id").alias("doc_id"))
     batch_unique = hashed.join(keeper, ["fp", "doc_id"], "left_semi")
-    if _has_history(fp_path):
-        seen = (
-            spark.read.parquet(fp_path)
-            .filter(F.col("batch") != batch_id)
-            .select("fp")
-        )
-        return batch_unique.join(seen, "fp", "left_anti")
+    seen = _history(spark, fp_path, batch_id)
+    if seen is not None:
+        return batch_unique.join(seen.select("fp"), "fp", "left_anti")
     return batch_unique
 
 
@@ -288,11 +299,10 @@ def start_corpus_prep_stream(
         )
         # history dedup as a flag (same replay-safe own-batch exclusion
         # as _dedup_against_history)
-        if _has_history(fp_path):
+        seen = _history(spark, fp_path, batch_id)
+        if seen is not None:
             seen = (
-                spark.read.parquet(fp_path)
-                .filter(F.col("batch") != batch_id)
-                .select("fp")
+                seen.select("fp")
                 .distinct()
                 .withColumn("in_history", F.lit(True))
             )
@@ -395,13 +405,9 @@ def start_bloom_corpus_dedup(
         hashed = batch_df.withColumn("fp", F.md5(norm_text()))
         keeper = hashed.groupBy("fp").agg(F.min("doc_id").alias("doc_id"))
         batch_unique = hashed.join(keeper, ["fp", "doc_id"], "left_semi")
-        if _has_history(bits_path):
-            bits = (
-                spark.read.parquet(bits_path)
-                .filter(F.col("batch") != batch_id)
-                .select("pos")
-                .distinct()
-            )
+        bits = _history(spark, bits_path, batch_id)
+        if bits is not None:
+            bits = bits.select("pos").distinct()
             verdicts = bloom_maybe_contains(
                 batch_unique.select("doc_id", "fp"), bits, "fp"
             )
@@ -479,13 +485,9 @@ def start_paragraph_dedup_stream(
             .groupBy("h")
             .agg(F.min(F.struct("doc_id", "idx")).alias("w"))
         )
-        if _has_history(fp_path):
-            seen = (
-                spark.read.parquet(fp_path)
-                .filter(F.col("batch") != batch_id)
-                .select("h")
-            )
-            winners = winners.join(seen, "h", "left_anti")
+        seen = _history(spark, fp_path, batch_id)
+        if seen is not None:
+            winners = winners.join(seen.select("h"), "h", "left_anti")
         winners = winners.localCheckpoint(eager=True)
         # keep = in-batch first occurrence of a hash never seen before:
         # a historical dup lost its winners row to the anti-join (w is
@@ -653,13 +655,10 @@ def start_minhash_corpus_dedup(
             .distinct()
         )
         drops = in_batch
-        if _has_history(sig_path):
-            hist = (
-                spark.read.parquet(sig_path)
-                .filter(F.col("batch") != batch_id)
-                .select(
-                    F.col("doc_id").alias("ref_id"), "seed", "minhash"
-                )
+        hist = _history(spark, sig_path, batch_id)
+        if hist is not None:
+            hist = hist.select(
+                F.col("doc_id").alias("ref_id"), "seed", "minhash"
             )
             vs_hist = (
                 minhash_slot_candidates(sigs, hist, block_cap)
@@ -764,13 +763,10 @@ def start_phash_media_dedup(
             .distinct()
         )
         drops = in_batch
-        if _has_history(hash_path):
-            hist = (
-                spark.read.parquet(hash_path)
-                .filter(F.col("batch") != batch_id)
-                .select(
-                    F.col("media_id").alias("ref_id"), "phash", "modality"
-                )
+        hist = _history(spark, hash_path, batch_id)
+        if hist is not None:
+            hist = hist.select(
+                F.col("media_id").alias("ref_id"), "phash", "modality"
             )
             vs_hist = (
                 phash_probe_candidates(

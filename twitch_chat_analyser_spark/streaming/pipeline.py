@@ -29,6 +29,11 @@ worst case is one trigger interval — strictly better than the
 reference's aggregation-interval + checkpoint-interval bound
 (README.md:62-67).
 
+The side output is a day-bucketed append log on the same bucketstore
+publish and journals (:func:`run_all`); its writer folds a day's part
+files once they reach ``MATCHED_MAX_FILES``, so no maintenance caller
+is needed.
+
 Parquet store layout: ``additive_merge`` is ADAPTIVE — a flat
 whole-rewrite while the store is under FLAT_STORE_MAX_BYTES (cheapest
 for small tables — one job, one file set), then, converted in one
@@ -42,11 +47,8 @@ property a Delta MERGE on a date-partitioned table gives at 100 TB.
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
 import time
-import uuid
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
@@ -139,12 +141,13 @@ def _applied_batches(path: str) -> set[int]:
 # share their event time, so the touched partition set is {today's day,
 # the timestamp=0 sentinel day} — NOT the all-hash-buckets scatter a
 # key-hash layout would give a batch with many (channel, window) keys.
+# The side output buckets by the day of ``message_time`` the same way.
 DAY_MS = 86_400_000
 
 
-def _day_bucketize(df: DataFrame) -> DataFrame:
+def _day_bucketize(df: DataFrame, col: str = "timestamp") -> DataFrame:
     return df.withColumn(
-        "bucket", F.floor(F.col("timestamp") / F.lit(DAY_MS)).cast("int")
+        "bucket", F.floor(F.col(col) / F.lit(DAY_MS)).cast("int")
     )
 
 
@@ -338,14 +341,6 @@ def read_table(spark: SparkSession, path: str) -> DataFrame:
     bucketstore.recover(path, restore_only=True)
     df = bucketstore.read_store(spark, path)
     if df is None:
-        # no fact-store rows. A batch=<id>-partitioned side output
-        # goes through the marker-aware reader — after a compaction a
-        # plain partition-discovery read would double-count any
-        # stale-but-excluded directory a crashed gc left behind
-        if os.path.isdir(path) and any(
-            e.startswith("batch=") for e in os.listdir(path)
-        ):
-            return _read_matched_root(spark, path)
         # empty or missing store: plain parquet read and its failure
         return spark.read.parquet(path)
     return df.drop("bucket")
@@ -369,8 +364,7 @@ def read_table_snapshot(spark: SparkSession, path: str):
     def _cm():
         with bucketstore.read_snapshot(spark, path) as df:
             if df is None:
-                # same non-bucketed fallbacks as read_table (these
-                # layouts have their own crash-consistency contracts)
+                # empty or missing store: read_table's failure
                 yield read_table(spark, path)
             else:
                 yield df.drop("bucket")
@@ -383,226 +377,43 @@ MATCHED_SCHEMA = (
     "message_time long, message_channel string, message_user string, "
     "message_text string, matched_phrase string"
 )
-# once this many consolidated segments are live, a compaction cycle
-# also folds the segments themselves into one (rare, amortized)
-MATCHED_MAX_SEGMENTS = 8
+# a live day bucket holding this many part files is rewritten into one
+# file set by its next append (bucketstore.append_into), so the log
+# bounds its own file count
+MATCHED_MAX_FILES = 64
 
 
 def _matched_root(out_dir: str) -> str:
     return os.path.join(out_dir, MATCHED_DIRNAME)
 
 
-def _matched_ids(root: str) -> list[int]:
-    """All batch=<id> ids present: positive = trigger batches,
-    negative = immutable consolidated segments."""
-    ids = []
-    for e in os.listdir(root):
-        if e.startswith("batch="):
-            b = e.split("=", 1)[1]
-            if b.lstrip("-").isdigit():
-                ids.append(int(b))
-    return sorted(ids)
-
-
-def _has_parquet(d: str) -> bool:
-    return os.path.isdir(d) and any(
-        f.endswith(".parquet") for f in os.listdir(d)
+def _refuse_batch_dirs(root: str) -> None:
+    """Refuse a side-output root holding ``batch=<id>`` dirs (the
+    retired one-dir-per-trigger layout): day buckets appended beside
+    them would make every read silently drop their rows — the rule a
+    store holding both flat and bucketed data gets."""
+    old = sorted(
+        e for e in (os.listdir(root) if os.path.isdir(root) else [])
+        if e.startswith("batch=")
     )
-
-
-def _segment_marker(root: str, sid: int) -> dict:
-    d = os.path.join(root, f"batch={sid}")
-    j = os.path.join(d, "_folded.json")
-    if os.path.isfile(j):
-        try:
-            with open(j) as fh:
-                return json.load(fh)
-        except (json.JSONDecodeError, OSError) as exc:
-            # defaulting here would silently UN-fold history (the
-            # still-present source dirs would double-count) — refuse
-            raise RuntimeError(
-                f"unreadable compaction marker {j}: the segment is "
-                "published but its fold record is corrupt; repair the "
-                "marker before serving"
-            ) from exc
-    raise RuntimeError(
-        f"segment {d} has no fold marker — a published segment always "
-        "carries one (it is fsynced before the publishing rename)"
-    )
-
-
-def _matched_state(root: str):
-    """(live batch ids, live segment ids, folded-batch watermark,
-    superseded segment ids) from the on-disk markers. A segment's
-    marker records the highest batch id it folded (``max_batch``) and
-    the segment ids it merged; a segment listed by another segment is
-    superseded. Batch ids are strictly increasing and compaction
-    always folds a PREFIX of the live ids, so "folded" is exactly
-    "id ≤ watermark" — the marker stays O(1) no matter how many
-    batches a long-running job ever folds. Live segments' markers are
-    complete (merges carry the max forward)."""
-    ids = _matched_ids(root)
-    seg_ids = [i for i in ids if i < 0]
-    markers = {s: _segment_marker(root, s) for s in seg_ids}
-    superseded = set()
-    for m in markers.values():
-        superseded |= set(m["segments"])
-    live_segs = [s for s in seg_ids if s not in superseded]
-    watermark = max(
-        [markers[s]["max_batch"] for s in live_segs], default=-1
-    )
-    live_batches = [i for i in ids if i >= 0 and i > watermark]
-    return live_batches, live_segs, watermark, superseded
-
-
-def compact_matched_messages(
-    spark: SparkSession, out_dir: str, keep_last: int = 2
-) -> int:
-    """Fold old ``batch=<id>`` side-output directories into an
-    immutable consolidated SEGMENT (``batch=-1``, ``batch=-2``, …).
-    Returns the number of batch directories folded.
-
-    Why: the exactly-once side output writes one directory per trigger
-    (a replayed batch overwrites ITS OWN directory —
-    MessagesMatchingPhraseExporter.java:16-50 gets the same guarantee
-    from the XA wrapper). On a long-running job that is unbounded
-    directory growth: at one trigger per 5 s, ~17k directories/day of
-    tiny files — a listing and small-file problem at 100 TB scale.
-    Periodic compaction (the reference would run VACUUM-style
-    maintenance on Postgres; this is the parquet-store analog) folds
-    committed batches into right-sized immutable segments.
-
-    Replay safety: with a sequential-commit source, the only batch
-    that can replay after a crash is the highest written id, so every
-    id except the newest ``keep_last`` (enforced ≥ 1) is immutable and
-    safe to fold.
-
-    Crash safety — no rewrite of existing data, ever: each cycle
-    writes a NEW segment containing only the newly folded batches and
-    publishes it with ONE atomic rename; the segment's ``_folded.json``
-    (committed by that same rename) records the folded-batch watermark
-    (compaction always folds a prefix of the strictly-increasing batch
-    ids, so the marker is O(1) forever) plus any merged segment ids,
-    and reads exclude folded batch dirs / superseded segments by
-    marker. A crash before the rename leaves a tmp dir (gc'd next
-    cycle); the folded originals are ALWAYS left on disk until the
-    next cycle's gc — deferred deletion gives a concurrent lazy
-    serving read a full compaction period to finish instead of racing
-    a same-cycle rmtree (ADVICE r9).
-    Cost per cycle is O(newly folded data), not O(history); when more
-    than ``MATCHED_MAX_SEGMENTS`` segments are live, the cycle folds
-    the segments too (amortized — segment count grows per compaction
-    run, not per trigger). Single-writer assumption as for the
-    bucketed stores: one maintenance process at a time.
-    """
-    keep_last = max(1, keep_last)
-    root = _matched_root(out_dir)
-    if not os.path.isdir(root):
-        return 0
-    # gc from any prior crash: tmp dirs, folded batch dirs that were
-    # never removed, superseded segment dirs
-    for e in os.listdir(root):
-        if e.startswith(".tmp-"):
-            shutil.rmtree(os.path.join(root, e), ignore_errors=True)
-    live_batches, live_segs, watermark, superseded = _matched_state(root)
-    stale = [
-        i for i in _matched_ids(root)
-        if (0 <= i <= watermark) or i in superseded
-    ]
-    for i in stale:
-        shutil.rmtree(os.path.join(root, f"batch={i}"), ignore_errors=True)
-    # supersession exclusion must survive the superseder's removal: any
-    # superseded segment dir that a silently-failed rmtree left behind
-    # gets re-recorded in the segment published THIS cycle, so its
-    # exclusion never depends on a marker that a later merge deletes
-    undead = [
-        s for s in superseded
-        if os.path.isdir(os.path.join(root, f"batch={s}"))
-    ]
-
-    eligible = live_batches[:-keep_last]
-    if not eligible:
-        return 0
-    merge_segments = len(live_segs) >= MATCHED_MAX_SEGMENTS
-    fold_segs = live_segs if merge_segments else []
-
-    src_dirs = [os.path.join(root, f"batch={i}") for i in eligible]
-    src_dirs += [os.path.join(root, f"batch={s}") for s in fold_segs]
-    # all-empty dirs hold no part files and can't be read — they still
-    # get folded (marked + removed), they just contribute no rows
-    readable = [d for d in src_dirs if _has_parquet(d)]
-    merged = (
-        spark.read.parquet(*readable)
-        if readable
-        else spark.createDataFrame([], MATCHED_SCHEMA)
-    )
-    marker = {
-        "max_batch": max(eligible),
-        "segments": sorted(set(fold_segs) | set(undead)),
-    }
-    tmp = os.path.join(root, f".tmp-{uuid.uuid4().hex[:8]}")
-    # right-size the consolidated files by INPUT BYTES (~128 MB per
-    # output file), not input count — a segment merge can carry the
-    # whole folded history and must not collapse into one giant file
-    in_bytes = sum(
-        os.path.getsize(os.path.join(d, f))
-        for d in readable
-        for f in os.listdir(d)
-        if f.endswith(".parquet")
-    )
-    n_files = max(1, -(-in_bytes // (128 << 20)))
-    merged.coalesce(n_files).write.mode("overwrite").parquet(tmp)
-    # the marker must be ON DISK before the rename publishes the
-    # segment, or a power loss could surface a marker-less segment
-    # whose source dirs then double-count
-    with open(os.path.join(tmp, "_folded.json"), "w") as fh:
-        json.dump(marker, fh)
-        fh.flush()
-        os.fsync(fh.fileno())
-    new_sid = min(live_segs + [0]) - 1
-    os.rename(tmp, os.path.join(root, f"batch={new_sid}"))  # atomic publish
-    # make the publish itself durable (dir entry fsync)
-    try:
-        dfd = os.open(root, os.O_RDONLY)
-        os.fsync(dfd)
-        os.close(dfd)
-    except OSError:
-        pass  # platform without dir fsync — rename atomicity still holds
-    # DEFERRED GC (ADVICE r9): the dirs folded THIS cycle are NOT
-    # removed here — they are already excluded by the just-published
-    # marker, and a concurrent serving read may have listed them
-    # moments ago (Spark's read is lazy; deleting now could fail that
-    # read mid-action with FileNotFound). The NEXT cycle's gc pass
-    # removes them, so a reader gets a full compaction period to
-    # finish instead of a millisecond race. Only a reader whose
-    # listing predates this publish AND whose action outlives the next
-    # whole cycle can still race — document-level retry covers that.
-    return len(eligible)
+    if old:
+        raise RuntimeError(
+            f"{root} holds batch=<id> dirs of the retired side-output "
+            f"layout ({', '.join(old)}); move them aside before writing "
+            "or reading the day-bucketed log"
+        )
 
 
 def read_matched_messages(spark: SparkSession, out_dir: str) -> DataFrame:
-    """Exact serving read of the matched-message append log across
-    compaction states: live consolidated segments + un-folded batch
-    directories, read as ONE multi-path parquet relation (one listing
-    pass, flat plan). Batch dirs folded into a segment and segments
-    superseded by a merge are excluded by marker, so the read is exact
-    even between a compaction crash and the next gc. Logical schema
-    only (no ``batch`` column)."""
-    return _read_matched_root(spark, _matched_root(out_dir))
-
-
-def _read_matched_root(spark: SparkSession, root: str) -> DataFrame:
-    paths: list[str] = []
-    if os.path.isdir(root):
-        live_batches, live_segs, _folded, _sup = _matched_state(root)
-        paths = [
-            os.path.join(root, f"batch={i}")
-            for i in live_segs + live_batches
-            if _has_parquet(os.path.join(root, f"batch={i}"))
-        ]
-    if not paths:
+    """The side output's rows in their logical schema: :func:`read_table`
+    over its day-bucketed store, or an empty ``MATCHED_SCHEMA`` frame
+    when it holds nothing."""
+    root = _matched_root(out_dir)
+    _refuse_batch_dirs(root)
+    bucketstore.recover(root, restore_only=True)
+    if not bucketstore._bucket_dirs(root):
         return spark.createDataFrame([], MATCHED_SCHEMA)
-    return spark.read.parquet(*paths)
+    return read_table(spark, root)
 
 
 def with_total_rows(stats: DataFrame, keys: list[str], value_col: str) -> DataFrame:
@@ -627,6 +438,7 @@ class Trigger:
 
     batch: DataFrame  # persisted
     rows: int
+    days: list[int]  # event days of the batch's messages
     hint: list[int] | None  # day buckets a merge may touch
     shuffle_partitions: int
     occurrences: DataFrame  # the shared emote extraction, persisted
@@ -681,18 +493,19 @@ def prepare_trigger(
         batch_df.unpersist()
         return None
     stores = [os.path.join(out_dir, p.name) for p in pipelines]
+    days = [] if span["min_ms"] is None else list(range(
+        int(span["min_ms"] // DAY_MS), int(span["max_ms"] // DAY_MS) + 1
+    ))
     hint = None
     if any(bucketstore._is_bucketed(d) for d in stores):
         # window-end timestamps can cross into the next day; +1 day
         # of slack keeps the hint a superset (extras are no-ops)
-        hint = [0] + list(range(
-            int(span["min_ms"] // DAY_MS),
-            int(span["max_ms"] // DAY_MS) + 2,
-        ))
+        hint = [0, *days, days[-1] + 1]
     store_b = max((_store_bytes(d) for d in stores), default=0)
     return Trigger(
         batch_df,
         span["n"],
+        days,
         hint,
         trigger_shuffle_partitions(batch_df.sparkSession, span["n"], store_b),
         agg.emote_occurrences(batch_df, emotes).persist(),
@@ -778,17 +591,22 @@ def run_all(
     batch_id)`` callable that applies the deltas exactly once — e.g.
     one ``jdbc.JdbcSink`` per table.
 
-    The side output is written ``overwrite`` into a ``batch=<id>``
-    subdirectory of ``out_dir`` whatever the writer: a replay
-    overwrites the same directory, keeping the append log exactly-once
-    too (MessagesMatchingPhraseExporter.java:16-50 gets the same
-    guarantee from the XA wrapper).
+    The side output lands in ``out_dir`` whatever the writer, as a
+    day-bucketed append log (``messages_matching_phrase/bucket=<day of
+    message_time>/``, bucketstore.append_into): one partitioned write
+    per trigger, published per day with a journal that records the
+    checkpoint, so a replay is a no-op and a fresh checkpoint pointed
+    at an existing log is refused before it publishes anything
+    (MessagesMatchingPhraseExporter.java:16-50 gets exactly-once from
+    the XA wrapper). A root still holding the retired ``batch=<id>``
+    dirs is refused before the query starts.
 
     Runs until available data is exhausted (availableNow by default —
     replayable, resumes from the checkpoint like the reference's Kafka
     reprocessing flow, README.md:86-101). Returns ``[progress]``, the
     query's progress records in a one-element list, so callers can
     report per-trigger latency percentiles."""
+    _refuse_batch_dirs(_matched_root(out_dir))
     pipelines = default_pipelines(spark)
     phrases = dims.phrases_df(spark)
     emotes = dims.emotes_df(spark)
@@ -863,8 +681,10 @@ def run_all(
             )
             t0 = time.time()
             matched = agg.messages_matching_phrase(batch_df, phrases)
-            matched.write.mode("overwrite").parquet(
-                os.path.join(out_dir, MATCHED_DIRNAME, f"batch={batch_id}")
+            bucketstore.append_into(
+                sess, _matched_root(out_dir),
+                _day_bucketize(matched, "message_time"), batch_id,
+                MATCHED_MAX_FILES, trig.days, stream_id=sid,
             )
             if merge_metrics is not None:
                 merge_metrics.append({

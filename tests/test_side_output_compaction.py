@@ -6,15 +6,22 @@ crash at either publish rename replays to exact rows."""
 
 from __future__ import annotations
 
+import datetime as dt
 import json
 import os
+from collections import Counter
 
 import pytest
+from pyspark.sql import types as T
 
+from twitch_chat_analyser_spark import dims
+from twitch_chat_analyser_spark.operators import aggregations as agg
 from twitch_chat_analyser_spark.streaming import bucketstore
 from twitch_chat_analyser_spark.streaming import pipeline as sp
 
-from test_streaming import BATCH_1, BATCH_2, _mk_messages, _sorted_rows
+from test_streaming import (
+    BATCH_1, BATCH_2, EPOCH, _mk_messages, _sorted_rows,
+)
 from test_streaming_single_pass import _actual_tables, _expected_tables
 
 
@@ -25,6 +32,22 @@ def _dirs(tmp_path):
 def _feed(spark, rows, src, out, ckpt):
     _mk_messages(spark, rows).coalesce(1).write.mode("append").parquet(src)
     sp.run_all(spark, src, out, ckpt)
+
+
+def _msgs(spark, rows):
+    """Messages whose offset may be None: a message without a time,
+    which the file source admits (it reads every column nullable)."""
+    return spark.createDataFrame(
+        [
+            (None if ms is None else EPOCH + dt.timedelta(milliseconds=ms),
+             ch, u, m)
+            for ms, ch, u, m in rows
+        ],
+        T.StructType([
+            T.StructField(f.name, f.dataType, True)
+            for f in sp.MESSAGE_SCHEMA
+        ]),
+    )
 
 
 def _matched_rows(spark, out):
@@ -67,6 +90,52 @@ def test_fold_at_max_files_keeps_rows_and_carries_the_journal(
     with open(os.path.join(ckpt, "single_pass", "metadata")) as fh:
         qid = json.load(fh)["id"]
     assert journal == {"stream": qid, "ids": [2, 3]}
+
+
+def test_null_time_bucket_is_folded_too(spark, tmp_path, monkeypatch):
+    """Matched messages without a timestamp land in the NULL_BUCKET
+    dir, which no event day names; the writer folds it at
+    MATCHED_MAX_FILES like any day, so its file count stays bounded."""
+    monkeypatch.setattr(sp, "MATCHED_MAX_FILES", 3)
+    src, out, ckpt = _dirs(tmp_path)
+    null_dir = f"bucket={bucketstore.NULL_BUCKET}"
+    fed, counts = [], []
+    for ms in (0, 10_000, 20_000, 30_000):
+        rows = [(None, "click", "u1", "fast merge"),
+                (ms, "view", "u2", "fast lane")]
+        fed += rows
+        _msgs(spark, rows).coalesce(1).write.mode("append").parquet(src)
+        sp.run_all(spark, src, out, ckpt)
+        counts.append(len(_buckets(out)[null_dir][0]))
+    assert counts == [1, 2, 3, 2]
+    want = agg.messages_matching_phrase(_msgs(spark, fed), dims.phrases_df(spark))
+    got = sp.read_matched_messages(spark, out)
+    assert Counter(got.collect()) == Counter(want.collect())
+    assert got.filter("message_time IS NULL").count() == 8
+
+
+def test_batch_without_times_against_bucketed_stores(
+    spark, tmp_path, monkeypatch
+):
+    """A micro-batch whose messages all lack a time has no event days.
+    Against day-bucketed fact stores it adds nothing to them, and its
+    matched rows land in the side output's NULL_BUCKET dir."""
+    monkeypatch.setattr(sp, "FLAT_STORE_MAX_BYTES", 0)
+    src, out, ckpt = _dirs(tmp_path)
+    _feed(spark, BATCH_1, src, out, ckpt)
+    tables = ["channel_stats", "user_stats", "emote_stats",
+              "user_emote_stats", "phrase_stats"]
+    assert all(bucketstore._is_bucketed(os.path.join(out, t)) for t in tables)
+    before = {t: _sorted_rows(sp.read_table(spark, os.path.join(out, t)))
+              for t in tables}
+    _msgs(spark, [(None, "click", "u1", "fast merge")]).coalesce(1).write.mode(
+        "append").parquet(src)
+    sp.run_all(spark, src, out, ckpt)
+    assert {t: _sorted_rows(sp.read_table(spark, os.path.join(out, t)))
+            for t in tables} == before
+    assert f"bucket={bucketstore.NULL_BUCKET}" in _buckets(out)
+    got = sp.read_matched_messages(spark, out)
+    assert got.filter("message_time IS NULL").count() == 2
 
 
 def test_replay_after_a_fold_is_a_no_op(spark, tmp_path, monkeypatch):
@@ -144,11 +213,9 @@ def test_fresh_checkpoint_writing_only_a_new_day_is_refused(spark, tmp_path):
     def rows(day):
         return spark.createDataFrame([(day, "m")], "bucket int, text string")
 
-    bucketstore.append_into(spark, store, rows(1), 0, 8, [1], stream_id="a")
+    bucketstore.append_into(spark, store, rows(1), 0, "a", 8, [1])
     with pytest.raises(RuntimeError, match="checkpoint"):
-        bucketstore.append_into(
-            spark, store, rows(2), 0, 8, [2], stream_id="b"
-        )
+        bucketstore.append_into(spark, store, rows(2), 0, "b", 8, [2])
     assert os.listdir(store) == ["bucket=1"]
 
 

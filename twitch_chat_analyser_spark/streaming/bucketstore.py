@@ -701,9 +701,9 @@ def append_into(
     store: str,
     rows: DataFrame,
     batch_id: int,
+    stream_id: str,
     max_files: int,
     fold_hint: list[int],
-    stream_id: str | None = None,
 ) -> None:
     """Append one batch's ``rows`` (carrying an int ``bucket`` column)
     to a bucketed append log, exactly once per (checkpoint, batch id).
@@ -716,15 +716,18 @@ def append_into(
     journal has not seen ``batch_id`` (:func:`_is_applied`) then gets
     the live bucket's part files hardlinked beside the new ones (copied
     where the filesystem refuses links) and its journal, and
-    :func:`_publish` swaps it in. A lazy reader that listed the old dir
-    still finds every file under the same name afterwards.
+    :func:`_publish` swaps it in. After a plain append a lazy reader
+    that listed the old dir still finds every file under the same name;
+    a fold deletes the files it rewrote, so such a reader must retry,
+    as :func:`read_table` already requires of every store.
 
-    File growth is bounded by the writer itself: a live bucket among
-    ``fold_hint`` (the buckets the rows may touch) that already holds
-    ``max_files`` part files is read back into that same write, so its
-    new dir is one rewritten file set — no extra Spark job and no
-    maintenance caller. The hint only steers folding; every row lands
-    whatever it says. Rows must be a pure function of the batch, as for
+    File growth is bounded by the writer itself: a live bucket the rows
+    may touch — one of ``fold_hint`` (the buckets of their non-null
+    keys) or :data:`NULL_BUCKET` — that already holds ``max_files`` part
+    files is read back into that same write, so its new dir is one
+    rewritten file set — no extra Spark job and no maintenance caller.
+    The hint only steers folding; every row lands whatever it says.
+    Rows must be a pure function of the batch, as for
     :func:`merge_into`'s per-bucket journals."""
     recover(store)
     live = {
@@ -734,7 +737,7 @@ def append_into(
     }
     rows = _null_safe_bucket(rows)
     fold = []
-    for b in sorted(live.keys() & set(fold_hint)):
+    for b in sorted(live.keys() & {*fold_hint, NULL_BUCKET}):
         files = _flat_files(live[b])
         if len(files) < max_files:
             continue
@@ -762,7 +765,7 @@ def append_into(
             _check_stream(recorded, stream_id, f"{store}/bucket={b}")
         os.makedirs(store, exist_ok=True)
         for b in touched:
-            ids, recorded = journals[b]
+            ids = journals[b][0]
             if _is_applied(ids, batch_id):
                 continue  # a replay: this bucket already holds the batch
             src = os.path.join(tmp, f"bucket={b}")
@@ -773,9 +776,7 @@ def append_into(
                         os.link(f, dst)
                     except OSError:  # no hardlinks here (EXDEV/EPERM/EMLINK)
                         shutil.copy2(f, dst)
-            _dump_journal(
-                src, _pruned(ids | {batch_id}), stream_id or recorded
-            )
+            _dump_journal(src, _pruned(ids | {batch_id}), stream_id)
             _publish(store, src, b)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)

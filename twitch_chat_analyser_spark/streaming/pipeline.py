@@ -379,7 +379,13 @@ MATCHED_SCHEMA = (
 )
 # a live day bucket holding this many part files is rewritten into one
 # file set by its next append (bucketstore.append_into), so the log
-# bounds its own file count
+# bounds its own file count. A live trigger adds about 2 part files to
+# each day it touches, so a day folds every ~C/2 triggers. The cap C
+# balances that fold, amortized (one task rewrites the day: +0.5 s at
+# 0.5 MB, +3.3 s at 40 MB), against the ~1.6 ms per unfolded file a
+# read of the day pays; at one read per trigger the balance is
+# C = sqrt(fold_ms * 2 / 1.6), ~64 for a 40 MB (1M-row) day (4-vCPU
+# host, local mode).
 MATCHED_MAX_FILES = 64
 
 
@@ -407,7 +413,10 @@ def _refuse_batch_dirs(root: str) -> None:
 def read_matched_messages(spark: SparkSession, out_dir: str) -> DataFrame:
     """The side output's rows in their logical schema: :func:`read_table`
     over its day-bucketed store, or an empty ``MATCHED_SCHEMA`` frame
-    when it holds nothing."""
+    when it holds nothing. Lazy, like :func:`read_table`: an append
+    that folds a day deletes the files an earlier listing named, so
+    an action racing the writer retries on ``FileNotFound`` or reads
+    through :func:`read_table_snapshot`."""
     root = _matched_root(out_dir)
     _refuse_batch_dirs(root)
     bucketstore.recover(root, restore_only=True)
@@ -497,9 +506,10 @@ def prepare_trigger(
         int(span["min_ms"] // DAY_MS), int(span["max_ms"] // DAY_MS) + 1
     ))
     hint = None
-    if any(bucketstore._is_bucketed(d) for d in stores):
+    if days and any(bucketstore._is_bucketed(d) for d in stores):
         # window-end timestamps can cross into the next day; +1 day
-        # of slack keeps the hint a superset (extras are no-ops)
+        # of slack keeps the hint a superset (extras are no-ops). A
+        # batch without times has no days: the merges probe instead.
         hint = [0, *days, days[-1] + 1]
     store_b = max((_store_bytes(d) for d in stores), default=0)
     return Trigger(
@@ -683,8 +693,8 @@ def run_all(
             matched = agg.messages_matching_phrase(batch_df, phrases)
             bucketstore.append_into(
                 sess, _matched_root(out_dir),
-                _day_bucketize(matched, "message_time"), batch_id,
-                MATCHED_MAX_FILES, trig.days, stream_id=sid,
+                _day_bucketize(matched, "message_time"), batch_id, sid,
+                MATCHED_MAX_FILES, trig.days,
             )
             if merge_metrics is not None:
                 merge_metrics.append({

@@ -344,9 +344,9 @@ def _isolated_merge_floor(spark, src: str, out_dir: str) -> dict:
     merged by pipeline.merge_once, the SAME units the contended sink
     runs, with the batch and the shared emote-occurrence extraction
     materialized up front (in the contended sink they are computed
-    once per trigger and shared), so the measured span is agg +
-    totals-union + journaled additive merge — the identical code path
-    merge_breakdown times.
+    once per trigger and shared), so the measured span is the one
+    contributions + store aggregate and its journaled publish — the
+    identical code path merge_breakdown times.
 
     Caveat (by construction): the floor merges into the FINISHED
     stores, while the contended p50 averages mid-run merges against

@@ -6,22 +6,18 @@ crash at either publish rename replays to exact rows."""
 
 from __future__ import annotations
 
-import datetime as dt
 import json
 import os
 from collections import Counter
 
 import pytest
-from pyspark.sql import types as T
 
 from twitch_chat_analyser_spark import dims
 from twitch_chat_analyser_spark.operators import aggregations as agg
 from twitch_chat_analyser_spark.streaming import bucketstore
 from twitch_chat_analyser_spark.streaming import pipeline as sp
 
-from test_streaming import (
-    BATCH_1, BATCH_2, EPOCH, _mk_messages, _sorted_rows,
-)
+from test_streaming import BATCH_1, BATCH_2, _mk_messages, _msgs, _sorted_rows
 from test_streaming_single_pass import _actual_tables, _expected_tables
 
 
@@ -32,22 +28,6 @@ def _dirs(tmp_path):
 def _feed(spark, rows, src, out, ckpt):
     _mk_messages(spark, rows).coalesce(1).write.mode("append").parquet(src)
     sp.run_all(spark, src, out, ckpt)
-
-
-def _msgs(spark, rows):
-    """Messages whose offset may be None: a message without a time,
-    which the file source admits (it reads every column nullable)."""
-    return spark.createDataFrame(
-        [
-            (None if ms is None else EPOCH + dt.timedelta(milliseconds=ms),
-             ch, u, m)
-            for ms, ch, u, m in rows
-        ],
-        T.StructType([
-            T.StructField(f.name, f.dataType, True)
-            for f in sp.MESSAGE_SCHEMA
-        ]),
-    )
 
 
 def _matched_rows(spark, out):

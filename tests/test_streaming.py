@@ -9,6 +9,8 @@ from __future__ import annotations
 import datetime as dt
 import os
 
+from pyspark.sql import types as T
+
 from twitch_chat_analyser_spark.streaming import pipeline as sp
 
 EPOCH = dt.datetime(2024, 1, 1, 0, 0, 0, tzinfo=dt.timezone.utc)
@@ -21,6 +23,22 @@ def _mk_messages(spark, rows):
             for ms, ch, u, m in rows
         ],
         sp.MESSAGE_SCHEMA,
+    )
+
+
+def _msgs(spark, rows):
+    """Messages whose offset may be None: a message without a time,
+    which the file source admits (it reads every column nullable)."""
+    return spark.createDataFrame(
+        [
+            (None if ms is None else EPOCH + dt.timedelta(milliseconds=ms),
+             ch, u, m)
+            for ms, ch, u, m in rows
+        ],
+        T.StructType([
+            T.StructField(f.name, f.dataType, True)
+            for f in sp.MESSAGE_SCHEMA
+        ]),
     )
 
 
@@ -42,4 +60,8 @@ def _table(spark, out_dir, name):
 
 
 def _sorted_rows(df):
-    return sorted(tuple(r) for r in df.collect())
+    # NULLs sort last; rows without them keep their natural order
+    return sorted(
+        (tuple(r) for r in df.collect()),
+        key=lambda t: tuple((v is None, v) for v in t),
+    )

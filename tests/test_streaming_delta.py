@@ -35,9 +35,8 @@ def test_delta_replay_is_exactly_once(spark, dirs):
     msgs = _mk_messages(spark, BATCH_1).withColumn(
         "timestamp", F.unix_millis("ts")
     )
-    deltas = sp.with_total_rows(
-        agg.channel_stats(msgs), ["channel", "timestamp"], "messages"
-    )
+    stats = agg.channel_stats(msgs)
+    deltas = stats.unionByName(agg.totals(stats, ["channel"], "messages"))
     target = os.path.join(out, "channel_stats")
     applied = sorted(sp._applied_batches(target))
     sp.additive_merge(

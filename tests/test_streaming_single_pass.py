@@ -12,7 +12,9 @@ from twitch_chat_analyser_spark import dims
 from twitch_chat_analyser_spark.operators import aggregations as agg
 from twitch_chat_analyser_spark.streaming import pipeline as sp
 
-from test_streaming import BATCH_1, BATCH_2, _mk_messages, _sorted_rows, _table
+from test_streaming import (
+    BATCH_1, BATCH_2, _mk_messages, _msgs, _sorted_rows, _table,
+)
 
 
 @pytest.fixture()
@@ -21,7 +23,9 @@ def dirs(tmp_path):
 
 
 def _expected_tables(spark, rows):
-    msgs = _mk_messages(spark, rows).withColumn("timestamp", F.unix_millis("ts"))
+    """The batch (windowed) oracle of every store; a row whose offset
+    is None is a message without a time."""
+    msgs = _msgs(spark, rows).withColumn("timestamp", F.unix_millis("ts"))
     emotes = dims.emotes_df(spark)
     phrases = dims.phrases_df(spark)
     out = {}
@@ -41,22 +45,25 @@ def _expected_tables(spark, rows):
         ),
     ]:
         value_col = [c for c in stats.columns if c not in keys][0]
-        out[name] = _sorted_rows(sp.with_total_rows(stats, keys, value_col))
+        dim_keys = [k for k in keys if k != "timestamp"]
+        out[name] = _sorted_rows(
+            stats.unionByName(agg.totals(stats, dim_keys, value_col))
+        )
     out["messages_matching_phrase"] = _sorted_rows(
         agg.messages_matching_phrase(msgs, phrases)
     )
     return out
 
 
+FACT_TABLES = [
+    "channel_stats", "user_stats", "emote_stats", "user_emote_stats",
+    "phrase_stats",
+]
+
+
 def _actual_tables(spark, out_dir):
     got = {}
-    for name in [
-        "channel_stats",
-        "user_stats",
-        "emote_stats",
-        "user_emote_stats",
-        "phrase_stats",
-    ]:
+    for name in FACT_TABLES:
         got[name] = _sorted_rows(_table(spark, out_dir, name))
     matched = _table(spark, out_dir, "messages_matching_phrase")
     got["messages_matching_phrase"] = _sorted_rows(matched)
@@ -306,3 +313,132 @@ def test_store_journals_record_the_checkpoint_identity(spark, dirs):
         rec = _json.load(fh)
     assert rec["stream"] == qid
     assert rec["ids"] == [0]
+
+
+@pytest.mark.parametrize("layout", ["flat", "bucketed"])
+def test_multi_trigger_stores_hold_each_key_once(spark, dirs, monkeypatch, layout):
+    """The merge sums raw per-event contributions, so every write — the
+    first one into an empty store included — must aggregate them: one
+    row per key in every store after the first trigger and after a
+    multi-trigger run, equal to the batch oracle."""
+    import os
+
+    if layout == "bucketed":
+        monkeypatch.setattr(sp, "FLAT_STORE_MAX_BYTES", 0)
+    src, out, ckpt = dirs
+    metrics: list = []
+    fed = []
+    for files in ([BATCH_1], [BATCH_2, BATCH_1]):
+        for rows in files:
+            _mk_messages(spark, rows).coalesce(1).write.mode("append").parquet(
+                src
+            )
+            fed += rows
+        sp.run_all(spark, src, out, ckpt, max_files_per_trigger=1,
+                   merge_metrics=metrics)
+        for p in sp.default_pipelines(spark):
+            t = sp.read_table(spark, os.path.join(out, p.name))
+            assert t.count() == t.select(*p.keys).distinct().count(), p.name
+        assert _actual_tables(spark, out) == _expected_tables(spark, fed)
+    merges = [m for m in metrics if m.get("step") == "merge"]
+    assert len(merges) == 3 * len(FACT_TABLES)
+    assert {m["layout"] for m in merges} == {layout}
+
+
+def _plan_nodes(node) -> list[str]:
+    """One-line strings of an executed plan's nodes, cached relations
+    included (an aggregate hidden in a cached delta still counts); a
+    broadcast dimension's build side is not fact-row work and is not
+    walked."""
+    if node.nodeName() == "BroadcastExchange":
+        return []
+    kids = [
+        seq.apply(i)
+        for seq in (node.children(), node.innerChildren())
+        for i in range(seq.size())
+    ]
+    return [node.simpleString(25)] + [s for k in kids for s in _plan_nodes(k)]
+
+
+@pytest.mark.parametrize("writer", ["flat", "bucketed", "jdbc"])
+def test_each_fact_merge_is_one_shuffle(spark, dirs, monkeypatch, writer):
+    """Plan-shape guard: each table's merged frame — its trigger's
+    contributions summed with the existing store's rows (parquet), or
+    alone (the JDBC writer's rows) — is ONE aggregate, so its executed
+    plan, AQE off, holds exactly one hash exchange. A second
+    aggregate (a separate totals rollup, a pre-aggregated window
+    count) adds an exchange, or at least its partial + final pair."""
+    if writer == "bucketed":
+        monkeypatch.setattr(sp, "FLAT_STORE_MAX_BYTES", 0)
+    src, out, ckpt = dirs
+    _mk_messages(spark, BATCH_1).coalesce(1).write.mode("append").parquet(src)
+    sp.run_all(spark, src, out, ckpt)
+
+    plans = []
+    real = sp._summed
+
+    def spy(old, new, keys, value_col):
+        merged = real(old, new, keys, value_col)
+        plans.append(merged._jdf.queryExecution().executedPlan())
+        return merged
+
+    monkeypatch.setattr(sp, "_summed", spy)
+    pipelines = sp.default_pipelines(spark)
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        trig = sp.prepare_trigger(
+            _mk_messages(spark, BATCH_2), out, pipelines, dims.emotes_df(spark)
+        )
+        try:
+            for i, p in enumerate(pipelines):
+                layout = sp.merge_once(
+                    spark, out, p, trig, 100 + i,
+                    write=(lambda d, b: None) if writer == "jdbc" else None,
+                )
+                if writer != "jdbc":
+                    assert layout == writer
+        finally:
+            trig.release()
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    assert len(plans) == len(pipelines)
+    for p, plan in zip(pipelines, plans):
+        nodes = _plan_nodes(plan)
+        shuffles = [n for n in nodes if n.startswith("Exchange hashpartitioning")]
+        aggs = [n for n in nodes if n.startswith("HashAggregate")]
+        assert len(shuffles) == 1 and len(aggs) == 2, (p.name, plan.toString())
+        assert ("Union" in plan.toString()) == (writer != "jdbc"), p.name
+
+
+@pytest.mark.parametrize("writer", ["parquet", "jdbc"])
+def test_message_without_time_lands_in_no_window_and_no_total(
+    spark, tmp_path, writer
+):
+    """A message with a null ``ts`` has no window, so the windowed
+    oracle counts it nowhere — not in the ``timestamp = 0`` totals
+    either. Pinned on both writers, beside the batch's timed messages:
+    a window-end rewrite that stops filtering null times would count
+    it in the totals."""
+    from test_jdbc_sqlite import _read, _setup_db, _sink
+
+    src, out, ckpt = (str(tmp_path / d) for d in ("src", "out", "ckpt"))
+    rows = BATCH_1 + [(None, "click", "u9", "spark join fast merge")]
+    _msgs(spark, rows).coalesce(1).write.mode("append").parquet(src)
+    if writer == "jdbc":
+        db = str(tmp_path / "facts.db")
+        _setup_db(db)
+        sp.run_all(spark, src, out, ckpt,
+                   writer={t: _sink(db, t) for t in FACT_TABLES})
+        got = {t: _read(db, f"SELECT * FROM {t}") for t in FACT_TABLES}
+        got["messages_matching_phrase"] = _sorted_rows(
+            sp.read_matched_messages(spark, out)
+        )
+    else:
+        sp.run_all(spark, src, out, ckpt)
+        got = _actual_tables(spark, out)
+    want = _expected_tables(spark, rows)
+    assert got == want
+    # the timeless message is in the side output, and nowhere else
+    assert not any("u9" in r for t in FACT_TABLES for r in got[t])
+    assert any(r[0] is None for r in got["messages_matching_phrase"])

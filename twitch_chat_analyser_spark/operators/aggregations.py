@@ -18,10 +18,10 @@ replay (README.md:86-101).
 Output schema parity (SURVEY.md §1.3): ``timestamp`` is the window-END
 epoch-millis (AbstractStatsAggregation.java:77); counts are BIGINT.
 The reference's ``timestamp = 0`` all-time-total sentinel rows
-(ChannelStatsAggregation.java:44-50) are a derived view here —
-:func:`totals` — not sink-maintained state (design decision D1,
-SURVEY.md §7.0: recomputing totals is what a query engine is for, and
-it removes the additive-upsert replay hazard).
+(ChannelStatsAggregation.java:44-50) are a derived view for the batch
+queries (:func:`totals`, design decision D1) and sink-maintained state
+on the streaming write path, which sums :func:`contributions` — each
+event's share of its window AND of its total — into the stores.
 
 Scale notes (100 TB):
 - The groupBy shuffles on (window, dims) — ~uniform for channel/user
@@ -51,6 +51,32 @@ def window_end_ms(ts_col: str = "ts") -> Column:
     ``ts_col`` — same bucket math as the reference
     (AbstractStatsAggregation.java:70-71, window end at :77)."""
     return F.unix_millis(F.window(ts_col, WINDOW_DURATION)["end"]).alias("timestamp")
+
+
+def contributions(
+    rows: DataFrame, dims: list[str], value_col: str, weight: str | None = None
+) -> DataFrame:
+    """Each event row's additive contribution to its windowed count and
+    to its ``timestamp = 0`` total: two rows, ``(dims..., window end,
+    w)`` and ``(dims..., 0, w)``, where ``w`` is 1 or the ``weight``
+    column. ``groupBy(dims, timestamp).sum`` over them is exactly the
+    windowed stats plus :func:`totals` of them, in one aggregate — the
+    reference's double-row upsert (ChannelStatsAggregation.java:45-63).
+
+    A row with a null ``ts`` contributes nothing, to the total too:
+    ``window()`` filters it out (Spark's TimeWindowing rule), as the
+    windowed stats drop it.
+
+    -> dims..., timestamp, value_col
+    """
+    w = F.col(weight) if weight else F.lit(1)
+    return rows.select(
+        *dims,
+        F.explode(F.array(window_end_ms(), F.lit(0).cast("long"))).alias(
+            "timestamp"
+        ),
+        w.cast("long").alias(value_col),
+    )
 
 
 def _windowed_count(
@@ -137,45 +163,18 @@ def emote_occurrences(msgs: DataFrame, emotes: DataFrame) -> DataFrame:
     return tokens.join(F.broadcast(emotes.select("emote").distinct()), "emote")
 
 
-def emote_stats_from_occurrences(occ: DataFrame) -> DataFrame:
-    """Per-(channel, emote) counts from an already-extracted emote
-    stream. The reference derives BOTH emote aggregations from ONE
-    extracted stream (EmoteAnalyser.java:98-129); the single-pass
-    topology persists :func:`emote_occurrences` once per micro-batch
-    and feeds this and :func:`user_emote_stats_from_occurrences`, so
-    the explode + dim join run once per trigger, not twice.
-
-    -> channel, emote, timestamp, occurrences
-    """
-    return _windowed_count(
-        occ,
-        ["channel", "emote"],
-        F.count("*").alias("occurrences"),
-        ["occurrences"],
-    )
-
-
-def user_emote_stats_from_occurrences(occ: DataFrame) -> DataFrame:
-    """Per-(channel, emote, username) counts from an already-extracted
-    emote stream (see :func:`emote_stats_from_occurrences`).
-
-    -> channel, emote, username, timestamp, occurrences
-    """
-    return _windowed_count(
-        occ,
-        ["channel", "emote", "username"],
-        F.count("*").alias("occurrences"),
-        ["occurrences"],
-    )
-
-
 def emote_stats(msgs: DataFrame, emotes: DataFrame) -> DataFrame:
     """Per-(channel, emote) occurrence counts per window
     (EmoteStatsAggregation.java:28-32).
 
     -> channel, emote, timestamp, occurrences
     """
-    return emote_stats_from_occurrences(emote_occurrences(msgs, emotes))
+    return _windowed_count(
+        emote_occurrences(msgs, emotes),
+        ["channel", "emote"],
+        F.count("*").alias("occurrences"),
+        ["occurrences"],
+    )
 
 
 def user_emote_stats(msgs: DataFrame, emotes: DataFrame) -> DataFrame:
@@ -184,7 +183,12 @@ def user_emote_stats(msgs: DataFrame, emotes: DataFrame) -> DataFrame:
 
     -> channel, emote, username, timestamp, occurrences
     """
-    return user_emote_stats_from_occurrences(emote_occurrences(msgs, emotes))
+    return _windowed_count(
+        emote_occurrences(msgs, emotes),
+        ["channel", "emote", "username"],
+        F.count("*").alias("occurrences"),
+        ["occurrences"],
+    )
 
 
 def phrase_matches(msgs: DataFrame, phrases: DataFrame) -> DataFrame:

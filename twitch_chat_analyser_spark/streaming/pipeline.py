@@ -19,10 +19,11 @@ Reference mapping:
   its old bucket (unbounded lateness, no watermark).
 - double-row additive upsert + XA two-phase commit
   (ChannelStatsAggregation.java:45-63, XAPostgresSink.java:89-175) ->
-  per-batch deltas plus their ``timestamp = 0`` totals, applied by a
-  per-table writer that makes replays no-ops: the journaled parquet
-  :func:`additive_merge` by default, or the ledger-guarded
-  ``jdbc.JdbcSink``.
+  every event's contributions to its window and to its ``timestamp =
+  0`` total, summed in ONE aggregate per table per trigger and applied
+  by a per-table writer that makes replays no-ops: the journaled
+  parquet :func:`additive_merge` (which sums them with the store's
+  rows) by default, or the ledger-guarded ``jdbc.JdbcSink``.
 
 End-to-end latency: Spark commits sink + offsets per micro-batch, so the
 worst case is one trigger interval — strictly better than the
@@ -51,6 +52,7 @@ import os
 import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
+from operator import attrgetter
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -84,35 +86,50 @@ def read_message_stream(
 
 @dataclass
 class Pipeline:
-    """One fact-table pipeline: a pure transform + its merge keys."""
+    """One fact-table pipeline: the event rows it counts in a trigger,
+    their dimension columns, and the value column the counts land in
+    (the sum of the ``weight`` column, or one per row)."""
 
     name: str
-    transform: callable  # messages DataFrame -> stats DataFrame
-    keys: list[str]
+    rows: callable  # Trigger -> event rows carrying ts + dim_cols
+    dim_cols: list[str]
+    value: str
+    weight: str | None = None
+
+    @property
+    def keys(self) -> list[str]:
+        return [*self.dim_cols, "timestamp"]
+
+    def contributions(self, trig: Trigger) -> DataFrame:
+        return agg.contributions(
+            self.rows(trig), self.dim_cols, self.value, self.weight
+        )
 
 
 def default_pipelines(spark: SparkSession) -> list[Pipeline]:
-    emotes = dims.emotes_df(spark)
     phrases = dims.phrases_df(spark)
+    messages, occurrences = attrgetter("batch"), attrgetter("occurrences")
+
+    def matches(t: Trigger) -> DataFrame:
+        return agg.phrase_matches(t.batch, phrases).withColumnRenamed(
+            "name", "phrase_name"
+        )
+
     return [
-        Pipeline("channel_stats", agg.channel_stats, ["channel", "timestamp"]),
+        Pipeline("channel_stats", messages, ["channel"], "messages"),
+        Pipeline("user_stats", messages, ["channel", "username"], "messages"),
         Pipeline(
-            "user_stats", agg.user_stats, ["channel", "username", "timestamp"]
-        ),
-        Pipeline(
-            "emote_stats",
-            lambda m: agg.emote_stats(m, emotes),
-            ["channel", "emote", "timestamp"],
+            "emote_stats", occurrences, ["channel", "emote"], "occurrences"
         ),
         Pipeline(
             "user_emote_stats",
-            lambda m: agg.user_emote_stats(m, emotes),
-            ["channel", "emote", "username", "timestamp"],
+            occurrences,
+            ["channel", "emote", "username"],
+            "occurrences",
         ),
         Pipeline(
-            "phrase_stats",
-            lambda m: agg.phrase_stats(m, phrases),
-            ["channel", "phrase_name", "timestamp"],
+            "phrase_stats", matches, ["channel", "phrase_name"], "matches",
+            weight="matches",
         ),
     ]
 
@@ -200,6 +217,20 @@ def trigger_shuffle_partitions(
     )
 
 
+def _summed(
+    old: DataFrame | None, new: DataFrame, keys: list[str], value_col: str
+) -> DataFrame:
+    """``old`` (store rows, or None) plus ``new`` additive rows, summed
+    per key in one aggregate: partial sums run map-side, so the plan
+    has one shuffle. Union + re-aggregate is the additive algebra's
+    full-outer coalesce-add without the join's two sort-shuffles."""
+    cols = [*keys, value_col]
+    rows = new.select(*cols)
+    if old is not None:
+        rows = old.select(*cols).unionByName(rows)
+    return rows.groupBy(*keys).agg(F.sum(value_col).alias(value_col))
+
+
 def additive_merge(
     spark: SparkSession,
     path: str,
@@ -227,14 +258,20 @@ def additive_merge(
       per-partition analogue of the all-or-nothing the reference buys
       with XA 2PC (XAPostgresSink.java:122-175).
 
+    ``deltas`` are additive ``(keys..., value_col)`` rows, any number
+    per key (the fact pipelines pass raw :func:`agg.contributions`):
+    every branch, the first write into an empty store included, sums
+    them with the store's rows in one ``groupBy(keys).sum``
+    (:func:`_summed`).
+
     Per-bucket journaling REQUIRES the delta to be a pure function of
-    the batch (true for the fact pipelines: transform(batch) +
-    with_total_rows): a replay then recomputes identical rows and
-    already-applied buckets skip exactly. A caller whose delta depends
-    on OTHER store state (markov's boundary join) must pass a
-    single-bucket ``bucketize`` so the journal stays all-or-nothing —
-    a replayed state-dependent delta can differ from the original and
-    would otherwise leak rows into never-journaled buckets.
+    the batch (true for the fact pipelines' contributions): a replay
+    then recomputes identical rows and already-applied buckets skip
+    exactly. A caller whose delta depends on OTHER store state
+    (markov's boundary join) must pass a single-bucket ``bucketize``
+    so the journal stays all-or-nothing — a replayed state-dependent
+    delta can differ from the original and would otherwise leak rows
+    into never-journaled buckets.
 
     ADAPTIVE LAYOUT: a store is flat or bucketed, never both. While it
     is flat and under ``FLAT_STORE_MAX_BYTES``, the merge keeps the
@@ -283,49 +320,25 @@ def additive_merge(
                 return "flat"
             # no cache: the whole flat merge is ONE action (the publish
             # write), so caching deltas would cost a memory write with
-            # zero reuse (round 8 — it was costing every merge of every
-            # trigger a cache population for nothing)
-            if os.path.isdir(path):
-                # additive algebra: union + re-aggregate ≡ the textbook
-                # full-outer coalesce-add, at ONE hash-agg shuffle
-                # instead of two sort-shuffles + a sort-merge join
-                # (full outer cannot broadcast) — round 8, measured
-                # ~25% off the heaviest fact-table merge
-                cols = [*keys, value_col]
-                merged = (
-                    spark.read.parquet(path)
-                    .select(*cols)
-                    .unionByName(deltas.select(*cols))
-                    .groupBy(*keys)
-                    .agg(F.sum(value_col).alias(value_col))
-                )
-            else:
-                merged = deltas
+            # zero reuse
             bucketstore.write_store(
-                path, merged, bucketstore._pruned(applied | {batch_id}),
+                path,
+                _summed(
+                    bucketstore.read_store(spark, path), deltas, keys,
+                    value_col,
+                ),
+                bucketstore._pruned(applied | {batch_id}),
                 stream_id or recorded,
             )
             return "flat"
 
-    def merge_fn(old: DataFrame | None, delta: DataFrame) -> DataFrame:
-        if old is None:
-            return delta
-        # same union + re-aggregate as the flat path (one shuffle, no
-        # sort-merge full-outer join); grouping includes the bucket so
-        # the partitioned write needs no extra exchange
-        jk = keys + ["bucket"]
-        cols = [*jk, value_col]
-        return (
-            old.select(*cols)
-            .unionByName(delta.select(*cols))
-            .groupBy(*jk)
-            .agg(F.sum(value_col).alias(value_col))
-        )
-
     if bucketize is None and "timestamp" in keys:
         bucketize = _day_bucketize
+    # grouping includes the bucket, so the partitioned write needs no
+    # extra exchange
     bucketstore.merge_into(
-        spark, path, deltas, keys, merge_fn,
+        spark, path, deltas, keys,
+        lambda old, delta: _summed(old, delta, [*keys, "bucket"], value_col),
         batch_id=batch_id, bucketize=bucketize,
         touched_hint=touched_hint, stream_id=stream_id,
     )
@@ -425,21 +438,6 @@ def read_matched_messages(spark: SparkSession, out_dir: str) -> DataFrame:
     return read_table(spark, root)
 
 
-def with_total_rows(stats: DataFrame, keys: list[str], value_col: str) -> DataFrame:
-    """The reference's double-row upsert (A12): every stats row also
-    feeds a ``timestamp = 0`` running-total row for its dimension key
-    (ChannelStatsAggregation.java:45-63). Emits delta rows + their
-    timestamp-0 rollup; the additive sink accumulates both."""
-    dim_keys = [k for k in keys if k != "timestamp"]
-    totals = (
-        stats.groupBy(*dim_keys)
-        .agg(F.sum(value_col).alias(value_col))
-        .withColumn("timestamp", F.lit(0).cast("long"))
-        .select(*stats.columns)
-    )
-    return stats.unionByName(totals)
-
-
 @dataclass
 class Trigger:
     """One non-empty micro-batch, ready for its per-table merges
@@ -451,15 +449,6 @@ class Trigger:
     hint: list[int] | None  # day buckets a merge may touch
     shuffle_partitions: int
     occurrences: DataFrame  # the shared emote extraction, persisted
-
-    def build(self, pipeline: Pipeline) -> DataFrame:
-        """The pipeline's stats for this batch; both emote tables derive
-        from the one shared extraction."""
-        if pipeline.name == "emote_stats":
-            return agg.emote_stats_from_occurrences(self.occurrences)
-        if pipeline.name == "user_emote_stats":
-            return agg.user_emote_stats_from_occurrences(self.occurrences)
-        return pipeline.transform(self.batch)
 
     def release(self) -> None:
         self.occurrences.unpersist()
@@ -531,43 +520,33 @@ def merge_once(
     stream_id: str | None = None,
     write=None,
 ) -> str:
-    """ONE table's per-trigger work: build the delta, append the
-    sentinel totals, and apply them exactly once — through ``write``
-    (a ``(deltas, batch_id)`` callable such as ``jdbc.JdbcSink``) or,
-    by default, the journaled parquet :func:`additive_merge`. Returns
-    the parquet layout used, or the writer's class name.
+    """ONE table's per-trigger work: its contributions to each window
+    and to the ``timestamp = 0`` totals, summed in one aggregate and
+    applied exactly once — through ``write`` (a ``(deltas, batch_id)``
+    callable such as ``jdbc.JdbcSink``, handed the summed rows) or, by
+    default, the journaled parquet :func:`additive_merge`, which sums
+    them together with the store's rows. Returns the parquet layout
+    used, or the writer's class name.
 
     This is the unit the streaming sink runs CONCURRENTLY per table
     and the bench's isolated-floor probe runs SERIALLY — one
     implementation, so the artifact's isolated-vs-contended comparison
     measures the same code path on both sides (review r11).
-
-    The stats persist() is deliberate: with_total_rows references the
-    aggregation in both union branches, and un-cached that evaluates it
-    twice; lazy persist (not an eager localCheckpoint) keeps the whole
-    merge ONE Spark job (round 8, trigger-budget headroom).
     """
-    stats = trig.build(pipeline).persist()
-    try:
-        value_col = [
-            c for c in stats.columns if c not in pipeline.keys
-        ][0]
-        deltas = with_total_rows(stats, pipeline.keys, value_col)
-        if write is not None:
-            write(deltas, batch_id)
-            return type(write).__name__
-        return additive_merge(
-            spark,
-            os.path.join(out_dir, pipeline.name),
-            deltas,
-            pipeline.keys,
-            value_col,
-            batch_id,
-            touched_hint=trig.hint,
-            stream_id=stream_id,
-        )
-    finally:
-        stats.unpersist()
+    rows = pipeline.contributions(trig)
+    if write is not None:
+        write(_summed(None, rows, pipeline.keys, pipeline.value), batch_id)
+        return type(write).__name__
+    return additive_merge(
+        spark,
+        os.path.join(out_dir, pipeline.name),
+        rows,
+        pipeline.keys,
+        pipeline.value,
+        batch_id,
+        touched_hint=trig.hint,
+        stream_id=stream_id,
+    )
 
 
 def run_all(
@@ -588,9 +567,9 @@ def run_all(
 
     Each micro-batch is persisted once and every fact transform runs
     against the cached batch (batch-mode duality D4), so per trigger
-    the source is scanned exactly once. The per-batch deltas, sentinel
-    ``timestamp=0`` totals included, land through a replay-guarded
-    additive writer, so a replayed batch is a no-op on every table and
+    the source is scanned exactly once. Each table's contributions,
+    sentinel ``timestamp=0`` totals included, are summed in one
+    aggregate and land through a replay-guarded additive writer, so a replayed batch is a no-op on every table and
     the streaming plan itself is stateless — state bounding identical
     to the reference's flush-and-clear + DB accumulation
     (AbstractStatsAggregation.java:108-112).

@@ -1,7 +1,7 @@
 """The matched-message side output as a day-bucketed append log
 (bucketstore.append_into): each trigger's rows land once per
 (checkpoint, batch id), a day bucket that reached
-``MATCHED_MAX_FILES`` part files is folded by the writer itself, and a
+``bucketstore.APPEND_MAX_FILES`` part files is folded by the writer itself, and a
 crash at either publish rename replays to exact rows."""
 
 from __future__ import annotations
@@ -51,10 +51,10 @@ def test_fold_at_max_files_keeps_rows_and_carries_the_journal(
     spark, tmp_path, monkeypatch
 ):
     """Every trigger adds one part file to the day (one input file, one
-    task); the append that finds MATCHED_MAX_FILES of them rewrites the
+    task); the append that finds APPEND_MAX_FILES of them rewrites the
     day into one file set beside its own new file, with every row and
     the journal carried over."""
-    monkeypatch.setattr(sp, "MATCHED_MAX_FILES", 3)
+    monkeypatch.setattr(bucketstore, "APPEND_MAX_FILES", 3)
     src, out, ckpt = _dirs(tmp_path)
     counts = []
     for rows in (BATCH_1, BATCH_2, BATCH_1, BATCH_2):
@@ -75,8 +75,8 @@ def test_fold_at_max_files_keeps_rows_and_carries_the_journal(
 def test_null_time_bucket_is_folded_too(spark, tmp_path, monkeypatch):
     """Matched messages without a timestamp land in the NULL_BUCKET
     dir, which no event day names; the writer folds it at
-    MATCHED_MAX_FILES like any day, so its file count stays bounded."""
-    monkeypatch.setattr(sp, "MATCHED_MAX_FILES", 3)
+    APPEND_MAX_FILES like any day, so its file count stays bounded."""
+    monkeypatch.setattr(bucketstore, "APPEND_MAX_FILES", 3)
     src, out, ckpt = _dirs(tmp_path)
     null_dir = f"bucket={bucketstore.NULL_BUCKET}"
     fed, counts = [], []
@@ -123,7 +123,7 @@ def test_replay_after_a_fold_is_a_no_op(spark, tmp_path, monkeypatch):
     its checkpoint commit: the folded dir's journal already holds the
     batch, so every table and the side output stay exactly as they
     were, part files included."""
-    monkeypatch.setattr(sp, "MATCHED_MAX_FILES", 2)
+    monkeypatch.setattr(bucketstore, "APPEND_MAX_FILES", 2)
     src, out, ckpt = _dirs(tmp_path)
     for rows in (BATCH_1, BATCH_2, BATCH_1):
         _feed(spark, rows, src, out, ckpt)
@@ -193,9 +193,9 @@ def test_fresh_checkpoint_writing_only_a_new_day_is_refused(spark, tmp_path):
     def rows(day):
         return spark.createDataFrame([(day, "m")], "bucket int, text string")
 
-    bucketstore.append_into(spark, store, rows(1), 0, "a", 8, [1])
+    bucketstore.append_into(spark, store, rows(1), 0, "a", [1])
     with pytest.raises(RuntimeError, match="checkpoint"):
-        bucketstore.append_into(spark, store, rows(2), 0, "b", 8, [2])
+        bucketstore.append_into(spark, store, rows(2), 0, "b", [2])
     assert os.listdir(store) == ["bucket=1"]
 
 

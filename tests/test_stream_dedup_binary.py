@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import functions as F
 
 from twitch_chat_analyser_spark.operators import multimodal as mm
@@ -192,8 +193,7 @@ def test_minhash_corpus_dedup_near_dups_across_batches(spark, tmp_path):
     sigs = spark.read.parquet(os.path.join(out, "signatures"))
     assert sorted({r["doc_id"] for r in sigs.collect()}) == [1, 3, 11]
 
-    # replay with no new data: nothing changes (batch=N overwrite +
-    # own-partition exclusion)
+    # replay with no new data: nothing changes
     sd.start_minhash_corpus_dedup(
         spark, src, out, ckpt, min_agree=5, max_files_per_trigger=1
     ).awaitTermination()
@@ -307,31 +307,6 @@ def test_corpus_prep_stream_metrics_are_observed_not_counted(spark, tmp_path):
     # and the metrics row still landed
     m = spark.read.parquet(os.path.join(out, "metrics")).collect()
     assert len(m) == 1 and m[0]["docs_in"] == 2
-
-
-def test_dedup_history_read_excludes_own_batch_on_replay(spark, tmp_path):
-    """A replayed batch must not anti-join against its OWN previously
-    written fingerprints (that would empty the survivor set and
-    overwrite committed data with nothing)."""
-    import os
-
-    from twitch_chat_analyser_spark.streaming import dedup as sd
-
-    fp_path = str(tmp_path / "fps")
-    batch = spark.createDataFrame(
-        [(1, "doc one text", "en", "s", 12), (2, "doc two text", "en", "s", 12)],
-        sd.DOC_SCHEMA,
-    )
-    first = sd._dedup_against_history(spark, batch, fp_path, batch_id=0)
-    first.select("fp", "doc_id").write.mode("overwrite").parquet(
-        os.path.join(fp_path, "batch=0")
-    )
-    # replay of batch 0: own fps are on disk but must be excluded
-    replay = sd._dedup_against_history(spark, batch, fp_path, batch_id=0)
-    assert sorted(r["doc_id"] for r in replay.collect()) == [1, 2]
-    # a LATER batch with the same content is deduped by history
-    later = sd._dedup_against_history(spark, batch, fp_path, batch_id=1)
-    assert later.count() == 0
 
 
 def test_bloom_corpus_dedup_across_batches_and_replay(spark, tmp_path):
@@ -497,8 +472,7 @@ def test_phash_media_dedup_stream(spark, tmp_path):
     assert "payload" not in hashes.columns
     assert set(r["modality"] for r in hashes.collect()) == {"visual", "audio"}
 
-    # replay with no new files: batch=N overwrite + own-partition
-    # exclusion keep the output byte-identical
+    # replay with no new files: the output is unchanged
     sd.start_phash_media_dedup(
         spark, str(src), out, ckpt
     ).awaitTermination()
@@ -565,7 +539,7 @@ def test_paragraph_dedup_stream_matches_batch_scrub(spark, tmp_path):
     # store holds hashes only — no paragraph text, one row per DISTINCT
     # first-seen paragraph
     fps = spark.read.parquet(os.path.join(out, "para_fps"))
-    assert set(fps.columns) == {"h", "batch"}
+    assert set(fps.columns) == {"h", "batch_id", "bucket"}
     n_fp = fps.count()
     assert n_fp == 5  # alpha/subscribe/copyright/beta/gamma
 
@@ -579,3 +553,299 @@ def test_paragraph_dedup_stream_matches_batch_scrub(spark, tmp_path):
     }
     assert again == got
     assert spark.read.parquet(os.path.join(out, "para_fps")).count() == n_fp
+
+
+# --------------------------------------------------------------------------
+# The corpus-ingest stores and the IVF index as journaled append logs
+# --------------------------------------------------------------------------
+
+_GOOD = [
+    "the cat and the dog of a friend to a mouse and the bird",
+    "a tale of the sea and a ship to the north and a star",
+    "the king of the hill and the queen of a castle by the lake",
+    "a song for the road and the rain in a town of the west",
+    "the book on the shelf and the lamp by a door to the hall",
+    "a walk in the park with the kids and a kite in the wind",
+]
+
+
+def _write_docs(spark, path, rows):
+    spark.createDataFrame(rows, dd.DOC_SCHEMA).coalesce(1).write.mode(
+        "append"
+    ).parquet(path)
+
+
+def _feed_docs(spark, tmp_path, sf_dir):
+    first, second = str(tmp_path / "docs1"), str(tmp_path / "docs2")
+    _write_docs(spark, first, [(i, t, "en", "s", len(t))
+                               for i, t in enumerate(_GOOD[:3], 1)])
+    _write_docs(spark, second, [(10, _GOOD[0], "en", "s", 1),
+                                (11, _GOOD[3], "en", "s", 1)])
+    return first, second
+
+
+def _feed_media(spark, tmp_path, sf_dir):
+    import random
+
+    first, second = tmp_path / "media1", tmp_path / "media2"
+    rnd = random.Random(7)
+    for d, ids in ((first, (1, 2)), (second, (3, 4))):
+        d.mkdir()
+        for i in ids:
+            (d / f"img_{i}.png").write_bytes(rnd.randbytes(64))
+    return str(first), str(second)
+
+
+def _feed_embeddings(spark, tmp_path, sf_dir):
+    from twitch_chat_analyser_spark import ingest
+    from twitch_chat_analyser_spark.streaming import ann
+
+    emb = ingest.load(spark, sf_dir, "embeddings")
+    ann.write_codebook(spark, emb, str(tmp_path / "out"), k=8)
+    first, second = str(tmp_path / "emb1"), str(tmp_path / "emb2")
+    emb.filter("vec_id % 2 = 0").coalesce(1).write.parquet(first)
+    emb.filter("vec_id % 2 = 1").coalesce(1).write.parquet(second)
+    return first, second
+
+
+def _append_logs():
+    """{log: (start(spark, src, out, ckpt), feed, family)} over every
+    streaming append log in streaming/dedup.py and streaming/ann.py."""
+    import functools
+
+    from twitch_chat_analyser_spark.streaming import ann
+
+    return {
+        "corpus_dedup": (dd.start_incremental_corpus_dedup, _feed_docs,
+                         "corpus"),
+        "corpus_prep": (dd.start_corpus_prep_stream, _feed_docs, "corpus"),
+        "bloom": (dd.start_bloom_corpus_dedup, _feed_docs, "corpus"),
+        "paragraph": (dd.start_paragraph_dedup_stream, _feed_docs,
+                      "corpus"),
+        "minhash": (dd.start_minhash_corpus_dedup, _feed_docs, "corpus"),
+        "phash": (functools.partial(dd.start_phash_media_dedup, fake=True),
+                  _feed_media, "media"),
+        "ivf": (ann.start_ivf_index_stream, _feed_embeddings, "index"),
+    }
+
+
+@pytest.mark.parametrize("log", sorted(_append_logs()))
+def test_fresh_checkpoint_is_refused_and_the_log_keeps_its_rows(
+    spark, sf_dir, tmp_path, log
+):
+    """A second stream started with a fresh checkpoint against an
+    existing ``out_dir`` restarts its batch ids at 0. It must be
+    refused before it publishes anything, not overwrite or drop the
+    first stream's rows."""
+    import os
+
+    start, feed, family = _append_logs()[log]
+    out = str(tmp_path / "out")
+    first, second = feed(spark, tmp_path, sf_dir)
+    start(spark, first, out, str(tmp_path / "ckpt1")).awaitTermination()
+
+    def rows():
+        df = spark.read.parquet(os.path.join(out, family))
+        return sorted(map(repr, df.collect()))
+
+    before = rows()
+    assert before
+    with pytest.raises(Exception, match="checkpoint"):
+        start(spark, second, out, str(tmp_path / "ckpt2")).awaitTermination()
+    assert rows() == before
+
+
+@pytest.mark.parametrize(
+    "start", [dd.start_incremental_corpus_dedup, dd.start_bloom_corpus_dedup],
+    ids=["exact", "bloom"],
+)
+def test_exact_fingerprint_streams_match_exact_dedup_on_null_text(
+    spark, tmp_path, start
+):
+    """NULL, empty and whitespace-only texts dedup across micro-batches
+    as the batch ``exact_dedup`` groups them over the union: the NULL
+    texts are one group, the blank ones another."""
+    import os
+
+    from twitch_chat_analyser_spark.operators.dedup import exact_dedup
+
+    src, out = str(tmp_path / "docs"), str(tmp_path / "out")
+    rows1 = [(1, None, "en", "s", 0), (2, None, "en", "s", 0),
+             (3, "  ", "en", "s", 2), (4, "", "en", "s", 0),
+             (5, "real text", "en", "s", 9)]
+    rows2 = [(6, None, "en", "s", 0), (7, "   ", "en", "s", 3),
+             (8, "Real  Text", "en", "s", 10), (9, "other", "en", "s", 5)]
+    for rows in (rows1, rows2):
+        _write_docs(spark, src, rows)
+        start(spark, src, out, str(tmp_path / "ckpt"),
+              max_files_per_trigger=1).awaitTermination()
+    got = sorted(
+        r["doc_id"]
+        for r in spark.read.parquet(os.path.join(out, "corpus")).collect()
+    )
+    want = sorted(
+        r["doc_id"] for r in exact_dedup(
+            spark.createDataFrame(rows1 + rows2, dd.DOC_SCHEMA)
+        ).collect()
+    )
+    assert got == want == [1, 3, 5, 9]
+
+
+def test_history_read_keeps_earlier_batches_only(spark, tmp_path):
+    """A replayed batch must not probe its OWN rows, which a crash
+    between its publishes can leave in a log: that would dedup the
+    batch against itself. A later batch must see them. End to end:
+    test_crash_at_history_publish_replays_to_exact_rows."""
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    fps = spark.createDataFrame([("a", 1), ("b", 2)], "fp string, doc_id long")
+    for batch_id in (0, 1):
+        dd._sink(spark, out, ckpt, batch_id, {
+            "fingerprints": fps.filter(f"doc_id = {batch_id + 1}"),
+        })
+
+    def seen(batch_id):
+        rows = dd._history(spark, out, "fingerprints", batch_id).collect()
+        return sorted(r["doc_id"] for r in rows)
+
+    assert seen(1) == [1]  # the replay of batch 1 sees batch 0 only
+    assert seen(2) == [1, 2]
+    assert dd._history(spark, str(tmp_path / "none"), "fingerprints", 0) is None
+
+
+def _batch_survivors(spark, rows, quality_gate):
+    """The batch operator over the union: (quality gate, then)
+    ``exact_dedup``'s kept doc ids."""
+    from twitch_chat_analyser_spark.operators import textops
+    from twitch_chat_analyser_spark.operators.dedup import exact_dedup
+
+    docs = spark.createDataFrame(rows, dd.DOC_SCHEMA)
+    if quality_gate:
+        q = textops.quality_score(docs).filter(F.col("quality_score") >= 0.2)
+        docs = docs.join(q.select("doc_id"), "doc_id")
+    return sorted(r["doc_id"] for r in exact_dedup(docs).collect())
+
+
+@pytest.mark.parametrize("crash_at", [1, 2])
+@pytest.mark.parametrize("log", ["corpus_dedup", "corpus_prep"])
+def test_crash_at_history_publish_replays_to_exact_rows(
+    spark, tmp_path, monkeypatch, log, crash_at
+):
+    """Batch 1 crashes at its ``crash_at``-th fingerprint-bucket
+    publish, after its corpus publish, so with ``crash_at=2`` one
+    bucket of its own fingerprints is already live. The restart
+    replays the batch, then runs batch 2, which repeats batch 1's
+    content. The replay's history read must skip batch 1's own
+    fingerprints, or the batch would dedup against itself; batch 2's
+    must see them. At the end the corpus equals the batch operator
+    over the union, every survivor's fingerprint is stored once, and
+    corpus_prep's metrics count every survivor."""
+    import os
+
+    from twitch_chat_analyser_spark.streaming import bucketstore
+
+    start, _, _ = _append_logs()[log]
+    src, out, ckpt = (str(tmp_path / d) for d in ("docs", "out", "ckpt"))
+    fps = os.path.join(out, "fingerprints")
+    doc = lambda i, t: (i, t, "en", "s", len(t))  # noqa: E731
+    batches = [
+        [doc(1, _GOOD[0]), doc(2, _GOOD[1]), doc(3, _GOOD[0].upper())],
+        [doc(10, _GOOD[2]), doc(11, _GOOD[3]), doc(12, _GOOD[4]),
+         doc(13, "  " + _GOOD[1])],
+        [doc(20, _GOOD[3]), doc(21, _GOOD[5])],
+    ]
+    gate = log == "corpus_prep"
+    want2 = _batch_survivors(spark, batches[0] + batches[1], gate)
+    want3 = _batch_survivors(spark, batches[0] + batches[1] + batches[2], gate)
+    assert 20 not in want3
+
+    def run():
+        start(spark, src, out, ckpt,
+              max_files_per_trigger=1).awaitTermination()
+
+    def stored(family):
+        df = spark.read.parquet(os.path.join(out, family))
+        return sorted(r["doc_id"] for r in df.collect())
+
+    _write_docs(spark, src, batches[0])
+    run()
+    real_rename = os.rename
+    publishes = []
+
+    def crashing_rename(a, b):
+        if ".tmp-" in str(a) and str(b).startswith(fps + os.sep):
+            publishes.append(b)
+            if len(publishes) == crash_at:
+                raise OSError("injected crash at publish")
+        return real_rename(a, b)
+
+    monkeypatch.setattr(bucketstore.os, "rename", crashing_rename)
+    _write_docs(spark, src, batches[1])
+    with pytest.raises(Exception):
+        run()
+    monkeypatch.setattr(bucketstore.os, "rename", real_rename)
+    assert len(publishes) == crash_at
+    assert stored("corpus") == want2  # the corpus publish happened
+    own = spark.read.parquet(fps).filter("batch_id = 1").count()
+    assert (own > 0) == (crash_at == 2)
+
+    _write_docs(spark, src, batches[2])
+    run()
+    assert stored("corpus") == stored("fingerprints") == want3
+    if gate:
+        m = spark.read.parquet(os.path.join(out, "metrics")).collect()
+        assert sorted(r["batch_id"] for r in m) == [0, 1, 2]
+        assert sum(r["docs_new_unique"] for r in m) == len(want3)
+
+
+def test_corpus_history_stays_bounded_over_100_triggers(
+    spark, tmp_path, monkeypatch
+):
+    """100 one-document triggers with the fold cap at 4: every bucket of
+    the corpus and fingerprint logs holds at most 4 part files, though
+    some received more than 4 appends, and the corpus equals
+    ``exact_dedup`` over the union."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from twitch_chat_analyser_spark.operators.dedup import exact_dedup
+    from twitch_chat_analyser_spark.streaming import bucketstore
+
+    monkeypatch.setattr(bucketstore, "APPEND_MAX_FILES", 4)
+    src, out = tmp_path / "docs", str(tmp_path / "out")
+    src.mkdir()
+    rows = []
+    for i in range(100):
+        text = f"Doc  {i - 3}" if i % 7 == 3 else f"doc {i}"
+        text = None if i % 17 == 5 else text
+        rows.append((i, text, "en", "s", 0))
+        f = src / f"part-{i:03d}.parquet"
+        pq.write_table(pa.table({
+            "doc_id": pa.array([i], pa.int64()),
+            "text": pa.array([text], pa.string()),
+            "lang": ["en"], "source": ["s"],
+            "n_chars": pa.array([0], pa.int64()),
+        }), f)
+        os.utime(f, (1_700_000_000 + i, 1_700_000_000 + i))
+    dd.start_incremental_corpus_dedup(
+        spark, str(src), out, str(tmp_path / "ckpt"), max_files_per_trigger=1
+    ).awaitTermination()
+
+    for family in ("corpus", "fingerprints"):
+        root = os.path.join(out, family)
+        counts = {
+            e: len(bucketstore._flat_files(os.path.join(root, e)))
+            for e in os.listdir(root)
+        }
+        assert counts and max(counts.values()) <= 4, (family, counts)
+        # one row per append: a bucket holding more than 4 was folded
+        appends = spark.read.parquet(root).groupBy("bucket").count()
+        assert max(r["count"] for r in appends.collect()) > 4
+    corpus = spark.read.parquet(os.path.join(out, "corpus")).collect()
+    got = sorted(r["doc_id"] for r in corpus)
+    want = sorted(
+        r["doc_id"]
+        for r in exact_dedup(spark.createDataFrame(rows, dd.DOC_SCHEMA)).collect()
+    )
+    assert got == want

@@ -57,10 +57,10 @@ def test_probe_scans_only_its_centroid_partitions(spark, tmp_path):
     emb.coalesce(1).write.parquet(src)
     ann.start_ivf_index_stream(spark, src, out, ckpt).awaitTermination()
 
-    # the partition filter must reach the scan: filtering one centroid
-    # reads a strict subset of the index rows
+    # the partition filter must reach the scan: filtering one centroid's
+    # bucket reads a strict subset of the index rows
     index = spark.read.parquet(os.path.join(out, "index"))
-    one = index.filter("centroid_id = 0")
+    one = index.filter("bucket = 0")
     plan = one._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "centroid_id" in plan
+    assert "PartitionFilters: [isnotnull(bucket" in plan
     assert 0 < one.count() < index.count()

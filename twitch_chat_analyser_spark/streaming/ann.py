@@ -9,11 +9,9 @@ appended into a centroid-partitioned store — so a probe reads only its
 centroid's partition (partition-pruned scan), and index growth costs
 one broadcast join per batch, never a corpus rescan.
 
-Exactly-once: every batch writes into its own ``batch=<id>``
-subdirectory with overwrite, so replays rewrite the same files. The
-partition layout is ``index/batch=N/centroid_id=M/`` — both path
-segments become discovered partition columns, and a probe's
-``centroid_id = M`` filter prunes to one directory per batch.
+Exactly-once: a journaled append log (``bucketstore.append_into``) at
+``index/bucket=<centroid id>/``: replays are no-ops, a fresh checkpoint
+is refused, and a probe's bucket filter prunes to one directory.
 
 The codebook is written once at stream start (small parquet) and read
 back each batch — the same frozen-dim-refresh idiom as the emote dim
@@ -34,6 +32,7 @@ from ..operators.similarity import (
     as_double_vec,
     cosine,
 )
+from . import bucketstore
 
 EMB_SCHEMA = "vec_id LONG, embedding ARRAY<FLOAT>, label INT"
 
@@ -47,8 +46,7 @@ def assign_to_codebook(vecs: DataFrame, centroids: DataFrame) -> DataFrame:
     Delegates to the batch IVF family's kernel
     (``similarity._assign_to_centroids``) — ONE assignment
     implementation, so the streaming index and the batch ``ivf_topk``
-    can never drift out of lockstep on scoring or tie-breaks
-    (round-10 dedup; they were previously twin copies).
+    can never drift out of lockstep on scoring or tie-breaks.
 
     -> vec_id, v, v_nrm, centroid_id
     """
@@ -80,16 +78,17 @@ def start_ivf_index_stream(
     """Embedding stream -> nearest-centroid assignment against the
     frozen codebook -> centroid-partitioned index append."""
     codebook_path = os.path.join(out_dir, "codebook")
-    index_path = os.path.join(out_dir, "index")
+    cb = spark.read.parquet(codebook_path)
+    cids = [r[0] for r in cb.select("centroid_id").collect()]  # fold hint
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         centroids = spark.read.parquet(codebook_path)
         assigned = assign_to_codebook(as_double_vec(batch_df), centroids)
-        (
-            assigned.select("vec_id", "v", "v_nrm", "centroid_id")
-            .write.mode("overwrite")
-            .partitionBy("centroid_id")
-            .parquet(os.path.join(index_path, f"batch={batch_id}"))
+        bucket = F.col("centroid_id").cast("int").alias("bucket")
+        bucketstore.append_into(
+            spark, os.path.join(out_dir, "index"),
+            assigned.select("vec_id", "v", "v_nrm", bucket),
+            batch_id, bucketstore.stream_identity(checkpoint_dir), cids,
         )
 
     reader = spark.readStream.schema(EMB_SCHEMA)
@@ -109,8 +108,8 @@ def probe_index(
     spark: SparkSession, out_dir: str, query_ids: list[int], k: int = 3
 ) -> DataFrame:
     """Query the maintained index: each query vector reads ONLY its
-    centroid's partitions (the ``centroid_id`` equi-join prunes the
-    scan) and exact cosine re-ranks inside them. Same semantics as
+    centroid's partition (the ``bucket`` equi-join prunes the scan) and
+    exact cosine re-ranks inside it. Same semantics as
     ``similarity.ivf_topk`` with the same codebook.
 
     -> query_id, neighbor_id, cos_sim, rank
@@ -122,14 +121,14 @@ def probe_index(
         F.col("vec_id").alias("query_id"),
         F.col("v").alias("q"),
         F.col("v_nrm").alias("q_nrm"),
-        "centroid_id",
+        "bucket",
     )
     cos_sim = cosine("q", "v").alias("cos_sim")
     scored = (
         index.select(
-            F.col("vec_id").alias("neighbor_id"), "v", "v_nrm", "centroid_id"
+            F.col("vec_id").alias("neighbor_id"), "v", "v_nrm", "bucket"
         )
-        .join(F.broadcast(queries), "centroid_id")
+        .join(F.broadcast(queries), "bucket")
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .select("query_id", "neighbor_id", cos_sim)
     )

@@ -39,10 +39,12 @@ generalizes it so any keyed store can use it:
   swaps it in. A crash leaves the old flat store or the new bucketed
   one, and the replayed batch merges into whichever it finds.
 - append logs (:func:`append_into`): the same bucketed layout, per-
-  bucket journals and publish, for rows that are only ever added. A
-  bucket's new dir hardlinks the live part files beside the batch's
-  new ones, so a plain append never rewrites history; a bucket that
-  reached its file cap is rewritten into one file set by that append.
+  bucket journals and publish, for rows that are only ever added — the
+  side output, the corpus-ingest stores and the IVF index. A bucket's
+  new dir hardlinks the live part files beside the batch's new ones,
+  so a plain append never rewrites history; a bucket that reached
+  :data:`APPEND_MAX_FILES` is rewritten into one file set by that
+  append.
 
 Single-writer assumption: foreachBatch serializes merges per query —
 same as streaming/hll.py.
@@ -70,6 +72,19 @@ STORE_BUCKETS = 16
 # keeps them journaled and serveable instead of silently lost to
 # NULL-blind isin filters (the default hash layout never yields NULL)
 NULL_BUCKET = -(2**31)
+
+# a live append-log bucket holding this many part files (C) is
+# rewritten into one file set by its next append (:func:`append_into`),
+# so a log bounds its own file count: a bucket holds at most C - 1
+# files plus the ones an append adds (one per task writing its rows).
+# A live side-output trigger adds about 2 part files to each day it
+# touches, so a day folds every ~C/2 triggers. C balances that fold,
+# amortized (one task rewrites the day: +0.5 s at 0.5 MB, +3.3 s at
+# 40 MB), against the ~1.6 ms per unfolded file a read of the day
+# pays; at one read per trigger the balance is
+# C = sqrt(fold_ms * 2 / 1.6), ~64 for a 40 MB (1M-row) day (4-vCPU
+# host, local mode).
+APPEND_MAX_FILES = 64
 
 
 def _null_safe_bucket(df: DataFrame) -> DataFrame:
@@ -191,6 +206,23 @@ def _flat_files(store: str) -> list[str]:
         if os.path.isfile(os.path.join(store, e))
         and not e.startswith((".", "_"))
     ]
+
+
+def refuse_batch_dirs(root: str) -> None:
+    """Refuse a log root holding ``batch=<id>`` dirs (the retired
+    one-dir-per-trigger layout): buckets appended beside them would
+    make every read silently drop their rows — the rule a store holding
+    both flat and bucketed data gets."""
+    old = sorted(
+        e for e in (os.listdir(root) if os.path.isdir(root) else [])
+        if e.startswith("batch=")
+    )
+    if old:
+        raise RuntimeError(
+            f"{root} holds batch=<id> dirs of the retired log layout "
+            f"({', '.join(old)}); move them aside before writing or "
+            "reading the bucketed log"
+        )
 
 
 def _is_bucketed(store: str) -> bool:
@@ -702,33 +734,37 @@ def append_into(
     rows: DataFrame,
     batch_id: int,
     stream_id: str,
-    max_files: int,
     fold_hint: list[int],
 ) -> None:
     """Append one batch's ``rows`` (carrying an int ``bucket`` column)
     to a bucketed append log, exactly once per (checkpoint, batch id).
 
-    ONE partitioned write lands the batch's rows of each bucket in a
-    tmp dir. Every touched journal, and the newest live bucket's (a
-    fresh checkpoint may touch only new days), must record
-    ``stream_id`` (:func:`_check_stream`), so a fresh checkpoint is
-    refused before anything is published. Each touched bucket whose
-    journal has not seen ``batch_id`` (:func:`_is_applied`) then gets
-    the live bucket's part files hardlinked beside the new ones (copied
-    where the filesystem refuses links) and its journal, and
-    :func:`_publish` swaps it in. After a plain append a lazy reader
-    that listed the old dir still finds every file under the same name;
-    a fold deletes the files it rewrote, so such a reader must retry,
-    as :func:`read_table` already requires of every store.
+    A root still holding ``batch=<id>`` dirs is refused first
+    (:func:`refuse_batch_dirs`). ONE partitioned write lands the
+    batch's rows of each bucket in a tmp dir. Every touched journal,
+    and the newest live bucket's (a fresh checkpoint may touch only
+    new buckets), must record ``stream_id`` (:func:`_check_stream`),
+    so a fresh checkpoint is refused before anything is published.
+    Each touched bucket whose journal has not seen ``batch_id``
+    (:func:`_is_applied`) then gets the live bucket's part files
+    hardlinked beside the new ones (copied where the filesystem
+    refuses links) and its journal, and :func:`_publish` swaps it in.
+    After a plain append a lazy reader that listed the old dir still
+    finds every file under the same name; a fold deletes the files it
+    rewrote, so such a reader must retry, as :func:`read_table`
+    already requires of every store.
 
     File growth is bounded by the writer itself: a live bucket the rows
     may touch — one of ``fold_hint`` (the buckets of their non-null
-    keys) or :data:`NULL_BUCKET` — that already holds ``max_files`` part
-    files is read back into that same write, so its new dir is one
-    rewritten file set — no extra Spark job and no maintenance caller.
-    The hint only steers folding; every row lands whatever it says.
-    Rows must be a pure function of the batch, as for
-    :func:`merge_into`'s per-bucket journals."""
+    keys) or :data:`NULL_BUCKET` — that already holds
+    :data:`APPEND_MAX_FILES` part files is read back into that same
+    write, so its new dir is one rewritten file set — no extra Spark
+    job and no maintenance caller. The hint only steers folding; every
+    row lands whatever it says. A replay must append the rows its first
+    run appended: rows are a pure function of the batch and of the
+    log's earlier batches, as for :func:`merge_into`'s per-bucket
+    journals."""
+    refuse_batch_dirs(store)
     recover(store)
     live = {
         int(e.split("=", 1)[1]): os.path.join(store, e)
@@ -739,7 +775,7 @@ def append_into(
     fold = []
     for b in sorted(live.keys() & {*fold_hint, NULL_BUCKET}):
         files = _flat_files(live[b])
-        if len(files) < max_files:
+        if len(files) < APPEND_MAX_FILES:
             continue
         fold.append(b)
         # ~128 MB per rewritten file; reading the dir (not its file

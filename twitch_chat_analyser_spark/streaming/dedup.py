@@ -22,43 +22,16 @@ backfill over a dumped topic and the live stream agree.
 
 from __future__ import annotations
 
-import os as _os
+import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from ..operators.dedup import norm_text
 from ..operators.dedup import tokens as dtokens
+from . import bucketstore
 from .pipeline import read_message_stream
-
-
-def _has_history(path: str) -> bool:
-    """True only when the history store holds COMMITTED parquet data.
-    A crash during the very first batch's write can leave the directory
-    with only ``_temporary`` staging debris; ``os.path.isdir`` would
-    then route into an unconditional read that fails schema inference
-    on EVERY checkpoint replay — the stream wedges until someone
-    deletes the directory by hand (review r9)."""
-    if not _os.path.isdir(path):
-        return False
-    for root, dirs, files in _os.walk(path):
-        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-        if any(f.endswith(".parquet") for f in files):
-            return True
-    return False
-
-
-def _history(
-    spark: SparkSession, path: str, batch_id: int
-) -> DataFrame | None:
-    """The ``batch=<id>`` history store's rows of every batch but
-    ``batch_id`` (None while it holds no committed data): excluding the
-    batch's own partition lets a replay see exactly the history its
-    first run saw."""
-    from pyspark.sql import functions as F
-
-    if not _has_history(path):
-        return None
-    return spark.read.parquet(path).filter(F.col("batch") != batch_id)
 
 
 # Wire-identity of a message (Message.java:11-14): no synthetic id
@@ -109,55 +82,98 @@ def start_dedup_stream(
 
 DOC_SCHEMA = "doc_id LONG, text STRING, lang STRING, source STRING, n_chars LONG"
 
-
-def _dedup_against_history(
-    spark: SparkSession, batch_df: DataFrame, fp_path: str, batch_id: int
-) -> DataFrame:
-    """Shared dedup core for the corpus-ingest sinks: fingerprint the
-    batch (md5 of normalized text), keep the smallest doc_id per
-    fingerprint IN-batch, then anti-join against the persistent
-    fingerprint store.
-
-    REPLAY SAFETY: the store is laid out as ``batch=<id>`` partitions
-    and the history read EXCLUDES the current batch's own partition — a
-    replayed batch that already wrote its fingerprints before the
-    checkpoint committed would otherwise anti-join against itself,
-    produce an empty survivor set, and overwrite its own committed
-    output with nothing (silent data loss). Filtering on the discovered
-    partition column also prunes the scan, so the exclusion is free.
-
-    -> batch columns + fp (the new-unique rows only)
-    """
-    import os
-
-    from pyspark.sql import functions as F
-
-    from ..operators.dedup import norm_text
-
-    hashed = batch_df.withColumn("fp", F.md5(norm_text()))
-    keeper = hashed.groupBy("fp").agg(F.min("doc_id").alias("doc_id"))
-    batch_unique = hashed.join(keeper, ["fp", "doc_id"], "left_semi")
-    seen = _history(spark, fp_path, batch_id)
-    if seen is not None:
-        return batch_unique.join(seen.select("fp"), "fp", "left_anti")
-    return batch_unique
+# Every corpus-ingest output family is a journaled append log
+# (bucketstore.append_into) at ``out_dir/<family>/bucket=<b>/``, its
+# rows hash-bucketed on the key the family's history probe reads (the
+# corpus and media on their ids, the metrics on their batch).
+_BUCKET_KEYS = {
+    "corpus": ["doc_id"],
+    "fingerprints": ["fp"],
+    "metrics": ["batch_id"],
+    "bloombits": ["pos"],
+    "para_fps": ["h"],
+    "signatures": ["minhash"],
+    "media": ["media_id"],
+    "phashes": ["phash"],
+}
+# hash buckets may receive any key, so every one may need folding
+_ALL_BUCKETS = list(range(bucketstore.STORE_BUCKETS))
 
 
-def _start_doc_stream(
+def _sink(
     spark: SparkSession,
-    docs_dir: str,
+    out_dir: str,
     checkpoint_dir: str,
-    sink,
-    max_files_per_trigger: int | None,
-) -> StreamingQuery:
-    """Document-stream reader + foreachBatch writer shared by the corpus
-    ingest sinks."""
+    batch_id: int,
+    families: dict[str, DataFrame],
+) -> None:
+    """Append each family's rows, in order, to its log, tagged with
+    ``batch_id``: exactly once per (checkpoint, batch id). A replay
+    skips every bucket already holding the batch, and a fresh
+    checkpoint pointed at an existing ``out_dir`` is refused before it
+    publishes anything (``bucketstore.append_into``)."""
+    stream_id = bucketstore.stream_identity(checkpoint_dir)
+    for family, rows in families.items():
+        rows = rows.withColumn("batch_id", F.lit(batch_id).cast("long"))
+        bucketstore.append_into(
+            spark,
+            os.path.join(out_dir, family),
+            bucketstore.with_bucket(
+                rows, _BUCKET_KEYS[family], bucketstore.STORE_BUCKETS
+            ),
+            batch_id,
+            stream_id,
+            _ALL_BUCKETS,
+        )
+
+
+def _history(
+    spark: SparkSession, out_dir: str, family: str, batch_id: int
+) -> DataFrame | None:
+    """The ``family`` log's rows of batches before ``batch_id`` (None
+    while it holds none). REPLAY SAFETY: a batch replayed after a crash
+    between its publishes may already have some of its own rows in the
+    log; probing them would dedup the batch against itself and append
+    different rows than its first run. Keeping only earlier batches
+    lets a replay see exactly the history its first run saw."""
+    store = os.path.join(out_dir, family)
+    bucketstore.recover(store)
+    rows = bucketstore.read_store(spark, store)
+    return None if rows is None else rows.filter(F.col("batch_id") < batch_id)
+
+
+def _fingerprint() -> Column:
+    """md5 of the normalized text. A NULL text gets the fingerprint ''
+    (no md5 is empty), so NULL-text documents are one duplicate group
+    to every join and probe, as they are to ``exact_dedup``'s
+    groupBy."""
+    return F.coalesce(F.md5(norm_text()), F.lit(""))
+
+
+def _batch_unique(batch_df: DataFrame) -> DataFrame:
+    """The batch's smallest doc_id per fingerprint.
+
+    -> batch columns + fp
+    """
+    hashed = batch_df.withColumn("fp", _fingerprint())
+    keeper = hashed.groupBy("fp").agg(F.min("doc_id").alias("doc_id"))
+    return hashed.join(keeper, ["fp", "doc_id"], "left_semi")
+
+
+def _doc_stream(
+    spark: SparkSession, docs_dir: str, max_files_per_trigger: int | None
+) -> DataFrame:
     stream = spark.readStream.schema(DOC_SCHEMA)
     if max_files_per_trigger:
         stream = stream.option("maxFilesPerTrigger", max_files_per_trigger)
+    return stream.parquet(docs_dir)
+
+
+def _start(stream: DataFrame, checkpoint_dir: str, sink) -> StreamingQuery:
+    """The availableNow foreachBatch query shared by the corpus and
+    media ingest streams."""
     return (
-        stream.parquet(docs_dir)
-        .writeStream.outputMode("append")
+        stream.writeStream.outputMode("append")
         .option("checkpointLocation", checkpoint_dir)
         .foreachBatch(sink)
         .trigger(availableNow=True)
@@ -187,33 +203,34 @@ def start_incremental_corpus_dedup(
     skew); at 100 TB the store is bucketed by fingerprint so the join
     co-locates without a shuffle of history.
 
-    Exactly-once: survivors and fingerprints land in ``batch=<id>``
-    subdirectories written with overwrite — a replayed batch rewrites
-    the same paths bit-identically instead of appending twice.
+    NULL, empty and whitespace-only texts dedup as ``exact_dedup``
+    groups them (:func:`_fingerprint`).
 
-    Layout: ``out_dir/corpus/batch=N/*.parquet`` (the deduped corpus)
-    and ``out_dir/fingerprints/batch=N/*.parquet`` (fp + doc_id).
+    Exactly-once: the corpus, then the fingerprints, are journaled
+    append logs (:func:`_sink`); the history probe reads earlier
+    batches only (:func:`_history`).
+
+    Layout: ``out_dir/corpus/bucket=N/`` (the deduped corpus) and
+    ``out_dir/fingerprints/bucket=N/`` (fp + doc_id).
     """
-    import os
-
-    corpus_path = os.path.join(out_dir, "corpus")
-    fp_path = os.path.join(out_dir, "fingerprints")
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        fresh = _dedup_against_history(spark, batch_df, fp_path, batch_id)
+        fresh = _batch_unique(batch_df)
+        seen = _history(spark, out_dir, "fingerprints", batch_id)
+        if seen is not None:
+            fresh = fresh.join(seen.select("fp"), "fp", "left_anti")
         fresh = fresh.cache()
         try:
-            fresh.drop("fp").write.mode("overwrite").parquet(
-                os.path.join(corpus_path, f"batch={batch_id}")
-            )
-            fresh.select("fp", "doc_id").write.mode("overwrite").parquet(
-                os.path.join(fp_path, f"batch={batch_id}")
-            )
+            _sink(spark, out_dir, checkpoint_dir, batch_id, {
+                "corpus": fresh.drop("fp"),
+                "fingerprints": fresh.select("fp", "doc_id"),
+            })
         finally:
             fresh.unpersist()
 
-    return _start_doc_stream(
-        spark, docs_dir, checkpoint_dir, sink, max_files_per_trigger
+    return _start(
+        _doc_stream(spark, docs_dir, max_files_per_trigger),
+        checkpoint_dir, sink,
     )
 
 
@@ -246,8 +263,10 @@ def start_corpus_prep_stream(
     pipeline's quality+dedup survivor set on the same input (pinned by
     pytest); the metrics rows sum to the batch totals.
 
-    Exactly-once: every output family writes ``batch=<id>`` directories
-    with overwrite — a replayed batch rewrites identical paths. Same
+    Exactly-once: the corpus, fingerprints and metrics are journaled
+    append logs (:func:`_sink`), and the history flag reads earlier
+    batches only (:func:`_history`), so a replay after a partial
+    publish computes its first run's rows and metrics. Same
     state-in-storage scale design as
     :func:`start_incremental_corpus_dedup`.
 
@@ -257,19 +276,11 @@ def start_corpus_prep_stream(
     ``count()``/``collect()`` driver actions), so each micro-batch runs
     exactly the two output writes plus the one tiny metrics-row write.
 
-    Layout: ``out_dir/{corpus,fingerprints,metrics}/batch=N/``.
+    Layout: ``out_dir/{corpus,fingerprints,metrics}/bucket=N/``.
     """
-    import os
-
     from pyspark.sql import Observation
-    from pyspark.sql import functions as F
 
-    from ..operators.dedup import norm_text
     from ..operators.textops import quality_score
-
-    corpus_path = os.path.join(out_dir, "corpus")
-    fp_path = os.path.join(out_dir, "fingerprints")
-    metrics_path = os.path.join(out_dir, "metrics")
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         batch_df = batch_df.cache()
@@ -286,7 +297,7 @@ def start_corpus_prep_stream(
                     F.col("quality_score") >= min_quality, F.lit(False)
                 ),
             )
-            .withColumn("fp", F.md5(norm_text()))
+            .withColumn("fp", _fingerprint())
         )
         # in-batch dedup among quality survivors: min doc_id per fp
         keeper = (
@@ -297,9 +308,8 @@ def start_corpus_prep_stream(
         marked = flagged.join(keeper, "fp", "left").withColumn(
             "is_keeper", F.col("q_ok") & (F.col("doc_id") == F.col("keep_id"))
         )
-        # history dedup as a flag (same replay-safe own-batch exclusion
-        # as _dedup_against_history)
-        seen = _history(spark, fp_path, batch_id)
+        # history dedup as a flag
+        seen = _history(spark, out_dir, "fingerprints", batch_id)
         if seen is not None:
             seen = (
                 seen.select("fp")
@@ -324,36 +334,34 @@ def start_corpus_prep_stream(
         fresh = observed.filter("is_fresh").select(*in_cols, "fp").cache()
         try:
             # job 1: corpus write — executes the whole plan, fires the
-            # observe aggregates, populates both caches
-            fresh.drop("fp").write.mode("overwrite").parquet(
-                os.path.join(corpus_path, f"batch={batch_id}")
-            )
-            # job 2: fingerprint write — reads the fresh cache
-            fresh.select("fp", "doc_id").write.mode("overwrite").parquet(
-                os.path.join(fp_path, f"batch={batch_id}")
-            )
+            # observe aggregates, populates both caches; job 2:
+            # fingerprint write — reads the fresh cache
+            _sink(spark, out_dir, checkpoint_dir, batch_id, {
+                "corpus": fresh.drop("fp"),
+                "fingerprints": fresh.select("fp", "doc_id"),
+            })
             m = obs.get  # already complete after job 1; no extra job
             # job 3: the one-row metrics write (observed sums over an
             # empty batch arrive as NULL)
-            spark.createDataFrame(
+            metrics = spark.createDataFrame(
                 [(
-                    batch_id,
                     int(m.get("docs_in") or 0),
                     int(m.get("docs_quality") or 0),
                     int(m.get("docs_new_unique") or 0),
                     int(m.get("ws_tokens") or 0),
                 )],
-                "batch_id long, docs_in long, docs_quality long, "
-                "docs_new_unique long, ws_tokens long",
-            ).write.mode("overwrite").parquet(
-                os.path.join(metrics_path, f"batch={batch_id}")
+                "docs_in long, docs_quality long, docs_new_unique long, "
+                "ws_tokens long",
             )
+            _sink(spark, out_dir, checkpoint_dir, batch_id,
+                  {"metrics": metrics})
         finally:
             fresh.unpersist()
             batch_df.unpersist()
 
-    return _start_doc_stream(
-        spark, docs_dir, checkpoint_dir, sink, max_files_per_trigger
+    return _start(
+        _doc_stream(spark, docs_dir, max_files_per_trigger),
+        checkpoint_dir, sink,
     )
 
 
@@ -385,49 +393,36 @@ def start_bloom_corpus_dedup(
     set bits is dropped — probability = the filter's false-positive
     rate, so size ``BLOOM_M`` to the corpus's lifetime key budget.
 
-    Exactly-once: both output families are ``batch=<id>`` overwrite
-    partitions, and the history read excludes the current batch's own
-    partition (same replay reasoning as :func:`_dedup_against_history`).
+    Exactly-once: the corpus, then the bits, are journaled append logs
+    (:func:`_sink`); the probe reads earlier batches' bits only
+    (:func:`_history`).
 
-    Layout: ``out_dir/corpus/batch=N/`` and ``out_dir/bloombits/batch=N/``.
+    Layout: ``out_dir/corpus/bucket=N/`` and ``out_dir/bloombits/bucket=N/``.
     """
-    import os
-
-    from pyspark.sql import functions as F
-
-    from ..operators.dedup import norm_text
     from ..operators.frequency import bloom_build, bloom_maybe_contains
 
-    corpus_path = os.path.join(out_dir, "corpus")
-    bits_path = os.path.join(out_dir, "bloombits")
-
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        hashed = batch_df.withColumn("fp", F.md5(norm_text()))
-        keeper = hashed.groupBy("fp").agg(F.min("doc_id").alias("doc_id"))
-        batch_unique = hashed.join(keeper, ["fp", "doc_id"], "left_semi")
-        bits = _history(spark, bits_path, batch_id)
+        fresh = _batch_unique(batch_df)
+        bits = _history(spark, out_dir, "bloombits", batch_id)
         if bits is not None:
-            bits = bits.select("pos").distinct()
             verdicts = bloom_maybe_contains(
-                batch_unique.select("doc_id", "fp"), bits, "fp"
+                fresh.select("doc_id", "fp"), bits.select("pos").distinct(),
+                "fp",
             )
-            fresh = batch_unique.join(
+            fresh = fresh.join(
                 verdicts.filter(F.col("maybe") == 0).select("doc_id"),
                 "doc_id",
                 "left_semi",
             )
-        else:
-            fresh = batch_unique
         fresh = fresh.localCheckpoint(eager=True)
-        fresh.drop("fp").write.mode("overwrite").parquet(
-            os.path.join(corpus_path, f"batch={batch_id}")
-        )
-        bloom_build(fresh, "fp").write.mode("overwrite").parquet(
-            os.path.join(bits_path, f"batch={batch_id}")
-        )
+        _sink(spark, out_dir, checkpoint_dir, batch_id, {
+            "corpus": fresh.drop("fp"),
+            "bloombits": bloom_build(fresh, "fp"),
+        })
 
-    return _start_doc_stream(
-        spark, docs_dir, checkpoint_dir, sink, max_files_per_trigger
+    return _start(
+        _doc_stream(spark, docs_dir, max_files_per_trigger),
+        checkpoint_dir, sink,
     )
 
 
@@ -462,21 +457,14 @@ def start_paragraph_dedup_stream(
     paragraph text), the history probe is a hash-keyed anti-join over
     winners (one row per DISTINCT new paragraph, not per occurrence),
     and paragraph bytes ride only the two unavoidable shuffles the batch
-    operator documents. Replay safety and exactly-once follow
-    :func:`_dedup_against_history`: ``batch=<id>`` overwrite partitions,
-    history read excludes the replaying batch's own partition.
+    operator documents. Exactly-once: the corpus, then the hashes, are
+    journaled append logs (:func:`_sink`); the probe reads earlier
+    batches' hashes only (:func:`_history`).
 
-    Layout: ``out_dir/corpus/batch=N/`` (doc_id, text, n_paras, n_kept)
-    and ``out_dir/para_fps/batch=N/`` (h).
+    Layout: ``out_dir/corpus/bucket=N/`` (doc_id, text, n_paras, n_kept)
+    and ``out_dir/para_fps/bucket=N/`` (h).
     """
-    import os
-
-    from pyspark.sql import functions as F
-
     from ..operators.llmops import split_paragraphs
-
-    corpus_path = os.path.join(out_dir, "corpus")
-    fp_path = os.path.join(out_dir, "para_fps")
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         paras = split_paragraphs(batch_df.select("doc_id", "text"))
@@ -485,7 +473,7 @@ def start_paragraph_dedup_stream(
             .groupBy("h")
             .agg(F.min(F.struct("doc_id", "idx")).alias("w"))
         )
-        seen = _history(spark, fp_path, batch_id)
+        seen = _history(spark, out_dir, "para_fps", batch_id)
         if seen is not None:
             winners = winners.join(seen.select("h"), "h", "left_anti")
         winners = winners.localCheckpoint(eager=True)
@@ -524,15 +512,13 @@ def start_paragraph_dedup_stream(
             F.count(F.lit(1)).alias("n_paras"),
             F.sum(F.col("keep").cast("long")).alias("n_kept"),
         ).select("doc_id", "text", "n_paras", "n_kept")
-        out.write.mode("overwrite").parquet(
-            os.path.join(corpus_path, f"batch={batch_id}")
-        )
-        winners.select("h").write.mode("overwrite").parquet(
-            os.path.join(fp_path, f"batch={batch_id}")
-        )
+        _sink(spark, out_dir, checkpoint_dir, batch_id, {
+            "corpus": out, "para_fps": winners.select("h"),
+        })
 
-    return _start_doc_stream(
-        spark, docs_dir, checkpoint_dir, sink, max_files_per_trigger
+    return _start(
+        _doc_stream(spark, docs_dir, max_files_per_trigger),
+        checkpoint_dir, sink,
     )
 
 
@@ -572,8 +558,6 @@ def minhash_slot_candidates(
     -> doc_id, ref_id (one row per agreeing slot)
     """
     from pyspark.sql import Window
-
-    from pyspark.sql import functions as F
 
     ref = reference
     if block_cap is not None:
@@ -621,20 +605,13 @@ def start_minhash_corpus_dedup(
     unconditionally); opt into the cap for adversarial ingest bursts,
     accepting the per-slot pivot recall caveat documented there.
 
-    Exactly-once: ``batch=<id>`` overwrite partitions for both corpus
-    and signatures; the history read excludes the current batch's own
-    partition (same replay reasoning as :func:`_dedup_against_history`).
+    Exactly-once: the corpus, then the signatures, are journaled append
+    logs (:func:`_sink`); the probe reads earlier batches' signatures
+    only (:func:`_history`).
 
-    Layout: ``out_dir/corpus/batch=N/`` and ``out_dir/signatures/batch=N/``.
+    Layout: ``out_dir/corpus/bucket=N/`` and ``out_dir/signatures/bucket=N/``.
     """
-    import os
-
-    from pyspark.sql import functions as F
-
     from ..operators.dedup import minhash_signatures
-
-    corpus_path = os.path.join(out_dir, "corpus")
-    sig_path = os.path.join(out_dir, "signatures")
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         sigs = minhash_signatures(
@@ -655,7 +632,7 @@ def start_minhash_corpus_dedup(
             .distinct()
         )
         drops = in_batch
-        hist = _history(spark, sig_path, batch_id)
+        hist = _history(spark, out_dir, "signatures", batch_id)
         if hist is not None:
             hist = hist.select(
                 F.col("doc_id").alias("ref_id"), "seed", "minhash"
@@ -671,17 +648,16 @@ def start_minhash_corpus_dedup(
             drops = drops.union(vs_hist).distinct()
         survivors = batch_df.join(drops, "doc_id", "left_anti")
         survivors = survivors.localCheckpoint(eager=True)
-        survivors.write.mode("overwrite").parquet(
-            os.path.join(corpus_path, f"batch={batch_id}")
-        )
-        sigs.join(
-            survivors.select("doc_id"), "doc_id", "left_semi"
-        ).write.mode("overwrite").parquet(
-            os.path.join(sig_path, f"batch={batch_id}")
-        )
+        _sink(spark, out_dir, checkpoint_dir, batch_id, {
+            "corpus": survivors,
+            "signatures": sigs.join(
+                survivors.select("doc_id"), "doc_id", "left_semi"
+            ),
+        })
 
-    return _start_doc_stream(
-        spark, docs_dir, checkpoint_dir, sink, max_files_per_trigger
+    return _start(
+        _doc_stream(spark, docs_dir, max_files_per_trigger),
+        checkpoint_dir, sink,
     )
 
 
@@ -709,26 +685,18 @@ def start_phash_media_dedup(
     and payload bytes never enter a shuffle (fingerprints are extracted
     map-side, survivors are written straight back out).
 
-    Exactly-once: ``batch=<id>`` overwrite partitions for both the
-    surviving media and their hashes; the history read excludes the
-    current batch's own partition (same replay reasoning as
-    :func:`_dedup_against_history`).
+    Exactly-once: the media, then the hashes, are journaled append logs
+    (:func:`_sink`); the probe reads earlier batches' hashes only
+    (:func:`_history`).
 
-    Layout: ``out_dir/media/batch=N/`` and ``out_dir/phashes/batch=N/``.
+    Layout: ``out_dir/media/bucket=N/`` and ``out_dir/phashes/bucket=N/``.
     """
-    import os
-
-    from pyspark.sql import functions as F
-
     from ..operators.multimodal import (
         audio_phash,
         image_phash,
         phash_probe_candidates,
     )
     from ..sources.files import read_binary_media_stream
-
-    media_path = os.path.join(out_dir, "media")
-    hash_path = os.path.join(out_dir, "phashes")
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         # visual items (images + GIF first frames) and audio items are
@@ -763,7 +731,7 @@ def start_phash_media_dedup(
             .distinct()
         )
         drops = in_batch
-        hist = _history(spark, hash_path, batch_id)
+        hist = _history(spark, out_dir, "phashes", batch_id)
         if hist is not None:
             hist = hist.select(
                 F.col("media_id").alias("ref_id"), "phash", "modality"
@@ -778,22 +746,14 @@ def start_phash_media_dedup(
             drops = drops.union(vs_hist).distinct()
         survivors = batch_df.join(drops, "media_id", "left_anti")
         survivors = survivors.localCheckpoint(eager=True)
-        survivors.write.mode("overwrite").parquet(
-            os.path.join(media_path, f"batch={batch_id}")
-        )
-        hashes.join(
-            survivors.select("media_id"), "media_id", "left_semi"
-        ).write.mode("overwrite").parquet(
-            os.path.join(hash_path, f"batch={batch_id}")
-        )
+        _sink(spark, out_dir, checkpoint_dir, batch_id, {
+            "media": survivors,
+            "phashes": hashes.join(
+                survivors.select("media_id"), "media_id", "left_semi"
+            ),
+        })
 
-    stream = read_binary_media_stream(
-        spark, media_dir, glob, max_files_per_trigger
-    )
-    return (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(sink)
-        .trigger(availableNow=True)
-        .start()
+    return _start(
+        read_binary_media_stream(spark, media_dir, glob, max_files_per_trigger),
+        checkpoint_dir, sink,
     )

@@ -32,8 +32,8 @@ reference's aggregation-interval + checkpoint-interval bound
 
 The side output is a day-bucketed append log on the same bucketstore
 publish and journals (:func:`run_all`); its writer folds a day's part
-files once they reach ``MATCHED_MAX_FILES``, so no maintenance caller
-is needed.
+files once they reach ``bucketstore.APPEND_MAX_FILES``, so no
+maintenance caller is needed.
 
 Parquet store layout: ``additive_merge`` is ADAPTIVE — a flat
 whole-rewrite while the store is under FLAT_STORE_MAX_BYTES (cheapest
@@ -390,37 +390,10 @@ MATCHED_SCHEMA = (
     "message_time long, message_channel string, message_user string, "
     "message_text string, matched_phrase string"
 )
-# a live day bucket holding this many part files is rewritten into one
-# file set by its next append (bucketstore.append_into), so the log
-# bounds its own file count. A live trigger adds about 2 part files to
-# each day it touches, so a day folds every ~C/2 triggers. The cap C
-# balances that fold, amortized (one task rewrites the day: +0.5 s at
-# 0.5 MB, +3.3 s at 40 MB), against the ~1.6 ms per unfolded file a
-# read of the day pays; at one read per trigger the balance is
-# C = sqrt(fold_ms * 2 / 1.6), ~64 for a 40 MB (1M-row) day (4-vCPU
-# host, local mode).
-MATCHED_MAX_FILES = 64
 
 
 def _matched_root(out_dir: str) -> str:
     return os.path.join(out_dir, MATCHED_DIRNAME)
-
-
-def _refuse_batch_dirs(root: str) -> None:
-    """Refuse a side-output root holding ``batch=<id>`` dirs (the
-    retired one-dir-per-trigger layout): day buckets appended beside
-    them would make every read silently drop their rows — the rule a
-    store holding both flat and bucketed data gets."""
-    old = sorted(
-        e for e in (os.listdir(root) if os.path.isdir(root) else [])
-        if e.startswith("batch=")
-    )
-    if old:
-        raise RuntimeError(
-            f"{root} holds batch=<id> dirs of the retired side-output "
-            f"layout ({', '.join(old)}); move them aside before writing "
-            "or reading the day-bucketed log"
-        )
 
 
 def read_matched_messages(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -431,7 +404,7 @@ def read_matched_messages(spark: SparkSession, out_dir: str) -> DataFrame:
     an action racing the writer retries on ``FileNotFound`` or reads
     through :func:`read_table_snapshot`."""
     root = _matched_root(out_dir)
-    _refuse_batch_dirs(root)
+    bucketstore.refuse_batch_dirs(root)
     bucketstore.recover(root, restore_only=True)
     if not bucketstore._bucket_dirs(root):
         return spark.createDataFrame([], MATCHED_SCHEMA)
@@ -595,7 +568,7 @@ def run_all(
     reprocessing flow, README.md:86-101). Returns ``[progress]``, the
     query's progress records in a one-element list, so callers can
     report per-trigger latency percentiles."""
-    _refuse_batch_dirs(_matched_root(out_dir))
+    bucketstore.refuse_batch_dirs(_matched_root(out_dir))
     pipelines = default_pipelines(spark)
     phrases = dims.phrases_df(spark)
     emotes = dims.emotes_df(spark)
@@ -673,7 +646,7 @@ def run_all(
             bucketstore.append_into(
                 sess, _matched_root(out_dir),
                 _day_bucketize(matched, "message_time"), batch_id, sid,
-                MATCHED_MAX_FILES, trig.days,
+                trig.days,
             )
             if merge_metrics is not None:
                 merge_metrics.append({
